@@ -124,7 +124,7 @@ object Bench {
   // staging) their timing reports driver job-sequencing, not the
   // capability. They ARE measured at the scale where selectivity shows —
   // the round-14 AT-SCALE section (BenchMaintenance.cdcAtScale, emitted
-  // as detail_maint_scale; standalone: `runMain graft.MaintScale`) runs
+  // as detail_maint_scale; standalone: `Probe cdc-scale`) runs
   // both against a 5M-row 64-file staging with min-of-2 interleaved
   // runs and file-rewrite counts in the artifact. Content fidelity is
   // gated by q_sql_merge / q_sql_merge_cdc / q_cdc_changes.
@@ -252,12 +252,86 @@ object Bench {
       try src.getLines().next().split(" ")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
+  // ------------------------------------------------------- shared timing
+
+  /** Local cores for the session (`SPARK_GRAFT_CPUS`, default 32). */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The bench's session: every timing tool builds this one so its numbers
+    * compare with the bench's. */
+  private[graft] def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // single-node bench tuning, applied identically to the graft and
+      // parquet runs: with 32 local cores and no spill pressure, a shuffled
+      // hash join beats sort-merge for the fact-fact joins (measured ~0.2s
+      // on q5). A multi-executor deployment at real scale should keep
+      // Spark's default (SMJ degrades gracefully under skew/spill; AQE
+      // re-plans either way).
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  type Impl = Map[String, (SparkSession, String) => DataFrame]
+
+  /** Bench times the xxhash64 fast path of minhash/simhash; the declared
+    * queries run a portable md5-fold hash so DuckDB can oracle-check them.
+    * Both share the identical plan shape — only the leaf hash expression
+    * differs.
+    */
+  val fastImpl: Impl = Map(
+    "d_dedup_minhash_lsh" -> ((s, d) => queries.TrainingData.minhashLsh(s, d, portable = false)),
+    "d_dedup_simhash" -> ((s, d) => queries.TrainingData.simhashDedup(s, d, portable = false)))
+
+  /** Scaled-section compute caps: s_embedding_pca (d(d+1)/2 map-side cell
+    * expansion per vector) and m_multimodal_scenecut (6-frame synth +
+    * decode per doc) are corpus-linear but constant-heavy — they dominated
+    * r12's scaled tail (149 s / 90 s per run). At FACTOR x staging
+    * their compute is capped to a deterministic 1-in-FACTOR key slice
+    * while the scan still reads the full amplified corpus, keeping the
+    * timed region scan-shaped and the wall time amp-invariant. Both
+    * formats run the identical capped plan, so the ratio stays
+    * like-for-like; the cap is recorded in detail_scaled ("capped").
+    */
+  def capImpl(factor: Int): Impl = Map(
+    "s_embedding_pca" -> ((s, d) => queries.TrainingData.pcaQuery(s, d, factor)),
+    "m_multimodal_scenecut" -> ((s, d) => queries.TrainingData.scenecutQuery(s, d, factor)))
+
+  /** One timed execution (seconds) of query or maintenance op `name` over
+    * `format` storage at `dir`. Queries run to the noop sink; `x_` ops go
+    * through [[BenchMaintenance.time]], which times the op itself.
+    */
+  def run(spark: SparkSession, format: String, name: String, dir: String,
+          impl: Impl = fastImpl): Double =
+    Tables.withFormat(format) {
+      if (name.startsWith("x_")) BenchMaintenance.time(spark, name, format, dir)
+      else {
+        // drop cached intermediates from prior runs: queries that cache a
+        // frame for multi-branch reuse (minhash/simhash signatures) would
+        // otherwise serve rerun N>1 from memory and min-of-runs would time
+        // a cache scan instead of the engine (within-run reuse still
+        // happens — that is the query's intended shape)
+        spark.catalog.clearCache()
+        // the df is built inside the timed scope's format setting
+        // (Tables.load is consulted at plan-build time)
+        val df = impl.getOrElse(name, SparkEntry.queries(name))(spark, dir)
+        val t0 = System.nanoTime()
+        df.write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
+
   // ---------------------------------------------------------------- main
 
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("GRAFT_BENCH_RUNS", "2").toInt
     val scaledRuns = sys.env.getOrElse("GRAFT_BENCH_SCALED_RUNS", "2").toInt
     val scaleFactor = sys.env.getOrElse("GRAFT_BENCH_SCALE_FACTOR", "10").toInt
@@ -283,21 +357,7 @@ object Bench {
     // walls exist to prevent) — past wall+overrun, even a >=2x entry ships
     // "remeasured":-1 rather than risking the artifact
     val auditOverrunSec = sys.env.getOrElse("GRAFT_BENCH_AUDIT_OVERRUN", "240").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // single-node bench tuning, applied identically to the graft and
-      // parquet runs: with 32 local cores and no spill pressure, a shuffled
-      // hash join beats sort-merge for the fact-fact joins (measured ~0.2s
-      // on q5). A multi-executor deployment at real scale should keep
-      // Spark's default (SMJ degrades gracefully under skew/spill; AQE
-      // re-plans either way).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     // stage all graft conversions outside the timed region. Per-table
     // try/catch: a single broken table must not kill the whole artifact
@@ -311,61 +371,20 @@ object Bench {
       }
     }
 
-    // Bench times the xxhash64 fast path of minhash/simhash; the declared
-    // queries run a portable md5-fold hash so DuckDB can oracle-check them.
-    // Both share the identical plan shape — only the leaf hash expression
-    // differs.
-    val fastImpl: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "d_dedup_minhash_lsh" -> ((s, d) => queries.TrainingData.minhashLsh(s, d, portable = false)),
-      "d_dedup_simhash" -> ((s, d) => queries.TrainingData.simhashDedup(s, d, portable = false)))
-
-    // scaled-section compute caps: s_embedding_pca (d(d+1)/2 map-side cell
-    // expansion per vector) and m_multimodal_scenecut (6-frame synth +
-    // decode per doc) are corpus-linear but constant-heavy — they dominated
-    // r12's scaled tail (149 s / 90 s driver timings). At FACTOR x staging
-    // their compute is capped to a deterministic 1-in-FACTOR key slice
-    // while the scan still reads the full amplified corpus, keeping the
-    // timed region scan-shaped and the wall time amp-invariant. Both
-    // formats run the identical capped plan, so the ratio stays
-    // like-for-like; the cap is recorded in detail_scaled ("capped").
-    def capImpl(factor: Int): Map[String, (SparkSession, String) => DataFrame] = Map(
-      "s_embedding_pca" -> ((s, d) => queries.TrainingData.pcaQuery(s, d, factor)),
-      "m_multimodal_scenecut" -> ((s, d) => queries.TrainingData.scenecutQuery(s, d, factor)))
-
-    def run(name: String, dir: String,
-            impl: Map[String, (SparkSession, String) => DataFrame]): Double = {
-      // drop cached intermediates from prior runs: queries that cache a
-      // frame for multi-branch reuse (minhash/simhash signatures) would
-      // otherwise serve rerun N>1 from memory and min-of-runs would time a
-      // cache scan instead of the engine (within-run reuse still happens —
-      // that is the query's intended shape)
-      spark.catalog.clearCache()
-      // the df is built inside the timed scope's format setting (Tables.load
-      // is consulted at plan-build time)
-      val df = impl.getOrElse(name, SparkEntry.queries(name))(spark, dir)
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // every timing carries its host-load context into tools/bench_detail
     final case class Telem(q: String, fmt: String, sec: Double,
         steal: Double, busy: Double, load: Double)
     val telemetry = scala.collection.mutable.ArrayBuffer[Telem]()
 
     def timed(format: String, name: String, dir: String,
-              impl: Map[String, (SparkSession, String) => DataFrame] = fastImpl): Double = {
-      sys.props("graft.tables.format") = format
+              impl: Impl = fastImpl): Double = {
       val (s0, b0, t0c) = cpuTicks()
       val r =
-        try {
-          if (name.startsWith("x_")) BenchMaintenance.time(spark, name, format, dir)
-          else run(name, dir, impl)
-        }
+        try run(spark, format, name, dir, impl)
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name ($format) failed: ${e.getMessage}")
           -1.0
-        } finally sys.props.remove("graft.tables.format")
+        }
       val (s1, b1, t1c) = cpuTicks()
       val dt = math.max(1L, t1c - t0c)
       telemetry += Telem(name, format, r,
@@ -386,7 +405,7 @@ object Bench {
     val capEvents = scala.collection.mutable.ArrayBuffer[String]()
     val CAPPED = -2.0
     def timedCapped(format: String, name: String, dir: String,
-                    impl: Map[String, (SparkSession, String) => DataFrame],
+                    impl: Impl,
                     capSec: Double, label: String): Double = {
       if (!java.lang.Double.isFinite(capSec) || capSec <= 0)
         return timed(format, name, dir, impl)
@@ -463,7 +482,7 @@ object Bench {
     // same cap instead of burning further passes.
     def measure(dir: String, nRuns: Int, deadlineNanos: Long,
                 names: Seq[String] = headline,
-                impl: Map[String, (SparkSession, String) => DataFrame] = fastImpl,
+                impl: Impl = fastImpl,
                 capOf: String => Double = _ => 0.0,
                 label: String = "base"): Measured = {
       import scala.collection.mutable.ArrayBuffer
@@ -477,7 +496,7 @@ object Bench {
         // alternate which format goes FIRST per (query, pass): a fixed
         // graft-first order hands the second format a systematically
         // warmer JVM/page cache — at single-run scale that measured as
-        // 1.2-1.7x phantom ratios that vanish under QueryAB.
+        // 1.2-1.7x phantom ratios that vanish under interleaved `Probe time`.
         val (g, p) =
           if ((qi + pass) % 2 == 0) {
             val g0 = timedCapped("graft", name, dir, impl, cap, label)
@@ -554,7 +573,7 @@ object Bench {
     // in "flags" as the audit trail. Returns (flag jsons, repaired results).
     def flagAudit(results: Seq[QRes], dir: String, label: String,
                   deadlineNanos: Long,
-                  impl: Map[String, (SparkSession, String) => DataFrame] = fastImpl,
+                  impl: Impl = fastImpl,
                   capOf: String => Double = _ => 0.0): (Seq[String], Seq[QRes]) = {
       val candidates = results
         .filter(r => r.bg > 0 && r.bp > 0 && math.max(r.bg, r.bp) > 0.3)

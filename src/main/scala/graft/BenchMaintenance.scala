@@ -3,27 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Standalone driver for the at-scale CDC section (same measurement the
-  * bench embeds): `runMain graft.MaintScale [sfDir] [targetRows]`. */
-object MaintScale {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val rows = if (args.length > 1) args(1).toLong else 5000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.props("graft.debug.dmlphases") = "1"
-    println(BenchMaintenance.cdcAtScale(spark, sfDir, rows))
-    spark.stop()
-  }
-}
-
 /** Timed maintenance / snapshot operations for the bench headline
   * (VERDICT r7 #7-#8): row-level purge, z-order re-clustering, and
   * snapshot reads are what a 100 TB operator runs daily, so their cost is
@@ -138,8 +117,8 @@ object BenchMaintenance {
     // the compaction itself is sub-second on both sides, where one-shot
     // timing reports driver scheduling noise — this entry flagged on
     // relative spread in three consecutive rounds (1.29x r17, 1.50x one
-    // r18 run) while warm TimeOne said 1.03x. The mutated table forces a
-    // fresh (untimed) re-stage before each rep.
+    // r18 run) while a warm interleaved re-timing said 1.03x. The mutated
+    // table forces a fresh (untimed) re-stage before each rep.
     def one(): Double =
       if (format == "graft") {
         rm(stage)

@@ -57,6 +57,12 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     loadImpl(spark, sfDir, name, runtimeFilter = false)
 
+  /** Runs `f` with [[load]] reading `format` ("graft" or "parquet"). */
+  private[graft] def withFormat[T](format: String)(f: => T): T = {
+    sys.props("graft.tables.format") = format
+    try f finally sys.props.remove("graft.tables.format")
+  }
+
   private def loadImpl(spark: SparkSession, sfDir: String, name: String,
       runtimeFilter: Boolean): DataFrame = {
     graft.spark.GraftExtensions.ensure(spark) // idempotent rule wiring

@@ -34,9 +34,15 @@ final case class Footer(schemaJson: String, leaves: Array[ColumnMeta])
 object GraftFileReader {
   private val TailPreRead = 64 * 1024 // one ranged read covers most footers
 
+  private def corrupt(msg: String) = new java.io.IOException(s"graft: corrupt footer: $msg")
+
+  /** Parses the footer. Every length and count it reads is checked against
+    * the bytes that can hold it, so a damaged tail fails with an
+    * IOException instead of a huge allocation or an out-of-range read.
+    */
   def readFooter(in: SeekableInput): Footer = {
     val fileLen = in.length
-    require(fileLen >= 32, s"file too small: $fileLen")
+    if (fileLen < 32) throw new java.io.IOException(s"graft: file too small: $fileLen bytes")
     val preLen = math.min(fileLen, TailPreRead.toLong).toInt
     var tail = in.readRange(fileLen - preLen, preLen)
     var tailStartsAt = fileLen - preLen
@@ -57,7 +63,10 @@ object GraftFileReader {
       throw new java.io.IOException("bad trailing magic: not a graft file")
     }
 
+    // the footer sits after the 8-byte leading magic
     val footerLen = schemaSize.toLong + metaSize + 16
+    if (schemaSize < 0 || metaSize < 0 || footerLen > math.min(fileLen - 8, Int.MaxValue))
+      throw corrupt(s"schema size $schemaSize + meta size $metaSize do not fit a $fileLen-byte file")
     if (footerLen > preLen) {
       tail = in.readRange(fileLen - footerLen, footerLen.toInt)
       tailStartsAt = fileLen - footerLen
@@ -65,15 +74,25 @@ object GraftFileReader {
     val base = tail.length - 16 - metaSize - schemaSize
     val schemaJson = new String(tail, base, schemaSize, "UTF-8")
     cur = new ByteCursor(tail, base + schemaSize)
+    val metaEnd = tail.length - 16
+    // `bytes` must remain in the meta block before the next read
+    def need(bytes: Long, what: => String): Unit =
+      if (bytes < 0 || bytes > metaEnd - cur.pos)
+        throw corrupt(s"$what needs $bytes bytes, ${metaEnd - cur.pos} left in the meta block")
+    need(4, "leaf count")
     val nLeaves = cur.getIntLE()
+    need(nLeaves * 12L, s"leaf count $nLeaves") // u64 offset + u32 page count each
     val leaves = new Array[ColumnMeta](nLeaves)
     var i = 0
     while (i < nLeaves) {
+      need(12, s"leaf $i")
       val offset = cur.getLongLE()
       val nPages = cur.getIntLE()
+      need(nPages * 9L, s"leaf $i page count $nPages") // u32 len + u32 nv + u8 kind each
       val pages = new Array[PageMeta](nPages)
       var p = 0
       while (p < nPages) {
+        need(9, s"leaf $i page $p")
         val len = cur.getIntLE()
         val nv = cur.getIntLE()
         val kindByte = cur.getByte()
@@ -87,28 +106,39 @@ object GraftFileReader {
             f"graft: page meta kind byte 0x$kindByte%02x has unknown flag bits — " +
               "file was written by a newer format version")
         val kind = (kindByte & 0x0f).toByte // bit 0x10 flags an appended bloom
+        def stats = s"leaf $i page $p stats"
         val base =
           if (kind == 4) {
+            need(1, stats)
             val minLen = cur.getByte() & 0xff
+            need(minLen + 1, stats)
             val minBin = cur.getBytes(minLen)
             val maxLen = cur.getByte() & 0xff
+            need((if (maxLen == 0xff) 0 else maxLen) + 4, stats)
             val maxBin = if (maxLen == 0xff) null else cur.getBytes(maxLen)
             PageMeta(len, nv, kind, 0L, 0L, cur.getIntLE(), minBin, maxBin)
-          } else if (kind != 0)
+          } else if (kind != 0) {
+            need(20, stats)
             PageMeta(len, nv, kind, cur.getLongLE(), cur.getLongLE(), cur.getIntLE())
-          else PageMeta(len, nv)
+          } else PageMeta(len, nv)
         pages(p) =
-          if ((kindByte & 0x10) != 0) base.copy(bloom = cur.getBytes(cur.getIntLE()))
-          else base
+          if ((kindByte & 0x10) != 0) {
+            need(4, s"leaf $i page $p bloom")
+            val bloomLen = cur.getIntLE()
+            need(bloomLen, s"leaf $i page $p bloom length $bloomLen")
+            base.copy(bloom = cur.getBytes(bloomLen))
+          } else base
         p += 1
       }
       // v004: optional per-leaf KMV ndv synopsis after the page list
       val (kmv, kmvK) =
         if (!isV4) (null, 0)
-        else if (cur.getByte() == 0) (null, 0)
+        else if ({ need(1, s"leaf $i ndv flag"); cur.getByte() == 0 }) (null, 0)
         else {
+          need(8, s"leaf $i ndv synopsis")
           val k = cur.getIntLE()
           val n = cur.getIntLE()
+          need(n * 8L, s"leaf $i ndv synopsis size $n")
           val arr = new Array[Long](n)
           var j = 0
           while (j < n) { arr(j) = cur.getLongLE(); j += 1 }

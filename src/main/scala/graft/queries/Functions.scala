@@ -215,7 +215,6 @@ object Functions {
           .write.format("graft").option("bloomfilter", "tokens.element")
           .mode("overwrite").save(t)
       }
-      graft.spark.GraftExtensions.ensure(s)
       s.read.format("graft").load(stage)
         .filter(array_contains(col("tokens"), "data"))
         .groupBy(col("lang"))
@@ -1313,11 +1312,8 @@ object Functions {
       val src = if (fmt == "parquet")
         s.read.parquet(staged("graft_map_stage2_pq")(
           (df, p) => df.write.mode("overwrite").parquet(p)))
-      else {
-        graft.spark.GraftExtensions.ensure(s)
-        s.read.format("graft").load(staged("graft_map_stage2")(
-          (df, p) => df.write.format("graft").mode("overwrite").save(p)))
-      }
+      else s.read.format("graft").load(staged("graft_map_stage2")(
+        (df, p) => df.write.format("graft").mode("overwrite").save(p)))
       src.filter(col("meta").getItem("en") === "en")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))

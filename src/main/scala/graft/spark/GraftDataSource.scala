@@ -35,6 +35,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val path = properties.get("path")
     require(path != null, "graft: 'path' option is required")
+    // the one rule-wiring point for reads: a session that only ever calls
+    // spark.read.format("graft") still gets element pushdown
+    GraftExtensions.ensure(SparkSession.active)
     new GraftTable(schema, path)
   }
 }
@@ -883,8 +886,6 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
   override def pushPredicates(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] = {
-    if (sys.props.contains("graft.debug.predicates"))
-      predicates.foreach(p => System.err.println("GRAFT-PRED: " + p.describe()))
     val paired: Array[(org.apache.spark.sql.connector.expressions.filter.Predicate,
         Seq[org.apache.spark.sql.sources.Filter])] =
       predicates.map { p =>

@@ -134,11 +134,16 @@ object GraftElementPushdown extends Rule[LogicalPlan] {
 }
 
 /** Session wiring for graft's extra Catalyst rules. `ensure` is idempotent
-  * and cheap; Tables.load calls it so every query built through the library
-  * gets the rules without configuring `spark.sql.extensions` up front.
+  * and cheap; `GraftDataSource.getTable` calls it, so every graft read gets
+  * the rules without configuring `spark.sql.extensions` up front. Table
+  * functions never reach `getTable` and call it themselves.
   */
 object GraftExtensions {
   def ensure(s: SparkSession): Unit = synchronized {
+    // every graft read lands here: once a session is wired, skip
+    // re-registering its functions (each re-registration also logs a
+    // replacement warning)
+    if (wired(s)) return
     if (!s.experimental.extraOptimizations.contains(GraftElementPushdown))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ GraftElementPushdown
@@ -153,6 +158,14 @@ object GraftExtensions {
         s.experimental.extraStrategies :+ GraftMaintenanceStrategy
     registerSqlFunctions(s)
   }
+
+  private def wired(s: SparkSession): Boolean =
+    Seq(GraftElementPushdown, GraftUpdateRewrite, GraftMergeRewrite)
+      .forall(s.experimental.extraOptimizations.contains) &&
+      s.experimental.extraStrategies.contains(GraftMaintenanceStrategy) &&
+      // registerTableFunctions registers graft_dv last
+      s.sessionState.tableFunctionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dv"))
 
   /** Literal-int second argument of a SQL multimodal function (factor /
     * stride) — must be resolvable at registration time, not per row. */

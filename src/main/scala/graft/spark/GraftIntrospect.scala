@@ -49,32 +49,43 @@ object GraftIntrospect {
     case _ => Seq(prefix)
   }
 
-  /** One row per (file, leaf, page): physical layout introspection.
-    * Columns: file, column (dotted leaf name), leaf, lane, page, codec,
-    * compressed_len, raw_len, num_values, null_count.
+  /** One live data file's footer, dotted leaf names and codec-tree
+    * description ([[GraftStat.describe]]) — the walk behind [[pages]] and
+    * the `stat` diagnostic.
     */
-  def pages(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
+  final case class FileLayout(file: String, leafNames: Seq[String],
+      footer: graft.format.Footer, leaves: Array[GraftStat.LeafInfo])
+
+  def describeFiles(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileLayout] = {
     val files = GraftRewriteGuard.adjust(dir, conf,
       GraftUtil.listDataFiles(dir, conf))
     require(files.nonEmpty, s"graft: no data files under $dir")
-    val rows = files.flatMap { f =>
+    files.map { f =>
       val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
       try {
         val footer = GraftFileReader.readFooter(in)
         val schema = DataType.fromJson(footer.schemaJson).asInstanceOf[StructType]
         val specs = schema.fields.flatMap(fd =>
           GraftSchema.leafSpecs(fd.dataType, fd.nullable)).toArray
-        val names = schema.fields.flatMap(fd =>
+        val names = schema.fields.toSeq.flatMap(fd =>
           leafNames(fd.dataType, fd.nullable, fd.name))
-        val infos = GraftStat.describe(in, footer, specs)
-        infos.zipWithIndex.toSeq.flatMap { case (li, i) =>
-          li.pages.zipWithIndex.toSeq.map { case (pg, pi) =>
-            (f.getPath.getName, names(i), i, li.lane, pi, codecName(pg.codec),
-              pg.compressedLen, pg.rawLen, pg.numValues, pg.nullCount)
-          }
-        }
+        FileLayout(f.getPath.getName, names, footer, GraftStat.describe(in, footer, specs))
       } finally in.close()
+    }
+  }
+
+  /** One row per (file, leaf, page): physical layout introspection.
+    * Columns: file, column (dotted leaf name), leaf, lane, page, codec,
+    * compressed_len, raw_len, num_values, null_count.
+    */
+  def pages(spark: SparkSession, dir: String): DataFrame = {
+    val rows = describeFiles(dir, spark.sessionState.newHadoopConf()).flatMap { fl =>
+      fl.leaves.zipWithIndex.toSeq.flatMap { case (li, i) =>
+        li.pages.zipWithIndex.toSeq.map { case (pg, pi) =>
+          (fl.file, fl.leafNames(i), i, li.lane, pi, codecName(pg.codec),
+            pg.compressedLen, pg.rawLen, pg.numValues, pg.nullCount)
+        }
+      }
     }
     import spark.implicits._
     rows.toDF("file", "column", "leaf", "lane", "page", "codec",

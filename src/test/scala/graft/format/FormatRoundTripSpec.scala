@@ -160,38 +160,91 @@ class FormatRoundTripSpec extends AnyFunSuite {
       FormatConstants.MagicV3))
   }
 
-  test("unknown kind-byte flag bits are a hard error, not a silent misparse") {
+  /** Writes a 100-row single-leaf file, lets `patch` damage it in place,
+    * then hands it to `check`. `patch` gets the file and the meta block's
+    * start. Tail layout: ... | meta | u32 schemaSize | u32 metaSize |
+    * magic; the meta block starts with u32 leafCount, u64 offset, u32
+    * pageCount, then the first page's u32 len | u32 nv | u8 kind.
+    */
+  private def withPatchedFile(opts: WriteOptions = WriteOptions())(
+      patch: (java.io.RandomAccessFile, Long) => Unit)(check: LocalFileInput => Unit): Unit = {
     val n = 100
     val v = IntVec(n, null, Array.tabulate(n)(identity))
-    val f = Files.createTempFile("graft-kind", ".graft")
+    val f = Files.createTempFile("graft-patch", ".graft")
     try {
       val os = new java.io.BufferedOutputStream(Files.newOutputStream(f))
-      val w = new GraftFileWriter(os, "{}", WriteOptions())
+      val w = new GraftFileWriter(os, "{}", opts)
       w.start()
       w.writeChunk(Seq(LeafCol(Lane.I32, nullable = false, v)), n)
       w.finish()
       os.close()
-      // set a hypothetical future flag bit on the first page's kind byte:
-      // tail is ... | meta | u32 schemaSize | u32 metaSize | magic; the
-      // meta block starts with u32 leafCount, u64 offset, u32 pageCount,
-      // then the first page's u32 len | u32 nv | u8 kind
       val raf = new java.io.RandomAccessFile(f.toFile, "rw")
-      raf.seek(raf.length() - 12)
-      val msBytes = new Array[Byte](4); raf.readFully(msBytes)
-      val metaSize = java.nio.ByteBuffer.wrap(msBytes)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      val kindPos = raf.length() - 16 - metaSize + 4 + 12 + 8
+      try patch(raf, raf.length() - 16 - intAt(raf, raf.length() - 12))
+      finally raf.close()
+      val in = new LocalFileInput(f)
+      try check(in) finally in.close()
+    } finally Files.deleteIfExists(f)
+  }
+
+  private def intAt(raf: java.io.RandomAccessFile, pos: Long): Int = {
+    val b = new Array[Byte](4)
+    raf.seek(pos); raf.readFully(b)
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+  }
+
+  private def putInt(raf: java.io.RandomAccessFile, pos: Long, v: Int): Unit = {
+    raf.seek(pos)
+    raf.write(java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array())
+  }
+
+  test("unknown kind-byte flag bits are a hard error, not a silent misparse") {
+    // set a hypothetical future flag bit on the first page's kind byte
+    withPatchedFile() { (raf, metaStart) =>
+      val kindPos = metaStart + 4 + 12 + 8
       raf.seek(kindPos)
       val kind = raf.read()
       raf.seek(kindPos)
       raf.write(kind | 0x80)
-      raf.close()
-      val in = new LocalFileInput(f)
-      try {
+    } { in =>
+      val e = intercept[java.io.IOException](GraftFileReader.readFooter(in))
+      assert(e.getMessage.contains("unknown flag bits"), e.getMessage)
+    }
+  }
+
+  test("corrupted footer lengths and counts fail with IOException") {
+    // intercept fails the test on any other exception type
+    // (NegativeArraySize, IllegalArgument, ArrayIndexOutOfBounds, OOM)
+    val kmvOpts = WriteOptions(ndvLeaves = Set(0))
+    val cases: Seq[(String, WriteOptions, (java.io.RandomAccessFile, Long) => Unit)] = Seq(
+      ("metaSize 0x7fffffff", WriteOptions(), (raf, _) => putInt(raf, raf.length() - 12, 0x7fffffff)),
+      ("metaSize beyond the file", WriteOptions(),
+        (raf, _) => putInt(raf, raf.length() - 12, raf.length().toInt + 100)),
+      ("negative metaSize", WriteOptions(), (raf, _) => putInt(raf, raf.length() - 12, -5)),
+      ("negative schemaSize", WriteOptions(), (raf, _) => putInt(raf, raf.length() - 16, Int.MinValue)),
+      ("schemaSize beyond the file", WriteOptions(),
+        (raf, _) => putInt(raf, raf.length() - 16, raf.length().toInt)),
+      ("leaf count 0x7fffffff", WriteOptions(), (raf, m) => putInt(raf, m, 0x7fffffff)),
+      ("negative leaf count", WriteOptions(), (raf, m) => putInt(raf, m, -1)),
+      ("leaf count one too many", WriteOptions(), (raf, m) => putInt(raf, m, 2)),
+      ("page count 0x7fffffff", WriteOptions(), (raf, m) => putInt(raf, m + 12, 0x7fffffff)),
+      ("negative page count", WriteOptions(), (raf, m) => putInt(raf, m + 12, -1)),
+      ("page count one too many", WriteOptions(), (raf, m) => putInt(raf, m + 12, 2)),
+      ("ndv synopsis size 0x7fffffff", kmvOpts, { (raf, _) =>
+        // 100 distinct values: ... | u32 k | u32 n=100 | 100 x u64 | tail
+        val nPos = raf.length() - 16 - 100 * 8 - 4
+        assert(intAt(raf, nPos) == 100)
+        putInt(raf, nPos, 0x7fffffff)
+      }),
+      ("negative ndv synopsis size", kmvOpts,
+        (raf, _) => putInt(raf, raf.length() - 16 - 100 * 8 - 4, -3)))
+    for ((label, opts, patch) <- cases)
+      withPatchedFile(opts)(patch) { in =>
         val e = intercept[java.io.IOException](GraftFileReader.readFooter(in))
-        assert(e.getMessage.contains("unknown flag bits"), e.getMessage)
-      } finally in.close()
-    } finally Files.deleteIfExists(f)
+        assert(e.getMessage.startsWith("graft: "), s"$label: ${e.getMessage}")
+      }
+    withPatchedFile()((raf, _) => raf.setLength(20)) { in =>
+      intercept[java.io.IOException](GraftFileReader.readFooter(in))
+    }
   }
 
   test("page stats are persisted (zone maps)") {

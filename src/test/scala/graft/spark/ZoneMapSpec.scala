@@ -47,6 +47,18 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(GraftMetrics.pageGroupsRead.get() == 0)
   }
 
+  test("a session that only calls read.format(graft) gets element pushdown") {
+    val dir = "/tmp/graft-test/zonemap-elem-fresh"
+    spark.range(1000).selectExpr("id", "array(id, id + 1) AS arr").coalesce(1)
+      .write.format("graft").mode("overwrite").save(dir)
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraOptimizations.contains(GraftElementPushdown))
+    val hit = fresh.read.format("graft").load(dir).filter(array_contains(col("arr"), lit(500L)))
+    val plan = hit.queryExecution.executedPlan.toString
+    assert(plan.contains("element["), "element predicate missing from the scan description:\n" + plan)
+    assert(hit.count() == 2)
+  }
+
   test("array_contains prunes on element-leaf zone maps via the pushdown rule") {
     val dir = "/tmp/graft-test/zonemap-elem"
     // arrays whose elements track the sort key: page p holds elements in a
