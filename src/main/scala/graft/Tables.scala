@@ -51,8 +51,9 @@ object Tables {
     fingerprint(strRoot(sfDir))
 
   /** Read a table as a graft-format DataFrame (converting from parquet on
-    * first use). GRAFT_TABLES_FORMAT=parquet bypasses graft — used only to
-    * measure the parquet baseline with identical query code.
+    * first use). Under `withFormat("parquet")` it reads the parquet source
+    * instead — used only to measure the parquet baseline with identical
+    * query code.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     loadImpl(spark, sfDir, name, runtimeFilter = false)
@@ -63,14 +64,13 @@ object Tables {
     try f finally sys.props.remove("graft.tables.format")
   }
 
+  /** The format [[load]] reads: "graft", or whatever [[withFormat]] set. */
+  private[graft] def format: String =
+    sys.props.getOrElse("graft.tables.format", "graft")
+
   private def loadImpl(spark: SparkSession, sfDir: String, name: String,
       runtimeFilter: Boolean): DataFrame = {
-    graft.spark.GraftExtensions.ensure(spark) // idempotent rule wiring
-    // the system property lets one JVM time both formats back-to-back (the
-    // self-baselining bench); the env var remains for whole-process runs
-    val fmt = sys.props.getOrElse("graft.tables.format",
-      sys.env.getOrElse("GRAFT_TABLES_FORMAT", "graft"))
-    if (fmt == "parquet")
+    if (format == "parquet")
       return parquet(spark, sfDir, name)
     val dir = s"${strRoot(sfDir)}/$name"
     ensureConverted(spark, sfDir, name, dir)

@@ -85,7 +85,6 @@ object DmlDemo {
     println(s"   max(v)=${sql("SELECT max(v) FROM demo.events").head.getLong(0)} (needs 64 bits)")
 
     println("== 7. introspection table functions")
-    graft.spark.GraftExtensions.ensure(spark)
     sql(s"SELECT codec, count(*) pages, sum(num_values) vals FROM graft_pages('$dir') " +
       "GROUP BY codec ORDER BY pages DESC").show(5, truncate = false)
     sql(s"SELECT * FROM graft_changes('$dir', 0, ${Long.MaxValue}L) " +

@@ -125,7 +125,6 @@ object Functions {
       // footers alone (the which-partition-needs-compaction report). The
       // oracle recomputes the per-partition row counts from the raw
       // rows; file/byte columns are physical and stay out of the compare.
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(s"SELECT partition, rows, dv_masked FROM " +
         s"graft_partitions('${stagedPartitionedDocs(s, dir)}') " +
         "ORDER BY partition")
@@ -759,7 +758,6 @@ object Functions {
       // the whole table afterwards.
       val key = stageKey(s, dir, "documents").replaceAll("[^a-zA-Z0-9]", "_")
       val stage = stagedOnce(s"/tmp/graft_sqlanalyze_stage1/$key/wh") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         val cat = s"ganz_$key"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.spark.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.warehouse", t)
@@ -806,7 +804,6 @@ object Functions {
       // readable; retention semantics are spec-tested).
       val stage = stagedOnce(
           s"/tmp/graft_sqlcompact_stage1/${stageKey(s, dir, "orders")}/orders") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         Tables.parquet(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .repartition(8)
@@ -844,7 +841,6 @@ object Functions {
       // rows fold in as a pinned `restored` invariant.
       val stage = stagedOnce(
           s"/tmp/graft_sqlrestore_stage1/${stageKey(s, dir, "documents")}/docs") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         val d = Tables.parquet(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 2 === 0)
@@ -914,7 +910,6 @@ object Functions {
       // log, or a wrong footer sum all hash-mismatch.
       val stage = stagedOnce(
           s"/tmp/graft_sqlhistory_stage1/${stageKey(s, dir, "orders")}/orders") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         val o = Tables.parquet(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         (0 until 3).foreach { r =>
@@ -923,7 +918,6 @@ object Functions {
           Thread.sleep(5)
         }
       }
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(s"SELECT version, files, `rows` AS n_rows FROM " +
           s"graft_history('$stage') ORDER BY version")
     },
@@ -937,7 +931,6 @@ object Functions {
       // directly over the raw parquet.
       val stage = stagedOnce(
           s"/tmp/graft_sqlapply_stage1/${stageKey(s, dir, "documents")}/root") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         val src = s"$t/src"; val tgt = s"$t/tgt"
         Tables.parquet(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1002,7 +995,6 @@ object Functions {
       // contract).
       val stage = stagedOnce(
           s"/tmp/graft_sqlcpart_stage2/${stageKey(s, dir, "documents")}/docs") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         Tables.parquet(s, dir, "documents")
           .select(col("doc_id"), col("n_chars"), col("lang"))
           .write.format("graft").option("partitionby", "lang")
@@ -1083,7 +1075,6 @@ object Functions {
       // bookkeeping audited against a data-derived count.
       val stage = stagedOnce(
           s"/tmp/graft_sqldv_stage1/${stageKey(s, dir, "documents")}/docs") { t =>
-        graft.spark.GraftExtensions.ensure(s)
         Tables.parquet(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .write.format("graft").option("maxrowsperfile", "5000")
@@ -1091,7 +1082,6 @@ object Functions {
         graft.spark.GraftMaintenance.deleteWhereDv(s, t,
           col("doc_id") % 9 === 2, takedown = false)
       }
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(s"SELECT posture, CAST(sum(cardinality) AS BIGINT) AS masked " +
         s"FROM graft_dv('$stage') WHERE current GROUP BY posture")
     },
@@ -1300,8 +1290,6 @@ object Functions {
       // element-leaf zone-map predicates (null-safe in every mode, so the
       // pruning stays on under ANSI; ZoneMapSpec asserts the page skips).
       // The pruned scan + residual filter must match DuckDB exactly.
-      val fmt = sys.props.getOrElse("graft.tables.format",
-        sys.env.getOrElse("GRAFT_TABLES_FORMAT", "graft"))
       def staged(root: String)(write: (DataFrame, String) => Unit): String =
         stagedOnce(s"/tmp/$root/${stageKey(s, dir, "documents")}/documents") { t =>
           write(Tables.parquet(s, dir, "documents")
@@ -1309,7 +1297,7 @@ object Functions {
               map(col("lang"), col("lang")).as("meta"))
             .orderBy(col("lang")), t)
         }
-      val src = if (fmt == "parquet")
+      val src = if (Tables.format == "parquet")
         s.read.parquet(staged("graft_map_stage2_pq")(
           (df, p) => df.write.mode("overwrite").parquet(p)))
       else s.read.format("graft").load(staged("graft_map_stage2")(
@@ -1359,7 +1347,6 @@ object Functions {
           .option("ndvsketch", "doc_id,lang,source")
           .mode("overwrite").save(t)
       }
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(s"SELECT * FROM graft_ndv('$stage', 'doc_id', 'lang', 'source') " +
         "ORDER BY col_name")
     },
@@ -1381,7 +1368,6 @@ object Functions {
           .write.format("graft").option("pagesize", "256")
           .mode("overwrite").save(t)
       }
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(s"""SELECT column AS col_name,
         CAST(sum(num_values) AS BIGINT) AS vals,
         CAST(sum(null_count) AS BIGINT) AS nulls
@@ -1436,9 +1422,7 @@ object Functions {
       // parquet's row-group stats prune too); the headline ratio compares
       // format-for-format on an identical declared layout, not a layout
       // advantage
-      val fmt = sys.props.getOrElse("graft.tables.format",
-        sys.env.getOrElse("GRAFT_TABLES_FORMAT", "graft"))
-      val src = if (fmt == "parquet") {
+      val src = if (Tables.format == "parquet") {
         val stage = stagedOnce(
             s"/tmp/graft_sort_stage2_pq/${stageKey(s, dir, "lineitem")}/lineitem") { t =>
           Tables.parquet(s, dir, "lineitem")
@@ -1693,7 +1677,6 @@ object Functions {
       // analysis time into the windowed scans, so a SQL-only consumer
       // gets the identical event stream (and the identical oracle)
       val (stage, t1) = cdcChangesStage(s, dir)
-      graft.spark.GraftExtensions.ensure(s)
       s.sql(
         s"""SELECT ${graft.spark.GraftCdc.ChangeTypeCol} AS change_type,
            |  lang, count(*) AS docs, sum(n_chars) AS chars

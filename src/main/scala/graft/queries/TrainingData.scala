@@ -535,9 +535,9 @@ object TrainingData {
     * "table")` instead writes the frame to a graft scratch table and reads
     * it back: the frame then lives in the storage tier (one column-pruned
     * ranged-read scan per reuse) rather than pinning the executors' storage
-    * pool — the shape a 100 TB signature/bucket frame needs. `none` skips
-    * materialization (recompute per branch). Scratch tables are isolated
-    * per Spark application under `graft.pipeline.scratch`.
+    * pool — the shape a 100 TB signature/bucket frame needs. Scratch
+    * tables are isolated per Spark application under
+    * `graft.pipeline.scratch`.
     */
   private def materialize(df: DataFrame, name: String): DataFrame =
     materializeWithDir(df, name)._1
@@ -578,8 +578,9 @@ object TrainingData {
         val dir = s"$appDir/$name"
         df.write.format("graft").mode("overwrite").save(dir)
         (s.read.format("graft").load(dir), Some(dir))
-      case "none" => (df, None)
-      case _ => (df.cache(), None)
+      case "cache" => (df.cache(), None)
+      case other => throw new IllegalArgumentException(
+        s"graft: graft.pipeline.materialize must be table or cache, got '$other'")
     }
   }
 
@@ -2673,7 +2674,7 @@ object TrainingData {
       labels = next
       iter += 1
     }
-    if (edgesDir.isEmpty) edges.unpersist() // no-op under materialize=none
+    if (edgesDir.isEmpty) edges.unpersist()
     labels
   }
 

@@ -259,10 +259,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident.namespace().mkString("."), ident.name())
-    // wire the library's extra rules (element pushdown, SQL UPDATE) into
-    // the active session: a pure-SQL user never calls Tables.load, and the
-    // first catalog table resolution is the earliest reliable hook
-    GraftExtensions.ensure(org.apache.spark.sql.SparkSession.active)
     // ONE sidecar read serves parts/sort/cluster/checks (loadTable runs
     // on every SQL statement naming the table — each extra read is a
     // remote round-trip on an object store)

@@ -35,9 +35,6 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val path = properties.get("path")
     require(path != null, "graft: 'path' option is required")
-    // the one rule-wiring point for reads: a session that only ever calls
-    // spark.read.format("graft") still gets element pushdown
-    GraftExtensions.ensure(SparkSession.active)
     new GraftTable(schema, path)
   }
 }
@@ -324,11 +321,20 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
       * write through this table applies them unless the write passes its
       * own same-named option. */
     private val bloomCols: Seq[String] = Seq.empty,
-    private val ndvCols: Seq[String] = Seq.empty)
+    private val ndvCols: Seq[String] = Seq.empty,
+    /** element-leaf page predicates for this table's scans, set by
+      * [[GraftElementPushdown]] — DSv2 cannot deliver them through
+      * pushFilters. Pruning is advisory: Spark's residual Filter above the
+      * scan still applies the predicate row-level. */
+    private val elementPreds: Array[ZoneMapFilter.PagePred] = Array.empty)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
   override def name(): String = s"graft:$path"
+
+  private[spark] def withElementPreds(ps: Array[ZoneMapFilter.PagePred]): GraftTable =
+    new GraftTable(tableSchema, path, tableAsofMs, partitionCols, sortCols,
+      clusterCols, checks, viaCatalog, bloomCols, ndvCols, ps)
 
   /** `_graft_ordinal`: the row's file-physical ordinal, synthesized by the
     * reader (page-group prefix sums + in-batch index). With
@@ -650,7 +656,8 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
       // plan time would admit files committed after the caller's
       // snapshot; compact's retire set and its scan must be ONE set)
       Option(options.get("snapshotfiles"))
-        .map(_.split('\n').filter(_.nonEmpty).toSet))
+        .map(_.split('\n').filter(_.nonEmpty).toSet),
+      elementPreds)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(tableAsofMs.isEmpty, "graft: cannot write to a time-travel snapshot")
     new GraftWriteBuilder(info, path, tablePartitionBy = partitionCols,
@@ -665,13 +672,16 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
   // `read.load(dir)` calls over the same directory would never `sameResult`,
   // so `df.cache()` hits, cached-view reuse, and self-join exchange reuse
   // all silently miss (measured: a cached intermediate recomputed on every
-  // reuse in the bench).
+  // reuse in the bench). Element predicates count too: a tree transform
+  // keeps the old node when the new one compares equal, so a relation
+  // carrying them must differ from the one without.
+  private def elementKey: Seq[String] = elementPreds.map(ZoneMapFilter.render).toSeq
   override def equals(other: Any): Boolean = other match {
     case o: GraftTable => path == o.path && tableSchema == o.tableSchema &&
-      tableAsofMs == o.tableAsofMs
+      tableAsofMs == o.tableAsofMs && elementKey == o.elementKey
     case _ => false
   }
-  override def hashCode(): Int = (path, tableSchema, tableAsofMs).hashCode()
+  override def hashCode(): Int = (path, tableSchema, tableAsofMs, elementKey).hashCode()
 }
 
 object GraftTable {
@@ -722,7 +732,8 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
     asofOpt: Option[Long] = None,
     sinceOpt: Option[Long] = None,
     startLatest: Boolean = false,
-    snapshotFiles: Option[Set[String]] = None)
+    snapshotFiles: Option[Set[String]] = None,
+    elementPreds: Array[ZoneMapFilter.PagePred] = Array.empty)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -1002,7 +1013,7 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
       }
     case None =>
       new GraftScan(tableSchema, projected, path, conf, pagePreds, runtimeFilter, manifestOpt,
-        (pushed ++ pruneFilters.diff(pushed)), pushedLimit,
+        (pushed ++ pruneFilters.diff(pushed)), pushedLimit, elementPreds,
         maxFilesOpt = maxFilesOpt, asofOpt = asofOpt,
         sinceOpt = sinceOpt, startLatest = startLatest, topn = pushedTopN,
         colAliases = colAliases, snapshotFiles = snapshotFiles)
@@ -1029,18 +1040,6 @@ final class GraftScan(private val tableSchema: StructType, private val projected
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
-
-  /** Copy of this scan with element-leaf page predicates grafted on (the
-    * GraftElementPushdown rule — DSv2 cannot deliver these through
-    * pushFilters). Pruning is advisory: Spark's residual Filter above the
-    * scan still applies the predicate row-level.
-    */
-  private[spark] def withElementPreds(ps: Array[ZoneMapFilter.PagePred]): GraftScan =
-    new GraftScan(tableSchema, projected, path, conf, initialPagePreds, runtimeFilter,
-      manifestOpt, pushedRaw, limit, ps, maxFilesOpt, asofOpt, sinceOpt, startLatest,
-      topn, colAliases, snapshotFiles)
-
-  private[spark] def hasElementPreds: Boolean = elementPreds.nonEmpty
 
   // declared hidden-partitioning transforms (sidecar, read ONCE per scan
   // — spjDeclaredTx shares it): source column (lowercased) ->

@@ -1,10 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, AttributeReference, ElementAt, EqualTo, Expression, GetArrayItem, GetMapValue, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StringType}
 
 /** Catalyst rule: element-predicate pushdown for graft scans.
@@ -12,13 +13,14 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, Do
   * DSv2 translates only attribute-path predicates into source filters, so
   * `array_contains(col, lit)` never reaches `pushFilters` — yet the format
   * stores each array's ELEMENT leaf as its own page stream with zone-map
-  * stats (per-leaf independence the reference also has:
-  * `/root/reference/src/read/reader.rs:50-146`). This rule runs in the
-  * user-optimizer batch (after V2ScanRelationPushDown has produced the scan
-  * relation), finds `array_contains` conjuncts in the residual Filter
-  * directly above a graft scan, compiles them into element-leaf page
-  * predicates, and grafts them onto the scan. The Filter stays in place —
-  * pruning is advisory and sound, row-level semantics never depend on it.
+  * stats (per-leaf independence strawboat's reader also has,
+  * `src/read/reader.rs`). This rule runs once as a pre-CBO rule, just
+  * before V2ScanRelationPushDown builds the scan: it
+  * finds `array_contains` conjuncts in the Filter directly above a graft
+  * relation, compiles them into element-leaf page predicates, and hands
+  * them to the scan through a copy of the relation's [[GraftTable]]. The
+  * Filter stays in place — pruning is advisory and sound, row-level
+  * semantics never depend on it.
   */
 object GraftElementPushdown extends Rule[LogicalPlan] {
 
@@ -39,10 +41,7 @@ object GraftElementPushdown extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, rel: DataSourceV2ScanRelation)
-        if rel.scan.isInstanceOf[GraftScan] &&
-          !rel.scan.asInstanceOf[GraftScan].hasElementPreds =>
-      val scan = rel.scan.asInstanceOf[GraftScan]
+    case f @ Filter(cond, rel @ DataSourceV2Relation(table: GraftTable, _, _, _, _, _)) =>
       def scanAttr(e: Expression): Option[AttributeReference] = e match {
         case a: AttributeReference if rel.output.exists(_.exprId == a.exprId) => Some(a)
         case _ => None
@@ -129,43 +128,37 @@ object GraftElementPushdown extends Rule[LogicalPlan] {
         case _ => Nil
       }
       if (preds.isEmpty) f
-      else f.copy(child = rel.copy(scan = scan.withElementPreds(preds.toArray)))
+      else f.copy(child = rel.copy(table = table.withElementPreds(preds.toArray)))
   }
 }
 
-/** Session wiring for graft's extra Catalyst rules. `ensure` is idempotent
-  * and cheap; `GraftDataSource.getTable` calls it, so every graft read gets
-  * the rules without configuring `spark.sql.extensions` up front. Table
-  * functions never reach `getTable` and call it themselves.
+/** graft's Catalyst pieces — SQL functions, table functions, the DML
+  * rewrites, the maintenance planner strategy and element pushdown — for
+  * every session. Spark applies each provider named in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`
+  * to every session it builds (`newSession()` clones included), so graft
+  * on the classpath is the whole setup: no conf, no earlier graft call.
   */
-object GraftExtensions {
-  def ensure(s: SparkSession): Unit = synchronized {
-    // every graft read lands here: once a session is wired, skip
-    // re-registering its functions (each re-registration also logs a
-    // replacement warning)
-    if (wired(s)) return
-    if (!s.experimental.extraOptimizations.contains(GraftElementPushdown))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ GraftElementPushdown
-    if (!s.experimental.extraOptimizations.contains(GraftUpdateRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ GraftUpdateRewrite
-    if (!s.experimental.extraOptimizations.contains(GraftMergeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ GraftMergeRewrite
-    if (!s.experimental.extraStrategies.contains(GraftMaintenanceStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GraftMaintenanceStrategy
-    registerSqlFunctions(s)
-  }
+class GraftSessionExtensions extends SparkSessionExtensionsProvider {
+  import GraftSessionExtensions._
 
-  private def wired(s: SparkSession): Boolean =
-    Seq(GraftElementPushdown, GraftUpdateRewrite, GraftMergeRewrite)
-      .forall(s.experimental.extraOptimizations.contains) &&
-      s.experimental.extraStrategies.contains(GraftMaintenanceStrategy) &&
-      // registerTableFunctions registers graft_dv last
-      s.sessionState.tableFunctionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dv"))
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    // the DML rules match the analyzed UpdateTable/MergeIntoTable over the
+    // un-scanned relation, so the earliest optimizer hook serves them
+    ext.injectOptimizerRule(_ => GraftUpdateRewrite)
+    ext.injectOptimizerRule(_ => GraftMergeRewrite)
+    // the last rules to see the relation before V2ScanRelationPushDown
+    // builds the scan from it
+    ext.injectPreCBORule(_ => GraftElementPushdown)
+    ext.injectPlannerStrategy(_ => GraftMaintenanceStrategy)
+    sqlFunctions.foreach(ext.injectFunction)
+    tableFunctions.foreach(ext.injectTableFunction)
+  }
+}
+
+object GraftSessionExtensions {
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
   /** Literal-int second argument of a SQL multimodal function (factor /
     * stride) — must be resolvable at registration time, not per row. */
@@ -175,38 +168,56 @@ object GraftExtensions {
       s"$fn: second argument must be an INT literal, got $other")
   }
 
+  private type Injection[B] = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => B)
+
   /** SQL names for the native multimodal expressions, so the pure-SQL
     * surface has the same pipeline: graft_ppm_decode(payload),
     * graft_ppm_resample(payload, factor), graft_ppm_framesample(payload,
-    * stride). Idempotent (re-registration overwrites with an identical
-    * builder).
+    * stride).
     */
-  private def registerSqlFunctions(s: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = s.sessionState.functionRegistry
-    def register(name: String, arity: Int, build: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo("graft.spark.Multimodal", name),
-        exprs => {
+  private def sqlFunctions: Seq[Injection[Expression]] = {
+    def fn(name: String, arity: Int, build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo("graft.spark.Multimodal", name),
+        (exprs: Seq[Expression]) => {
           require(exprs.length == arity, s"$name takes $arity arguments")
           build(exprs)
         })
-    register("graft_ppm_decode", 1, es => PpmDecode(es.head))
-    register("graft_ppm_resample", 2,
-      es => PpmResample(es.head, litInt(es(1), "graft_ppm_resample")))
-    register("graft_ppm_framesample", 2,
-      es => PpmFrameSample(es.head, litInt(es(1), "graft_ppm_framesample")))
-    register("graft_wav_decode", 1, es => WavDecode(es.head))
-    register("graft_ppm_dhash", 1, es => PpmDHash(es.head))
-    register("graft_ppm_frame_dhashes", 1, es => PpmFrameDHashes(es.head))
-    register("graft_wav_fingerprint", 1, es => WavFingerprint(es.head))
-    // native integer vector kernels (VecOps) — the embedding-pipeline hot
-    // path, exposed to pure-SQL users as well
-    register("graft_long_dot", 2, es => LongDot(es.head, es(1)))
-    register("graft_long_norm_sq", 1, es => LongSelfDot(es.head))
-    register("graft_long_l2", 2, es => LongL2(es.head, es(1)))
-    registerTableFunctions(s)
+    Seq(
+      fn("graft_ppm_decode", 1, es => PpmDecode(es.head)),
+      fn("graft_ppm_resample", 2,
+        es => PpmResample(es.head, litInt(es(1), "graft_ppm_resample"))),
+      fn("graft_ppm_framesample", 2,
+        es => PpmFrameSample(es.head, litInt(es(1), "graft_ppm_framesample"))),
+      fn("graft_wav_decode", 1, es => WavDecode(es.head)),
+      fn("graft_ppm_dhash", 1, es => PpmDHash(es.head)),
+      fn("graft_ppm_frame_dhashes", 1, es => PpmFrameDHashes(es.head)),
+      fn("graft_wav_fingerprint", 1, es => WavFingerprint(es.head)),
+      // native integer vector kernels (VecOps) — the embedding-pipeline hot
+      // path, exposed to pure-SQL users as well
+      fn("graft_long_dot", 2, es => LongDot(es.head, es(1))),
+      fn("graft_long_norm_sq", 1, es => LongSelfDot(es.head)),
+      fn("graft_long_l2", 2, es => LongL2(es.head, es(1))))
+  }
+
+  private def litStr(e: Expression, fn: String): String = e match {
+    case Literal(v, StringType) if v != null => v.toString
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument must be a STRING literal, got $other")
+  }
+
+  // the analyzer runs a builder BEFORE constant folding, so a SQL `-5`
+  // arrives as UnaryMinus(5) and `9e18` as a Double literal — accept the
+  // shapes users actually type, not just pre-folded longs
+  private def litLong(e: Expression, fn: String): Long = e match {
+    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
+    case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
+    case Literal(v: Double, org.apache.spark.sql.types.DoubleType)
+        if v.isWhole && v >= Long.MinValue.toDouble && v <= Long.MaxValue.toDouble =>
+      v.toLong
+    case org.apache.spark.sql.catalyst.expressions.UnaryMinus(inner, _) =>
+      -litLong(inner, fn)
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument must be an integral literal, got $other")
   }
 
   /** SQL TABLE functions. `graft_changes(path, since, asof)` exposes the
@@ -216,169 +227,123 @@ object GraftExtensions {
     * [[GraftCdc.changes]] builds, expanded at analysis time into the
     * ordinary windowed scans (all pruning/pushdown applies; the arguments
     * must be literals because the window shapes the PLAN, not a per-row
-    * value).
+    * value). Builders plan against `SparkSession.active`: the session
+    * whose analyzer is expanding the call.
     */
-  private def registerTableFunctions(s: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def litStr(e: Expression, fn: String): String = e match {
-      case Literal(v, StringType) if v != null => v.toString
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument must be a STRING literal, got $other")
-    }
-    // the analyzer runs this builder BEFORE constant folding, so a SQL
-    // `-5` arrives as UnaryMinus(5) and `9e18` as a Double literal —
-    // accept the shapes users actually type, not just pre-folded longs
-    def litLong(e: Expression, fn: String): Long = e match {
-      case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
-      case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
-      case Literal(v: Double, org.apache.spark.sql.types.DoubleType)
-          if v.isWhole && v >= Long.MinValue.toDouble && v <= Long.MaxValue.toDouble =>
-        v.toLong
-      case org.apache.spark.sql.catalyst.expressions.UnaryMinus(inner, _) =>
-        -litLong(inner, fn)
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument must be an integral literal, got $other")
-    }
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_changes"),
-      new ExpressionInfo("graft.spark.GraftCdc", "graft_changes"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3,
-          "graft_changes takes (path STRING, sinceMillis LONG, asofMillis LONG)")
-        // resolve against the INVOKING session, not the one that
-        // registered the builder: newSession()/Thrift clones copy the
-        // registry, and planning through a stale captured session would
-        // silently use its hadoop conf (or fail once it is stopped)
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftCdc.changes(invoking, litStr(exprs.head, "graft_changes"),
-            litLong(exprs(1), "graft_changes"), litLong(exprs(2), "graft_changes"))
-          .queryExecution.logical
-      })
-    // graft_pages(path): per-(file, leaf, page) physical layout — the
-    // GraftStat introspection surfaced to SQL (reads leaf bytes to parse
-    // codec trees; an ops/debugging tool, priced like the library call)
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_pages"),
-      new ExpressionInfo("graft.spark.GraftIntrospect", "graft_pages"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_pages takes (path STRING)")
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftIntrospect.pages(invoking, litStr(exprs.head, "graft_pages"))
-          .queryExecution.logical
-      })
-    // graft_ndv(path, col, ...): footer-synopsis distinct counts (GraftNdv
-    // as SQL) — O(files) tail reads, zero data pages
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_ndv"),
-      new ExpressionInfo("graft.spark.GraftIntrospect", "graft_ndv"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length >= 2,
-          "graft_ndv takes (path STRING, col STRING, ...)")
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftIntrospect.ndv(invoking, litStr(exprs.head, "graft_ndv"),
-            exprs.tail.map(litStr(_, "graft_ndv")))
-          .queryExecution.logical
-      })
-    // graft_partitions(path): per-partition files/bytes/rows/dv_masked —
-    // the which-partition-needs-compaction report, O(files) footer reads
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_partitions"),
-      new ExpressionInfo("graft.spark.GraftIntrospect", "graft_partitions"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_partitions takes (path STRING)")
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftIntrospect.partitions(invoking,
-            litStr(exprs.head, "graft_partitions"))
-          .queryExecution.logical
-      })
-    // graft_history(path): the commit history (DESCRIBE HISTORY analog)
-    // — version-log driven, so ordinals match VERSION AS OF exactly
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_history"),
-      new ExpressionInfo("graft.spark.GraftIntrospect", "graft_history"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_history takes (path STRING)")
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftIntrospect.history(invoking, litStr(exprs.head, "graft_history"))
-          .queryExecution.logical
-      })
+  private def tableFunctions: Seq[Injection[LogicalPlan]] = {
+    // a TVF that expands to a DataFrame built by the library
+    def view(name: String, cls: String, usage: String, arity: Int => Boolean)(
+        build: (SparkSession, Seq[Expression]) => org.apache.spark.sql.DataFrame) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name),
+        (exprs: Seq[Expression]) => {
+          require(arity(exprs.length), s"$name takes $usage")
+          build(SparkSession.active, exprs).queryExecution.logical
+        })
     // CALL-style lifecycle ops (the OPTIMIZE/VACUUM audience): each
     // expands to a GraftMaintenanceCall leaf whose side effect runs at
     // EXECUTION time (see GraftMaintSql) and returns (op, metric, value)
     // stat rows — a pure-SQL user can now run the whole lifecycle.
-    def registerCall(name: String, op: String,
-        build: Seq[Expression] => (Seq[String], Seq[Long]),
-        usage: String): Unit =
-      s.sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name),
+    def call(name: String, op: String,
+        build: Seq[Expression] => (Seq[String], Seq[Long]), usage: String) =
+      (FunctionIdentifier(name),
         new ExpressionInfo("graft.spark.GraftMaintenanceCall", name),
         (exprs: Seq[Expression]) => {
           val (strs, longs) =
             try build(exprs)
             catch { case e: MatchError =>
               throw new IllegalArgumentException(s"$name takes $usage", e) }
-          GraftMaintenanceCall(op, litStr(exprs.head, name), strs, longs)
+          GraftMaintenanceCall(op, litStr(exprs.head, name), strs, longs): LogicalPlan
         })
-    registerCall("graft_compact", "compact",
-      { case Seq(_, n) => (Nil, Seq(litLong(n, "graft_compact"))) },
-      "(path STRING, targetFiles LONG)")
-    registerCall("graft_zorder", "zorder",
-      { case Seq(_, cols, n) =>
-        (litStr(cols, "graft_zorder").split(",").map(_.trim).toSeq,
-          Seq(litLong(n, "graft_zorder"))) },
-      "(path STRING, colsCsv STRING, targetFiles LONG)")
-    registerCall("graft_vacuum", "vacuum",
-      { case Seq(_, cutoff) => (Nil, Seq(litLong(cutoff, "graft_vacuum"))) },
-      "(path STRING, olderThanMs LONG)")
-    registerCall("graft_expire_manifests", "expire_manifests",
-      { case Seq(_, cutoff) =>
-        (Nil, Seq(litLong(cutoff, "graft_expire_manifests"))) },
-      "(path STRING, olderThanMs LONG)")
-    registerCall("graft_restore", "restore",
-      { case Seq(_, v) => (Nil, Seq(litLong(v, "graft_restore"))) },
-      "(path STRING, version LONG)")
-    registerCall("graft_restore_ts", "restore_ts",
-      { case Seq(_, t) => (Nil, Seq(litLong(t, "graft_restore_ts"))) },
-      "(path STRING, asofMillis LONG)")
-    // backfill DECLARED per-page stats (TBLPROPERTIES graft.bloomfilter /
-    // graft.ndvsketch) onto files that predate the declaration: footers
-    // decide membership, only stat-less files rewrite (O(missing files))
-    registerCall("graft_analyze", "analyze",
-      { case Seq(_) => (Nil, Nil) },
-      "(path STRING)")
-    registerCall("graft_compact_partition", "compact_partition",
-      { case Seq(_, spec, n) =>
-        (Seq(litStr(spec, "graft_compact_partition")),
-          Seq(litLong(n, "graft_compact_partition"))) },
-      "(path STRING, partitionSpecCsv STRING, targetFiles LONG)")
-    registerCall("graft_vacuum_staged", "vacuum_staged",
-      { case Seq(_, cutoff) =>
-        (Nil, Seq(litLong(cutoff, "graft_vacuum_staged"))) },
-      "(warehousePath STRING, olderThanMs LONG)")
-    // the CDC CONSUMER loop as SQL (graft_changes is the producer half):
-    // sync a keyed derived table from a source's change window — the
-    // whole subscribe-to-takedowns pipeline now runs without a library
-    // call, idempotent per (source, window, target) exactly like the
-    // library form
-    registerCall("graft_apply_changes", "apply_changes",
-      { case Seq(_, since, asof, tgt, key) =>
-        (Seq(litStr(tgt, "graft_apply_changes"),
-          litStr(key, "graft_apply_changes")),
-          Seq(litLong(since, "graft_apply_changes"),
-            litLong(asof, "graft_apply_changes"))) },
-      "(srcPath STRING, sinceMillis LONG, asofMillis LONG, " +
-        "targetPath STRING, keyCol STRING)")
-    // graft_dv(path): deletion-vector sidecar introspection — one row per
-    // generation (ident, gen, publish time, posture, cardinality, current)
-    s.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier("graft_dv"),
-      new ExpressionInfo("graft.spark.GraftIntrospect", "graft_dv"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_dv takes (path STRING)")
-        val invoking = SparkSession.getActiveSession.getOrElse(s)
-        GraftIntrospect.dv(invoking, litStr(exprs.head, "graft_dv"))
-          .queryExecution.logical
-      })
+    val introspect = "graft.spark.GraftIntrospect"
+    Seq(
+      view("graft_changes", "graft.spark.GraftCdc",
+          "(path STRING, sinceMillis LONG, asofMillis LONG)", _ == 3) { (s, es) =>
+        GraftCdc.changes(s, litStr(es.head, "graft_changes"),
+          litLong(es(1), "graft_changes"), litLong(es(2), "graft_changes"))
+      },
+      // graft_pages(path): per-(file, leaf, page) physical layout — the
+      // GraftStat introspection surfaced to SQL (reads leaf bytes to parse
+      // codec trees; an ops/debugging tool, priced like the library call)
+      view("graft_pages", introspect, "(path STRING)", _ == 1) { (s, es) =>
+        GraftIntrospect.pages(s, litStr(es.head, "graft_pages"))
+      },
+      // graft_ndv(path, col, ...): footer-synopsis distinct counts (GraftNdv
+      // as SQL) — O(files) tail reads, zero data pages
+      view("graft_ndv", introspect, "(path STRING, col STRING, ...)", _ >= 2) { (s, es) =>
+        GraftIntrospect.ndv(s, litStr(es.head, "graft_ndv"),
+          es.tail.map(litStr(_, "graft_ndv")))
+      },
+      // graft_partitions(path): per-partition files/bytes/rows/dv_masked —
+      // the which-partition-needs-compaction report, O(files) footer reads
+      view("graft_partitions", introspect, "(path STRING)", _ == 1) { (s, es) =>
+        GraftIntrospect.partitions(s, litStr(es.head, "graft_partitions"))
+      },
+      // graft_history(path): the commit history (DESCRIBE HISTORY analog)
+      // — version-log driven, so ordinals match VERSION AS OF exactly
+      view("graft_history", introspect, "(path STRING)", _ == 1) { (s, es) =>
+        GraftIntrospect.history(s, litStr(es.head, "graft_history"))
+      },
+      // graft_dv(path): deletion-vector sidecar introspection — one row per
+      // generation (ident, gen, publish time, posture, cardinality, current)
+      view("graft_dv", introspect, "(path STRING)", _ == 1) { (s, es) =>
+        GraftIntrospect.dv(s, litStr(es.head, "graft_dv"))
+      },
+      call("graft_compact", "compact",
+        { case Seq(_, n) => (Nil, Seq(litLong(n, "graft_compact"))) },
+        "(path STRING, targetFiles LONG)"),
+      call("graft_zorder", "zorder",
+        { case Seq(_, cols, n) =>
+          (litStr(cols, "graft_zorder").split(",").map(_.trim).toSeq,
+            Seq(litLong(n, "graft_zorder"))) },
+        "(path STRING, colsCsv STRING, targetFiles LONG)"),
+      call("graft_vacuum", "vacuum",
+        { case Seq(_, cutoff) => (Nil, Seq(litLong(cutoff, "graft_vacuum"))) },
+        "(path STRING, olderThanMs LONG)"),
+      call("graft_expire_manifests", "expire_manifests",
+        { case Seq(_, cutoff) =>
+          (Nil, Seq(litLong(cutoff, "graft_expire_manifests"))) },
+        "(path STRING, olderThanMs LONG)"),
+      call("graft_restore", "restore",
+        { case Seq(_, v) => (Nil, Seq(litLong(v, "graft_restore"))) },
+        "(path STRING, version LONG)"),
+      call("graft_restore_ts", "restore_ts",
+        { case Seq(_, t) => (Nil, Seq(litLong(t, "graft_restore_ts"))) },
+        "(path STRING, asofMillis LONG)"),
+      // backfill DECLARED per-page stats (TBLPROPERTIES graft.bloomfilter /
+      // graft.ndvsketch) onto files that predate the declaration: footers
+      // decide membership, only stat-less files rewrite (O(missing files))
+      call("graft_analyze", "analyze",
+        { case Seq(_) => (Nil, Nil) },
+        "(path STRING)"),
+      call("graft_compact_partition", "compact_partition",
+        { case Seq(_, spec, n) =>
+          (Seq(litStr(spec, "graft_compact_partition")),
+            Seq(litLong(n, "graft_compact_partition"))) },
+        "(path STRING, partitionSpecCsv STRING, targetFiles LONG)"),
+      call("graft_vacuum_staged", "vacuum_staged",
+        { case Seq(_, cutoff) =>
+          (Nil, Seq(litLong(cutoff, "graft_vacuum_staged"))) },
+        "(warehousePath STRING, olderThanMs LONG)"),
+      // the CDC CONSUMER loop as SQL (graft_changes is the producer half):
+      // sync a keyed derived table from a source's change window — the
+      // whole subscribe-to-takedowns pipeline now runs without a library
+      // call, idempotent per (source, window, target) exactly like the
+      // library form
+      call("graft_apply_changes", "apply_changes",
+        { case Seq(_, since, asof, tgt, key) =>
+          (Seq(litStr(tgt, "graft_apply_changes"),
+            litStr(key, "graft_apply_changes")),
+            Seq(litLong(since, "graft_apply_changes"),
+              litLong(asof, "graft_apply_changes"))) },
+        "(srcPath STRING, sinceMillis LONG, asofMillis LONG, " +
+          "targetPath STRING, keyCol STRING)"))
   }
+}
+
+/** Kept for callers written when sessions had to be wired by hand: every
+  * session now gets graft's rules and functions from
+  * [[GraftSessionExtensions]], so this does nothing.
+  */
+object GraftExtensions {
+  def ensure(s: SparkSession): Unit = ()
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** SQL-facing introspection frames over the format's metadata utilities —
   * the `graft_pages` / `graft_ndv` table functions' bodies
-  * ([[GraftExtensions]] registers the names). Pure-SQL users get the same
+  * ([[GraftSessionExtensions]] registers the names). Pure-SQL users get the same
   * answers the library APIs ([[graft.format.GraftStat]], [[GraftNdv]])
   * give: per-page codec/size/null layout, and footer-synopsis distinct
   * counts priced at O(files).

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** SQL `UPDATE <graft table> SET ... WHERE ...`, routed into
   * `GraftMaintenance.updateWhere` — the file-scoped in-place rewrite pass
@@ -19,13 +19,9 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
   * with the same end state, so this rule intercepts the ANALYZED
   * `UpdateTable` plan — analysis completes fine for any v2 table; the
   * stock failure is at strategy time — and rewrites it to a runnable
-  * command before planning. By the time user optimizer rules run,
-  * V2ScanRelationPushDown has already turned the relation into a
-  * DataSourceV2ScanRelation, so both shapes are matched. Registered via
-  * `GraftExtensions.ensure` (experimental.extraOptimizations), which the
-  * catalog wires on first table load, so plain
-  * `spark.sql("UPDATE cat.db.t SET ...")` works with zero session
-  * configuration.
+  * command before planning. It runs as an operator-optimization rule
+  * ([[GraftSessionExtensions]]), before V2ScanRelationPushDown, so the
+  * target is still the plain relation.
   *
   * Scope: assignments to top-level columns with subquery-free values and
   * a subquery-free condition (everything `updateWhere` itself can
@@ -55,8 +51,6 @@ object GraftUpdateRewrite extends Rule[LogicalPlan] {
     EliminateSubqueryAliases(plan) match {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
         Some((r.table.asInstanceOf[GraftTable], r))
-      case s: DataSourceV2ScanRelation if s.relation.table.isInstanceOf[GraftTable] =>
-        Some((s.relation.table.asInstanceOf[GraftTable], s.relation))
       case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         // a cached read of the target table: withCachedData swaps the
         // relation for the cache entry before user rules run — the

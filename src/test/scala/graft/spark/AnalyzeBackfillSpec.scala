@@ -16,7 +16,7 @@ class AnalyzeBackfillSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -24,8 +24,6 @@ class AnalyzeBackfillSpec extends AnyFunSuite {
       .config("spark.sql.catalog.anz", "graft.spark.GraftCatalog")
       .config("spark.sql.catalog.anz.warehouse", wh)
       .getOrCreate()
-    GraftExtensions.ensure(s)
-    s
   }
 
   private def conf = spark.sessionState.newHadoopConf()

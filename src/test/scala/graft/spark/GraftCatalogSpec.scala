@@ -626,7 +626,6 @@ class GraftCatalogSpec extends AnyFunSuite {
       "rewritten files must still carry the ndv synopsis")
     // row-level rewrite (DELETE survivor) — the scratch write has no
     // sidecar, so the declared stats must be injected or estimate THROWS
-    GraftExtensions.ensure(spark)
     spark.sql(s"DELETE FROM graftcat.db.bloomc WHERE k = ${present.head}")
     assert(GraftNdv.estimate(spark, dir, Seq("s")).head.estimate > 0,
       "survivor-rewritten files must still carry the ndv synopsis")

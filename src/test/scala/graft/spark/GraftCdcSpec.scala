@@ -273,7 +273,6 @@ class GraftCdcSpec extends AnyFunSuite {
     spark.range(60, 80).selectExpr("id AS k")
       .write.format("graft").mode("append").save(dir)
     GraftMaintenance.deleteWhere(spark, dir, col("k") < 10, changelog = true)
-    GraftExtensions.ensure(spark)
     val got = spark.sql(
       s"SELECT ${GraftCdc.ChangeTypeCol} AS t, k FROM " +
         s"graft_changes('$dir', ${t1}L, ${Long.MaxValue}L)")

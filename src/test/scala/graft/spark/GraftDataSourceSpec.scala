@@ -157,7 +157,6 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .option("bloomfilter", "arr.element,toks.element,m.key,m.value")
       .mode("overwrite").save(gdir)
     df.repartition(3).write.mode("overwrite").parquet(pdir)
-    GraftExtensions.ensure(spark)
     val g = spark.read.format("graft").load(gdir)
     val p = spark.read.parquet(pdir)
 

@@ -12,16 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * without touching a library API.
   */
 class MaintSqlSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.ensure(s)
-    s
-  }
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private def fresh(name: String): String = {
     val dir = s"/tmp/graft-test/maintsql-$name"

@@ -102,7 +102,6 @@ class PartitionMgmtSpec extends AnyFunSuite {
       .head.getLong(0)
     val d1Before = filesIn("d1").size
     assert(d1Before > 1, s"staging must fragment d1, got $d1Before files")
-    GraftExtensions.ensure(spark)
     val stats = spark.sql(
       s"SELECT * FROM graft_compact_partition('$dir', 'day=d1', 1)")
       .collect().map(r => (r.getString(1), r.getLong(2))).toMap

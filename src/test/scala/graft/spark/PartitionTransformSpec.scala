@@ -394,7 +394,6 @@ class PartitionTransformSpec extends AnyFunSuite {
   }
 
   test("graft_compact_partition compacts one derived day") {
-    GraftExtensions.ensure(spark)
     spark.sql("CREATE TABLE tx.evc (id BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (days(ts))")
     (0 until 3).foreach { i =>

@@ -152,7 +152,6 @@ class ReplaceTableSpec extends AnyFunSuite {
 
   test("graft_vacuum_staged skips dirs a pending swap intent references") {
     spark.sql("CREATE TABLE rep.t10 AS SELECT id AS k FROM range(6)")
-    GraftExtensions.ensure(spark)
     val staged = new org.apache.hadoop.fs.Path(wh, ".t10.staged-00c0ffee")
     spark.range(50, 55).selectExpr("id AS k").coalesce(1)
       .write.format("graft").mode("overwrite").save(staged.toString)
@@ -195,7 +194,6 @@ class ReplaceTableSpec extends AnyFunSuite {
 
   test("graft_vacuum_staged sweeps crashed CTAS staging, keeps live dirs") {
     spark.sql("CREATE TABLE rep.t7 AS SELECT id AS k FROM range(4)")
-    GraftExtensions.ensure(spark)
     // a crashed CTAS's staging (driver died before commit/abort) + trash
     val dead = new org.apache.hadoop.fs.Path(wh, ".t7.staged-0ddba11")
     spark.range(0, 5).selectExpr("id AS k").coalesce(1)

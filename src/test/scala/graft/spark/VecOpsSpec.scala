@@ -76,7 +76,6 @@ class VecOpsSpec extends AnyFunSuite {
   }
 
   test("kernels are reachable from pure SQL via registered function names") {
-    GraftExtensions.ensure(spark)
     val r = spark.sql(
       """SELECT graft_long_dot(array(1L,2L,3L), array(4L,5L,6L)) AS d,
         |       graft_long_norm_sq(array(3L,4L)) AS n,

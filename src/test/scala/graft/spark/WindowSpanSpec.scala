@@ -517,18 +517,14 @@ class WindowSpanSpec extends AnyFunSuite {
     val dir = fresh("tvf-lits")
     spark.range(0, 30).selectExpr("id AS k")
       .write.format("graft").mode("append").save(dir)
-    GraftExtensions.ensure(spark)
     // 9e18 arrives as a Double literal, -1 as UnaryMinus — both must parse
     val n = spark.sql(
       s"SELECT count(*) FROM graft_changes('$dir', -1, 9e18)")
       .head().getLong(0)
     assert(n == 30, s"got $n")
-    // a sibling session registers its own builder and resolves through
-    // itself (newSession starts from the builtin registry — no function
-    // cloning; the active-session lookup in the builder is defense for
-    // cloneSession-based servers that DO copy registry entries)
+    // a sibling session gets the builder from the session extensions and
+    // plans through itself (the builder resolves SparkSession.active)
     val s2 = spark.newSession()
-    GraftExtensions.ensure(s2)
     val n2 = s2.sql(
       s"SELECT count(*) FROM graft_changes('$dir', -1, 9223372036854775807L)")
       .head().getLong(0)

@@ -52,7 +52,6 @@ class ZoneMapSpec extends AnyFunSuite {
     spark.range(1000).selectExpr("id", "array(id, id + 1) AS arr").coalesce(1)
       .write.format("graft").mode("overwrite").save(dir)
     val fresh = spark.newSession()
-    assert(!fresh.experimental.extraOptimizations.contains(GraftElementPushdown))
     val hit = fresh.read.format("graft").load(dir).filter(array_contains(col("arr"), lit(500L)))
     val plan = hit.queryExecution.executedPlan.toString
     assert(plan.contains("element["), "element predicate missing from the scan description:\n" + plan)
@@ -68,7 +67,6 @@ class ZoneMapSpec extends AnyFunSuite {
         "array(format_string('w%08d', id), format_string('w%08d', id + 1)) AS toks")
       .orderBy("id").coalesce(1)
       .write.format("graft").mode("overwrite").save(dir)
-    GraftExtensions.ensure(spark)
     val g = spark.read.format("graft").load(dir)
 
     // long-element probe
@@ -230,7 +228,6 @@ class ZoneMapSpec extends AnyFunSuite {
       .write.format("graft")
       .option("bloomfilter", "k,s,toks.element")
       .mode("overwrite").save(dir)
-    GraftExtensions.ensure(spark)
     val g = spark.read.format("graft").load(dir)
 
     // long equality: present value reads ~1 page, absent value reads none
