@@ -33,97 +33,180 @@ object IntCodecs {
     var topValue = 0L
     var topCount = 0
     var sorted = true
+    /** largest adjacent difference of a sorted page (0 if not sorted) */
     var maxDelta = 0L
-    /** a sorted-adjacent difference exceeded Long range (x - prev wrapped
-      * negative) — DeltaBitpack must not run on such a page */
+    /** a sorted page's adjacent difference exceeded Long range (x - prev
+      * wrapped negative) — DeltaBitpack must not run on such a page */
     var deltaOverflow = false
-    var hasNull = false
+    /** the counting table of an unsorted page, kept for Dict encode */
+    private[format] var table: ValueTable = null
+  }
+
+  /** Per-page value -> count table. A page whose max - min is below 2n
+    * (dates, small ints, Dict index frames) addresses slot x - min
+    * directly; any other page hashes into a power-of-two table ≥ 2n with
+    * linear probing.
+    */
+  private[format] final class ValueTable(n: Int, val min: Long, range: Long) {
+    val direct: Boolean = range >= 0 && range < 2L * n
+    private val bits = if (direct) 0 else tableBits(n)
+    private val shift = 64 - bits
+    private val mask = (1 << bits) - 1
+    val counts = new Array[Int](if (direct) range.toInt + 1 else 1 << bits)
+    val keys: Array[Long] = if (direct) null else new Array[Long](counts.length)
+
+    @inline def slot(x: Long): Int =
+      if (direct) (x - min).toInt
+      else {
+        var h = slotOf(x, shift)
+        while (counts(h) != 0 && keys(h) != x) h = (h + 1) & mask
+        h
+      }
   }
 
   /** Fill null slots with the last non-null value (0 before the first). */
-  def effectiveValues(vec: Vec, from: Int, until: Int, lane: Int): (Array[Long], Boolean) = {
+  def effectiveValues(vec: Vec, from: Int, until: Int, lane: Int): Array[Long] = {
     val n = until - from
     val out = new Array[Long](n)
     val nulls = vec.nulls
-    var hasNull = false
     var last = 0L
     var i = 0
     lane match {
       case Lane.I64 =>
         val v = vec.asInstanceOf[LongVec].values
         while (i < n) {
-          if (nulls != null && nulls(from + i)) { hasNull = true; out(i) = last }
-          else { last = v(from + i); out(i) = last }
+          if (nulls == null || !nulls(from + i)) last = v(from + i)
+          out(i) = last
           i += 1
         }
       case Lane.F32 =>
         val v = vec.asInstanceOf[FloatVec].values
         while (i < n) {
-          if (nulls != null && nulls(from + i)) { hasNull = true; out(i) = last }
-          else { last = java.lang.Float.floatToRawIntBits(v(from + i)).toLong & 0xffffffffL; out(i) = last }
+          if (nulls == null || !nulls(from + i))
+            last = java.lang.Float.floatToRawIntBits(v(from + i)).toLong & 0xffffffffL
+          out(i) = last
           i += 1
         }
       case Lane.F64 =>
         val v = vec.asInstanceOf[DoubleVec].values
         while (i < n) {
-          if (nulls != null && nulls(from + i)) { hasNull = true; out(i) = last }
-          else { last = java.lang.Double.doubleToRawLongBits(v(from + i)); out(i) = last }
+          if (nulls == null || !nulls(from + i)) last = java.lang.Double.doubleToRawLongBits(v(from + i))
+          out(i) = last
           i += 1
         }
       case _ =>
         val v = vec.asInstanceOf[IntVec].values
         while (i < n) {
-          if (nulls != null && nulls(from + i)) { hasNull = true; out(i) = last }
-          else { last = v(from + i).toLong; out(i) = last }
+          if (nulls == null || !nulls(from + i)) last = v(from + i).toLong
+          out(i) = last
           i += 1
         }
     }
-    (out, hasNull)
+    out
   }
 
-  /** One-pass stats over effective values (exact distinct/top via open
-    * addressing; page-sized inputs keep this cheap).
+  /** Fibonacci-hashing multiplier (2^64 / golden ratio, odd). */
+  private final val HashMul = -7046029254386353131L
+
+  /** Open-addressing slot of `x` in a table of 2^(64 - shift) slots: the
+    * HIGH bits of x * HashMul, which depend on every bit of x (the low bits
+    * of a product only see the low bits of x, and integer-valued doubles
+    * have none set).
+    */
+  @inline private[format] def slotOf(x: Long, shift: Int): Int = ((x * HashMul) >>> shift).toInt
+
+  /** Table size for a page of `n` values: a power of two ≥ 2n, so linear
+    * probing stays at load ≤ 1/2.
+    */
+  @inline private[format] def tableBits(n: Int): Int =
+    32 - Integer.numberOfLeadingZeros(math.max(4, n * 2) - 1)
+
+  /** Exact page statistics in two passes over effective values: order
+    * statistics (min/max, runs, sortedness) first, then the counts. A
+    * sorted page holds each value in one run, so its distinct and top
+    * counts come from the runs, alongside its deltas; any other page counts
+    * in a [[ValueTable]]. The top value is the first value to reach the
+    * highest count. Hot loops avoid branches on random data.
     * Reference analogue: `gen_stats`, integer/mod.rs:164-229.
     */
   def computeStats(v: Array[Long]): Stats = {
     val n = v.length
     val s = new Stats(n)
     if (n == 0) { s.min = 0; s.max = 0; return s }
-    // open addressing map value -> count
-    var cap = Integer.highestOneBit(math.max(4, n * 2) - 1) << 1
-    val keys = new Array[Long](cap)
-    val cnts = new Array[Int](cap)
-    val mask = cap - 1
-    var i = 0
-    var prev = 0L
+    var min = v(0)
+    var max = v(0)
+    var runs = 1
+    var sorted = true
+    var prev = v(0)
+    var i = 1
     while (i < n) {
       val x = v(i)
-      if (x < s.min) s.min = x
-      if (x > s.max) s.max = x
-      if (i == 0) s.runCount = 1
-      else {
-        if (x != prev) s.runCount += 1
-        if (x < prev) s.sorted = false
-        else {
-          val d = x - prev
-          if (d < 0) s.deltaOverflow = true // wrapped: true delta > Long.MaxValue
-          else if (d > s.maxDelta) s.maxDelta = d
-        }
-      }
+      if (x < min) min = x
+      if (x > max) max = x
+      val t = x ^ prev
+      runs += ((t | -t) >>> 63).toInt // +1 iff x != prev
+      sorted &= x >= prev
       prev = x
-      // hash insert (h != 0 sentinel trick: use cnts==0 as empty)
-      var h = (java.lang.Long.hashCode(x * -7046029254386353131L)) & mask
-      var done = false
-      while (!done) {
-        if (cnts(h) == 0) { keys(h) = x; cnts(h) = 1; s.uniqueCount += 1; done = true }
-        else if (keys(h) == x) {
-          cnts(h) += 1
-          done = true
-        } else h = (h + 1) & mask
-      }
-      if (cnts(h) > s.topCount) { s.topCount = cnts(h); s.topValue = keys(h) }
       i += 1
     }
+    s.min = min; s.max = max; s.runCount = runs; s.sorted = sorted
+
+    var top = 1
+    var topValue = v(0)
+    if (sorted) {
+      var maxDelta = 0L
+      var overflow = false
+      var run = 1
+      i = 1
+      while (i < n) {
+        val d = v(i) - v(i - 1)
+        overflow |= d < 0 // wrapped: true delta > Long.MaxValue
+        if (d > maxDelta) maxDelta = d
+        run = if (d == 0) run + 1 else 1
+        if (run > top) { top = run; topValue = v(i) }
+        i += 1
+      }
+      s.maxDelta = maxDelta
+      s.deltaOverflow = overflow
+      s.uniqueCount = runs
+    } else {
+      val t = new ValueTable(n, min, max - min)
+      val counts = t.counts
+      var unique = 0
+      top = 0
+      i = 0
+      if (t.direct) while (i < n) {
+        // branch-free: direct pages are mostly low-cardinality, where the
+        // top changes too often for a branch to predict
+        val x = v(i)
+        val h = (x - min).toInt
+        val c = counts(h) + 1
+        counts(h) = c
+        unique += (c - 2) >>> 31 // +1 iff c == 1
+        val m = (top - c) >> 31 // -1 iff c > top
+        top += (c - top) & m
+        topValue ^= (topValue ^ x) & m.toLong
+        i += 1
+      } else {
+        // hashed pages are mostly high-cardinality: the top rarely changes
+        // and its branch predicts well
+        val keys = t.keys
+        while (i < n) {
+          val x = v(i)
+          val h = t.slot(x)
+          keys(h) = x
+          val c = counts(h) + 1
+          counts(h) = c
+          unique += (c - 2) >>> 31
+          if (c > top) { top = c; topValue = x }
+          i += 1
+        }
+      }
+      s.uniqueCount = unique
+      s.table = t
+    }
+    s.topCount = top
+    s.topValue = topValue
     s
   }
 
@@ -149,7 +232,7 @@ object IntCodecs {
       case Some(c) if !Codec.isCommon(c) && allowed(c) =>
         val feasible = c match {
           case Codec.Bitpack => s.max - s.min >= 0 // range within u64: any bit width packs
-          case Codec.DeltaBitpack => s.sorted && !s.hasNull && !s.deltaOverflow
+          case Codec.DeltaBitpack => s.sorted && !s.deltaOverflow
           case Codec.Patas => false // float lanes handle Patas before delegating here
           case _ => true
         }
@@ -238,7 +321,7 @@ object IntCodecs {
       val range = s.max - s.min
       if (range >= 0)
         consider(Codec.Bitpack, 9L + packedBytes(n, bitsFor(range)))
-      if (s.sorted && !s.hasNull && !s.deltaOverflow)
+      if (s.sorted && !s.deltaOverflow)
         consider(Codec.DeltaBitpack, 9L + packedBytes(n, bitsFor(s.maxDelta)))
     }
     (bestCodec, bestSize)
@@ -276,27 +359,26 @@ object IntCodecs {
         out.patchIntLE(rcPos, runs)
 
       case Codec.Dict =>
-        // interning pass preserving first-seen order
-        val cap = Integer.highestOneBit(math.max(4, s.uniqueCount * 2) - 1) << 1
-        val mask = cap - 1
-        val hkeys = new Array[Long](cap)
-        val hvals = new Array[Int](cap)
-        java.util.Arrays.fill(hvals, -1)
+        // dictionary in first-seen order: a sorted page's runs, else
+        // indexed through the stats table
         val dict = new Array[Long](s.uniqueCount)
         var dictN = 0
         val indices = new Array[Long](n)
         var i = 0
-        while (i < n) {
-          val x = v(i)
-          var h = (java.lang.Long.hashCode(x * -7046029254386353131L)) & mask
-          var idx = -1
-          while (idx < 0) {
-            if (hvals(h) < 0) { hkeys(h) = x; hvals(h) = dictN; dict(dictN) = x; dictN += 1; idx = hvals(h) }
-            else if (hkeys(h) == x) idx = hvals(h)
-            else h = (h + 1) & mask
-          }
-          indices(i) = idx.toLong
+        val t = s.table
+        if (t == null) while (i < n) {
+          if (i == 0 || v(i) != v(i - 1)) { dict(dictN) = v(i); dictN += 1 }
+          indices(i) = dictN - 1
           i += 1
+        } else {
+          val ids = new Array[Int](t.counts.length) // per slot: dictionary index + 1
+          while (i < n) {
+            val x = v(i)
+            val h = t.slot(x)
+            if (ids(h) == 0) { dict(dictN) = x; dictN += 1; ids(h) = dictN }
+            indices(i) = ids(h) - 1
+            i += 1
+          }
         }
         out.putIntLE(dictN)
         i = 0
@@ -395,12 +477,18 @@ object IntCodecs {
     }
   }
 
+  private[format] def corrupt(msg: String) = new java.io.IOException(s"graft: corrupt page: $msg")
+
   /** Decode a codec-framed integer body (cursor at frame start). */
   def readFrame(cur: ByteCursor, n: Int, width: Int): Array[Long] = {
     val codec = cur.getByte().toByte
     val clen = cur.getIntLE()
     val rawLen = cur.getIntLE()
+    if (clen < 0 || clen > cur.arr.length - cur.pos)
+      throw corrupt(s"frame length $clen exceeds the ${cur.arr.length - cur.pos} bytes left")
     if (Codec.isCommon(codec)) {
+      if (rawLen.toLong != n.toLong * width)
+        throw corrupt(s"plain frame of $rawLen bytes for $n values of width $width")
       val plain = new Array[Byte](rawLen)
       BlockCompression.decompress(codec, cur.arr, cur.pos, clen, plain, 0, rawLen)
       cur.skip(clen)
@@ -422,6 +510,8 @@ object IntCodecs {
     */
   def readSpecial(codec: Byte, cur: ByteCursor, n: Int, width: Int, clen: Int,
       out0: Array[Long] = null): Array[Long] = {
+    if (clen < 0 || clen > cur.arr.length - cur.pos)
+      throw corrupt(s"frame length $clen exceeds the ${cur.arr.length - cur.pos} bytes left")
     val end = cur.pos + clen
     val out = if (out0 != null && out0.length >= n) out0 else new Array[Long](n)
     def getValue(): Long = width match {
@@ -436,23 +526,34 @@ object IntCodecs {
         java.util.Arrays.fill(out, 0, n, v)
       case Codec.Rle =>
         val runs = cur.getIntLE()
+        if (runs < 0 || runs.toLong * (4 + width) > clen - 4L)
+          throw corrupt(s"rle run count $runs does not fit $clen bytes")
         var pos = 0
         var r = 0
         while (r < runs) {
           val cnt = cur.getIntLE()
+          if (cnt < 0 || cnt > n - pos) throw corrupt(s"rle run of $cnt at value $pos of $n")
           val v = getValue()
           java.util.Arrays.fill(out, pos, pos + cnt, v)
           pos += cnt
           r += 1
         }
+        if (pos != n) throw corrupt(s"rle runs cover $pos of $n values")
       case Codec.Dict =>
         val dictN = cur.getIntLE()
+        if (dictN < 0 || dictN.toLong * width > clen - 4L)
+          throw corrupt(s"dict size $dictN does not fit $clen bytes")
         val dict = new Array[Long](dictN)
         var i = 0
         while (i < dictN) { dict(i) = getValue(); i += 1 }
         val idx = readFrame(cur, n, 4)
         i = 0
-        while (i < n) { out(i) = dict(idx(i).toInt); i += 1 }
+        while (i < n) {
+          val k = idx(i)
+          if (k < 0 || k >= dictN) throw corrupt(s"dict index $k of $dictN entries")
+          out(i) = dict(k.toInt)
+          i += 1
+        }
       case Codec.Freq =>
         val top = getValue()
         val ex = cur.getIntLE()

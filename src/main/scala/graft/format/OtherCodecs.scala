@@ -138,55 +138,144 @@ object FloatCodecs {
   */
 object BinaryCodecs {
 
-  def tryWrite(vec: BinaryVec, from: Int, until: Int, opts: WriteOptions,
-      out: ByteBuf): Boolean = {
-    val n = until - from
-    if (n == 0) return false
-    val nulls = vec.nulls
+  /** A binary page interned by content. Null slots carry the last non-null
+    * value (empty before the first). Each distinct value d < unique gets
+    * an index in first-seen order and keeps the slice of its first row;
+    * `ids` maps rows to indices.
+    */
+  final class Interned(val bytes: Array[Byte], val n: Int, val ids: Array[Int], val unique: Int,
+      val start: Array[Int], val end: Array[Int], val count: Array[Int],
+      /** some non-null row holds the value (the zone map covers only these) */
+      val live: Array[Boolean],
+      /** the first value to reach the highest count */
+      val topId: Int) {
+    def topCount: Int = count(topId)
+    /** summed bytes of every row's value */
+    val totalBytes: Long = {
+      var t = 0L; var d = 0
+      while (d < unique) { t += count(d).toLong * length(d); d += 1 }
+      t
+    }
+    @inline def length(d: Int): Int = end(d) - start(d)
+    def compare(a: Int, b: Int): Int =
+      java.util.Arrays.compareUnsigned(bytes, start(a), end(a), bytes, start(b), end(b))
+    def prefix(d: Int, maxLen: Int): Array[Byte] =
+      java.util.Arrays.copyOfRange(bytes, start(d), start(d) + math.min(length(d), maxLen))
+  }
 
-    // effective slots: null -> last non-null (empty before first)
-    val effStart = new Array[Int](n)
-    val effEnd = new Array[Int](n)
-    var lastS = 0
-    var lastE = 0
+  /** Content hash of bytes[s, e), eight bytes per step. */
+  private def hashSlice(lw: java.nio.ByteBuffer, bytes: Array[Byte], s: Int, e: Int): Long = {
+    var h = (e - s).toLong
+    var p = s
+    while (p + 8 <= e) { h = (h ^ lw.getLong(p)) * 0x9E3779B97F4A7C15L; p += 8 }
+    var tail = 0L
+    while (p < e) { tail = (tail << 8) | (bytes(p) & 0xffL); p += 1 }
+    h = (h ^ tail) * 0x9E3779B97F4A7C15L
+    h ^ (h >>> 29)
+  }
+
+  /** bytes[s1, e1) == bytes[s2, e2); short slices (flags, codes) skip the
+    * range-checked library call. */
+  @inline private def sameBytes(bytes: Array[Byte], s1: Int, e1: Int, s2: Int, e2: Int): Boolean = {
+    val len = e1 - s1
+    if (len != e2 - s2) false
+    else if (len > 16) java.util.Arrays.equals(bytes, s1, e1, bytes, s2, e2)
+    else {
+      var k = 0
+      while (k < len && bytes(s1 + k) == bytes(s2 + k)) k += 1
+      k == len
+    }
+  }
+
+  /** Intern rows [from, until) of `vec` in one open-addressing table keyed
+    * by content (hash, then byte equality). Counts and the top value come
+    * after the row loop from the row indices and each value's last row: the
+    * first value to reach the highest count is, among the values with that
+    * count, the one whose last row comes first.
+    */
+  def intern(vec: BinaryVec, from: Int, until: Int): Interned = {
+    val n = until - from
+    val bytes = vec.bytes
+    val offs = vec.offsets
+    val nulls = vec.nulls
+    val lw = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val bits = IntCodecs.tableBits(n)
+    val shift = 64 - bits
+    val mask = (1 << bits) - 1
+    val slots = new Array[Int](1 << bits) // value index + 1; 0 = empty
+    val hashes = new Array[Long](1 << bits)
+    val ids = new Array[Int](n)
+    // per value, growing with the distinct count
+    var start = new Array[Int](math.min(n, 64))
+    var end = new Array[Int](start.length)
+    var last = new Array[Int](start.length)
+    var live = new Array[Boolean](start.length)
+    var unique = 0
+    var s = 0
+    var e = 0
     var i = 0
     while (i < n) {
-      if (nulls != null && nulls(from + i)) { effStart(i) = lastS; effEnd(i) = lastE }
-      else {
-        lastS = vec.offsets(from + i); lastE = vec.offsets(from + i + 1)
-        effStart(i) = lastS; effEnd(i) = lastE
-      }
+      val isNull = nulls != null && nulls(from + i)
+      // a null row repeats the previous row's value: same index
+      val d =
+        if (isNull && i > 0) ids(i - 1)
+        else {
+          if (!isNull) { s = offs(from + i); e = offs(from + i + 1) }
+          val hv = hashSlice(lw, bytes, s, e)
+          var h = IntCodecs.slotOf(hv, shift)
+          var found = -1
+          while (found < 0 && slots(h) != 0) {
+            val c = slots(h) - 1
+            if (hashes(h) == hv && sameBytes(bytes, s, e, start(c), end(c))) found = c
+            else h = (h + 1) & mask
+          }
+          if (found >= 0) found
+          else {
+            if (unique == start.length) {
+              val cap = math.min(n, 2 * unique)
+              start = java.util.Arrays.copyOf(start, cap)
+              end = java.util.Arrays.copyOf(end, cap)
+              last = java.util.Arrays.copyOf(last, cap)
+              live = java.util.Arrays.copyOf(live, cap)
+            }
+            start(unique) = s
+            end(unique) = e
+            unique += 1
+            slots(h) = unique
+            hashes(h) = hv
+            unique - 1
+          }
+        }
+      ids(i) = d
+      if (!isNull) live(d) = true
+      last(d) = i
       i += 1
     }
-
-    // stats: unique interning via String keys (page-sized input)
-    val counts = new java.util.HashMap[String, Array[Int]]() // value -> (count, firstSeenIdx)
-    val indices = new Array[Long](n)
-    val dictOrder = new scala.collection.mutable.ArrayBuffer[(Int, Int)]() // (start,end) first-seen
-    var topCount = 0
-    var topIdx = 0
+    val count = new Array[Int](unique)
     i = 0
-    while (i < n) {
-      val key = new String(vec.bytes, effStart(i), effEnd(i) - effStart(i), "ISO-8859-1")
-      var e = counts.get(key)
-      if (e == null) {
-        e = Array(0, dictOrder.length)
-        counts.put(key, e)
-        dictOrder += ((effStart(i), effEnd(i)))
-      }
-      e(0) += 1
-      indices(i) = e(1).toLong
-      if (e(0) > topCount) { topCount = e(0); topIdx = e(1) }
-      i += 1
+    while (i < n) { count(ids(i)) += 1; i += 1 }
+    var topId = 0
+    var d = 1
+    while (d < unique) {
+      val c = count(d)
+      if (c > count(topId) || (c == count(topId) && last(d) < last(topId))) topId = d
+      d += 1
     }
-    val unique = dictOrder.length
-    val totalBytes = {
-      var s = 0L; var k = 0
-      while (k < n) { s += effEnd(k) - effStart(k); k += 1 }
+    new Interned(bytes, n, ids, unique, start, end, count, live, topId)
+  }
+
+  def tryWrite(p: Interned, opts: WriteOptions, out: ByteBuf): Boolean = {
+    val n = p.n
+    if (n == 0) return false
+    val unique = p.unique
+    val topIdx = p.topId
+    val topCount = p.topCount
+    val plainSize = 4L * (n + 1) + p.totalBytes
+    val dictBytes = {
+      var s = 0L; var d = 0
+      while (d < unique) { s += p.length(d); d += 1 }
       s
     }
-    val plainSize = 4L * (n + 1) + totalBytes
-    val dictBytes = dictOrder.map(e => (e._2 - e._1).toLong).sum
 
     val forced = opts.forcedCodec
     def pick(): Byte = {
@@ -207,11 +296,8 @@ object BinaryCodecs {
           if (sz < bestSize) { best = Codec.Dict; bestSize = sz }
         }
         if (topCount >= n * 0.9) {
-          val d = dictOrder(topIdx)
-          var exBytes = 0L
-          var k = 0
-          while (k < n) { if (indices(k) != topIdx) exBytes += effEnd(k) - effStart(k); k += 1 }
-          val sz = 4L + (d._2 - d._1) + 8 + (n - topCount).toLong * 6 + 16 + exBytes
+          val exBytes = p.totalBytes - topCount.toLong * p.length(topIdx)
+          val sz = 4L + p.length(topIdx) + 8 + (n - topCount).toLong * 6 + 16 + exBytes
           if (sz < bestSize) { best = Codec.Freq; bestSize = sz }
         }
       }
@@ -226,24 +312,27 @@ object BinaryCodecs {
     val start = out.length
     codec match {
       case Codec.OneValue =>
-        val (s0, e0) = if (unique >= 1) dictOrder(0) else (0, 0)
-        out.putIntLE(e0 - s0)
-        out.putBytes(vec.bytes, s0, e0 - s0)
+        out.putIntLE(p.length(0))
+        out.putBytes(p.bytes, p.start(0), p.length(0))
       case Codec.Dict =>
         out.putIntLE(unique)
         var off = 0
         out.putIntLE(0)
-        dictOrder.foreach { case (s0, e0) => off += e0 - s0; out.putIntLE(off) }
-        dictOrder.foreach { case (s0, e0) => out.putBytes(vec.bytes, s0, e0 - s0) }
+        var d = 0
+        while (d < unique) { off += p.length(d); out.putIntLE(off); d += 1 }
+        d = 0
+        while (d < unique) { out.putBytes(p.bytes, p.start(d), p.length(d)); d += 1 }
+        val indices = new Array[Long](n)
+        var i = 0
+        while (i < n) { indices(i) = p.ids(i).toLong; i += 1 }
         IntCodecs.writeFrame(indices, n, 4, opts, 1L << Codec.Dict, out)
       case Codec.Freq =>
-        val (ts, te) = dictOrder(topIdx)
-        out.putIntLE(te - ts)
-        out.putBytes(vec.bytes, ts, te - ts)
+        out.putIntLE(p.length(topIdx))
+        out.putBytes(p.bytes, p.start(topIdx), p.length(topIdx))
         val rb = new RoaringBitmap()
         var ex = 0
-        i = 0
-        while (i < n) { if (indices(i) != topIdx) { rb.add(i); ex += 1 }; i += 1 }
+        var i = 0
+        while (i < n) { if (p.ids(i) != topIdx) { rb.add(i); ex += 1 }; i += 1 }
         out.putIntLE(ex)
         rb.runOptimize()
         val bos = new java.io.ByteArrayOutputStream()
@@ -256,18 +345,62 @@ object BinaryCodecs {
         out.putIntLE(0)
         i = 0
         while (i < n) {
-          if (indices(i) != topIdx) { off += effEnd(i) - effStart(i); out.putIntLE(off) }
+          if (p.ids(i) != topIdx) { off += p.length(p.ids(i)); out.putIntLE(off) }
           i += 1
         }
         i = 0
         while (i < n) {
-          if (indices(i) != topIdx) out.putBytes(vec.bytes, effStart(i), effEnd(i) - effStart(i))
+          val d = p.ids(i)
+          if (d != topIdx) out.putBytes(p.bytes, p.start(d), p.length(d))
           i += 1
         }
     }
     out.patchIntLE(lenPos, out.length - start)
     out.patchIntLE(lenPos + 4, plainSize.toInt)
     true
+  }
+
+  /** A Dict page's dictionary, in place: entry d is the page bytes
+    * [base + offs(d), base + offs(d + 1)); `ids` holds each row's entry.
+    */
+  final class Dict(val offs: Array[Int], val base: Int, val ids: Array[Long]) {
+    @inline def size: Int = offs.length - 1
+    @inline def length(d: Int): Int = offs(d + 1) - offs(d)
+  }
+
+  /** Parse a Dict payload (cursor after the frame header) and check it: the
+    * dictionary offsets must not decrease and must stay inside the payload,
+    * and every index must name an entry.
+    */
+  def readDict(cur: ByteCursor, n: Int, clen: Int): Dict = {
+    val left = cur.arr.length - cur.pos
+    if (clen < 0 || clen > left)
+      throw IntCodecs.corrupt(s"frame length $clen exceeds the $left bytes left")
+    val dictN = cur.getIntLE()
+    if (dictN < 0 || (dictN + 1L) * 4 > clen - 4L)
+      throw IntCodecs.corrupt(s"binary dict size $dictN does not fit $clen bytes")
+    val room = clen - 4 - 4 * (dictN + 1)
+    val offs = new Array[Int](dictN + 1)
+    var prev = 0
+    var i = 0
+    while (i <= dictN) {
+      val o = cur.getIntLE()
+      if (o < prev || o > room)
+        throw IntCodecs.corrupt(s"binary dict offset $o at entry $i (previous $prev, room $room)")
+      offs(i) = o
+      prev = o
+      i += 1
+    }
+    val base = cur.pos
+    cur.skip(offs(dictN))
+    val ids = IntCodecs.readFrame(cur, n, 4)
+    i = 0
+    while (i < n) {
+      val k = ids(i)
+      if (k < 0 || k >= dictN) throw IntCodecs.corrupt(s"dict index $k of $dictN entries")
+      i += 1
+    }
+    new Dict(offs, base, ids)
   }
 
   def read(codec: Byte, cur: ByteCursor, n: Int, nulls: Array[Boolean], clen: Int): BinaryVec = {
@@ -288,23 +421,16 @@ object BinaryCodecs {
         }
         BinaryVec(n, nulls, offs, bytes)
       case Codec.Dict =>
-        val dictN = cur.getIntLE()
-        val dOffs = new Array[Int](dictN + 1)
-        var i = 0
-        while (i <= dictN) { dOffs(i) = cur.getIntLE(); i += 1 }
-        val dictBytes = new Array[Byte](dOffs(dictN))
-        System.arraycopy(cur.arr, cur.pos, dictBytes, 0, dOffs(dictN))
-        cur.skip(dOffs(dictN))
-        val idx = IntCodecs.readFrame(cur, n, 4)
+        val d = readDict(cur, n, clen)
         val offs = new Array[Int](n + 1)
         var total = 0
-        i = 0
-        while (i < n) { total += dOffs(idx(i).toInt + 1) - dOffs(idx(i).toInt); offs(i + 1) = total; i += 1 }
+        var i = 0
+        while (i < n) { total += d.length(d.ids(i).toInt); offs(i + 1) = total; i += 1 }
         val bytes = new Array[Byte](total)
         i = 0
         while (i < n) {
-          val d = idx(i).toInt
-          System.arraycopy(dictBytes, dOffs(d), bytes, offs(i), dOffs(d + 1) - dOffs(d))
+          val k = d.ids(i).toInt
+          System.arraycopy(cur.arr, d.base + d.offs(k), bytes, offs(i), d.length(k))
           i += 1
         }
         BinaryVec(n, nulls, offs, bytes)

@@ -82,11 +82,17 @@ object PageSerializer {
       if (nullCount > 0) BitmapUtil.write(nulls, from, until, out)
     }
 
+    // binary pages are interned once: the zone map and the codec chooser
+    // both work per distinct value
+    val bin = if (lane == Lane.Bin) BinaryCodecs.intern(evec.asInstanceOf[BinaryVec], from, until) else null
+
     // --- stats (zone maps; persisted, unlike the reference — SURVEY §2.2) ---
-    val stats = PageStats.compute(lane, evec, from, until)
+    val stats = if (bin != null) PageStats.binStats(bin) else PageStats.compute(lane, evec, from, until)
 
     // --- value body ---
-    val wrote = SpecialCodecs.tryWrite(lane, evec, from, until, stats, nullCount, opts, out, scratch)
+    val wrote =
+      if (bin != null) BinaryCodecs.tryWrite(bin, opts, out)
+      else SpecialCodecs.tryWrite(lane, evec, from, until, opts, out, scratch)
     if (!wrote) {
       scratch.reset()
       plainEncode(lane, evec, from, until, scratch)
@@ -347,6 +353,8 @@ final case class PageStats(kind: Byte, minLong: Long, maxLong: Long,
     minBin: Array[Byte] = null, maxBin: Array[Byte] = null)
 
 object PageStats {
+  /** Zone map of a non-binary page; binary pages use [[binStats]] over the
+    * page's interned values. */
   def compute(lane: Int, vec: Vec, from: Int, until: Int): PageStats = {
     val nulls = vec.nulls
     lane match {
@@ -384,8 +392,6 @@ object PageStats {
       case Lane.F64 =>
         val v = vec.asInstanceOf[DoubleVec].values
         floatStats(from, until, nulls, i => v(i))
-      case Lane.Bin =>
-        binStats(vec.asInstanceOf[BinaryVec], from, until, nulls)
       case Lane.I128 =>
         // exact 128-bit bounds in the order-preserving byte encoding — they
         // ride the binary (kind 4) zone-map path untruncated
@@ -414,36 +420,25 @@ object PageStats {
     * is ≤ its string in unsigned-lex order), max rounds UP (prefix with its
     * last non-0xFF byte incremented; null if all 0xFF — no finite bound).
     * Sound for UTF-8 strings because Spark compares them as unsigned bytes.
+    * Compares each distinct value that some non-null row holds once.
     */
-  private def binStats(bv: BinaryVec, from: Int, until: Int, nulls: Array[Boolean]): PageStats = {
-    var minI = -1
-    var maxI = -1
-    var i = from
-    while (i < until) {
-      if (nulls == null || !nulls(i)) {
-        if (minI < 0 || cmpAt(bv, i, minI) < 0) minI = i
-        if (maxI < 0 || cmpAt(bv, i, maxI) > 0) maxI = i
+  def binStats(p: BinaryCodecs.Interned): PageStats = {
+    var minD = -1
+    var maxD = -1
+    var d = 0
+    while (d < p.unique) {
+      if (p.live(d)) {
+        if (minD < 0 || p.compare(d, minD) < 0) minD = d
+        if (maxD < 0 || p.compare(d, maxD) > 0) maxD = d
       }
-      i += 1
+      d += 1
     }
-    if (minI < 0) return PageStats(0, 0, 0)
-    val minB = sliceAt(bv, minI, BinStatTrunc)
-    val maxLen = bv.offsets(maxI + 1) - bv.offsets(maxI)
+    if (minD < 0) return PageStats(0, 0, 0)
+    val minB = p.prefix(minD, BinStatTrunc)
     val maxB =
-      if (maxLen <= BinStatTrunc) sliceAt(bv, maxI, BinStatTrunc)
-      else incrementUp(sliceAt(bv, maxI, BinStatTrunc))
+      if (p.length(maxD) <= BinStatTrunc) p.prefix(maxD, BinStatTrunc)
+      else incrementUp(p.prefix(maxD, BinStatTrunc))
     PageStats(4, 0, 0, minB, maxB)
-  }
-
-  @inline private def cmpAt(bv: BinaryVec, a: Int, b: Int): Int =
-    java.util.Arrays.compareUnsigned(
-      bv.bytes, bv.offsets(a), bv.offsets(a + 1),
-      bv.bytes, bv.offsets(b), bv.offsets(b + 1))
-
-  private def sliceAt(bv: BinaryVec, i: Int, maxLen: Int): Array[Byte] = {
-    val off = bv.offsets(i)
-    val len = math.min(bv.offsets(i + 1) - off, maxLen)
-    java.util.Arrays.copyOfRange(bv.bytes, off, off + len)
   }
 
   /** Smallest byte string > every string with this prefix, or null. */

@@ -4,25 +4,27 @@ package graft.format
   * integers: OneValue/Rle/Dict/Freq/Bitpack/DeltaBitpack;
   * floats:   Patas + the integer family over raw bit patterns
   *           (the reference's OrderedFloat trick, double/mod.rs);
-  * binary:   OneValue/Dict/Freq; booleans: OneValue/Rle.
+  * binary:   OneValue/Dict/Freq (over the page interned once by
+  *           [[PageSerializer.writePage]], see [[BinaryCodecs.tryWrite]]);
+  * booleans: OneValue/Rle.
   */
 object SpecialCodecs {
 
-  /** Attempt to encode rows [from,until) with a special codec. Returns true
-    * if a codec-framed body was written to `out`.
+  /** Attempt to encode rows [from,until) of a non-binary lane with a special
+    * codec. Returns true if a codec-framed body was written to `out`.
     */
-  def tryWrite(lane: Int, vec: Vec, from: Int, until: Int, stats: PageStats,
-      nullCount: Int, opts: WriteOptions, out: ByteBuf, scratch: ByteBuf): Boolean = {
+  def tryWrite(lane: Int, vec: Vec, from: Int, until: Int, opts: WriteOptions,
+      out: ByteBuf, scratch: ByteBuf): Boolean = {
     val n = until - from
     if (n == 0) return false
     lane match {
       case Lane.I8 | Lane.I16 | Lane.I32 | Lane.I64 =>
-        val (eff, _) = IntCodecs.effectiveValues(vec, from, until, lane)
+        val eff = IntCodecs.effectiveValues(vec, from, until, lane)
         IntCodecs.tryWrite(eff, n, Lane.width(lane), opts, 0L, out)
 
       case Lane.F32 | Lane.F64 =>
         val width = Lane.width(lane)
-        val (eff, _) = IntCodecs.effectiveValues(vec, from, until, lane)
+        val eff = IntCodecs.effectiveValues(vec, from, until, lane)
         opts.forcedCodec match {
           case Some(Codec.Patas) =>
             FloatCodecs.encode(eff, n, width, out)
@@ -34,7 +36,11 @@ object SpecialCodecs {
             else {
               val s = IntCodecs.computeStats(eff)
               val (intCodec, intSize) = IntCodecs.chooseCodec(s, n, width, 0L)
-              val patasSize = FloatCodecs.estimateSize(eff, n, width)
+              // Patas spends at least one header byte per value, so it
+              // cannot beat an integer codec of at most n bytes: skipping
+              // the estimate there cannot change the choice below
+              val patasSize =
+                if (intSize <= n) Long.MaxValue else FloatCodecs.estimateSize(eff, n, width)
               val plain = n.toLong * width
               // same sampled block-codec cross-check as the int lanes: step
               // aside when the measured block estimate beats both candidates
@@ -52,9 +58,6 @@ object SpecialCodecs {
               } else false
             }
         }
-
-      case Lane.Bin =>
-        BinaryCodecs.tryWrite(vec.asInstanceOf[BinaryVec], from, until, opts, out)
 
       case Lane.Bool =>
         BoolCodecs.tryWrite(vec.asInstanceOf[BoolVec], from, until, opts, out)
@@ -74,7 +77,7 @@ object SpecialCodecs {
           out.putByte(Codec.Wide)
           val lenPos = out.reserve(8)
           val start = out.length
-          val wrote = tryWrite(Lane.I64, inner, from, until, stats, nullCount, opts, out, scratch)
+          val wrote = tryWrite(Lane.I64, inner, from, until, opts, out, scratch)
           if (!wrote) {
             scratch.reset()
             PageSerializer.plainEncode(Lane.I64, inner, from, until, scratch)

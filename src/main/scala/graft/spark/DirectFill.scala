@@ -120,7 +120,7 @@ final class DirectFill(dt: DataType, lane: Int, nullable: Boolean) {
       BlockCompression.decompress(codec, cur.arr, cur.pos, clen, plain, 0, rawLen)
       fromPlain(vector, plain, n)
     } else if (kind == 7 && codec == Codec.Dict) {
-      fillBinDict(vector, cur, n)
+      fillBinDict(vector, cur, n, clen)
     } else if (longLane) {
       val v =
         if (codec == Codec.Patas) FloatCodecs.read(cur, n, clen, ensureLongs(n))
@@ -142,23 +142,19 @@ final class DirectFill(dt: DataType, lane: Int, nullable: Boolean) {
     * dictionary-encoded columns. (Low-cardinality flag/category columns are
     * exactly the ones the adaptive chooser dict-encodes.)
     */
-  private def fillBinDict(vector: WritableColumnVector, cur: ByteCursor, n: Int): Unit = {
-    val dictN = cur.getIntLE()
-    val dOffs = new Array[Int](dictN + 1)
+  private def fillBinDict(vector: WritableColumnVector, cur: ByteCursor, n: Int,
+      clen: Int): Unit = {
+    val d = BinaryCodecs.readDict(cur, n, clen)
+    val entries = new Array[Array[Byte]](d.size)
     var i = 0
-    while (i <= dictN) { dOffs(i) = cur.getIntLE(); i += 1 }
-    val entries = new Array[Array[Byte]](dictN)
-    i = 0
-    while (i < dictN) {
-      entries(i) = java.util.Arrays.copyOfRange(cur.arr, cur.pos + dOffs(i), cur.pos + dOffs(i + 1))
+    while (i < d.size) {
+      entries(i) = java.util.Arrays.copyOfRange(cur.arr, d.base + d.offs(i), d.base + d.offs(i + 1))
       i += 1
     }
-    cur.skip(dOffs(dictN))
-    val idx = IntCodecs.readFrame(cur, n, 4)
     vector.setDictionary(new GraftDictionary(entries))
     val ids = vector.reserveDictionaryIds(n)
     i = 0
-    while (i < n) { ids.putInt(i, idx(i).toInt); i += 1 }
+    while (i < n) { ids.putInt(i, d.ids(i).toInt); i += 1 }
   }
 
   /** Bulk/loop-put a decoded long[] (≥ n entries) by physical kind. */

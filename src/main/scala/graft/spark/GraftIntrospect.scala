@@ -54,7 +54,8 @@ object GraftIntrospect {
     * the `stat` diagnostic.
     */
   final case class FileLayout(file: String, leafNames: Seq[String],
-      footer: graft.format.Footer, leaves: Array[GraftStat.LeafInfo])
+      footer: graft.format.Footer, leaves: Array[GraftStat.LeafInfo],
+      status: org.apache.hadoop.fs.FileStatus)
 
   def describeFiles(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileLayout] = {
     val files = GraftRewriteGuard.adjust(dir, conf,
@@ -69,7 +70,7 @@ object GraftIntrospect {
           GraftSchema.leafSpecs(fd.dataType, fd.nullable)).toArray
         val names = schema.fields.toSeq.flatMap(fd =>
           leafNames(fd.dataType, fd.nullable, fd.name))
-        FileLayout(f.getPath.getName, names, footer, GraftStat.describe(in, footer, specs))
+        FileLayout(f.getPath.getName, names, footer, GraftStat.describe(in, footer, specs), f)
       } finally in.close()
     }
   }

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.{Bench, BenchMaintenance, SparkEntry, Tables}
-import graft.spark.GraftIntrospect
+import graft.format.{ByteBuf, LeafReader, PageSerializer, WriteOptions}
+import graft.spark.{GraftIntrospect, HadoopSeekableInput}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -26,7 +27,8 @@ object Probe {
       |  spill <queries> <sfDir> [factor=1] [out.json]
       |        per-query shuffle bytes, spill bytes and peak execution memory
       |  stat  <graftDir>
-      |        per-leaf lane, codec histogram, raw and disk bytes (no Spark)
+      |        per-leaf lane, codec histogram, raw and disk bytes, and the
+      |        time to re-encode the leaf with default options (no Spark)
       |  cdc-scale <sfDir> [targetRows=5000000]
       |        the bench's at-scale merge/cdc/delete section, one JSON line""".stripMargin
 
@@ -167,36 +169,68 @@ object Probe {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** One leaf column's physical summary, summed over a table's live files. */
+  /** One leaf column's physical summary, summed over a table's live files.
+    * `encodeMs` is the time to re-encode the leaf's pages with default
+    * WriteOptions (the writer's codec chooser included), min of 3 runs.
+    */
   final case class LeafStat(name: String, lane: Int, codecs: Map[String, Int],
-      rawBytes: Long, diskBytes: Long)
+      rawBytes: Long, diskBytes: Long, encodeMs: Double)
 
   /** Per-leaf lane, page-codec histogram, raw (decoded) and on-disk bytes
-    * of the graft table at `dir`, in leaf order. Reads footers and page
-    * headers only; needs no Spark session.
+    * and re-encode time of the graft table at `dir`, in leaf order. Needs
+    * no Spark session.
     */
   def stat(dir: String): Seq[LeafStat] = {
-    val perFile = GraftIntrospect.describeFiles(dir, new org.apache.hadoop.conf.Configuration())
-      .flatMap { fl =>
-        fl.leaves.indices.map { i =>
-          val pages = fl.leaves(i).pages
-          LeafStat(fl.leafNames(i), fl.leaves(i).lane,
-            pages.groupBy(p => GraftIntrospect.codecName(p.codec)).map { case (c, ps) => c -> ps.length },
-            pages.map(_.rawLen.toLong).sum, fl.footer.leaves(i).totalBytes)
-        }
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val perFile = GraftIntrospect.describeFiles(dir, conf).flatMap { fl =>
+      val encodeMs = encodeLeaves(fl, conf)
+      fl.leaves.indices.map { i =>
+        val pages = fl.leaves(i).pages
+        LeafStat(fl.leafNames(i), fl.leaves(i).lane,
+          pages.groupBy(p => GraftIntrospect.codecName(p.codec)).map { case (c, ps) => c -> ps.length },
+          pages.map(_.rawLen.toLong).sum, fl.footer.leaves(i).totalBytes, encodeMs(i))
       }
+    }
     perFile.map(_.name).distinct.map { name =>
       perFile.filter(_.name == name).reduce { (a, b) =>
         a.copy(codecs = (a.codecs.keySet ++ b.codecs.keySet)
             .map(c => c -> (a.codecs.getOrElse(c, 0) + b.codecs.getOrElse(c, 0))).toMap,
-          rawBytes = a.rawBytes + b.rawBytes, diskBytes = a.diskBytes + b.diskBytes)
+          rawBytes = a.rawBytes + b.rawBytes, diskBytes = a.diskBytes + b.diskBytes,
+          encodeMs = a.encodeMs + b.encodeMs)
       }
     }
   }
 
+  /** Milliseconds to re-encode each leaf of one file on its own page
+    * splits through [[PageSerializer.writePage]], min of 3 runs.
+    */
+  private def encodeLeaves(fl: GraftIntrospect.FileLayout,
+      conf: org.apache.hadoop.conf.Configuration): Array[Double] = {
+    val path = fl.status.getPath
+    val in = new HadoopSeekableInput(path.getFileSystem(conf), path, fl.status.getLen)
+    try fl.leaves.indices.map { i =>
+      val info = fl.leaves(i)
+      val vec = new LeafReader(in, fl.footer.leaves(i), info.lane, info.nullable).readAll()
+      val (out, scratch, opts) = (new ByteBuf(), new ByteBuf(), WriteOptions())
+      (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        var from = 0
+        info.pages.foreach { pg =>
+          out.reset()
+          PageSerializer.writePage(info.lane, vec, from, from + pg.numValues, info.nullable,
+            opts, out, scratch)
+          from += pg.numValues
+        }
+        System.nanoTime() - t0
+      }.min / 1e6
+    }.toArray
+    finally in.close()
+  }
+
   def formatLeaf(l: LeafStat): String = {
     val hist = l.codecs.toSeq.sortBy(-_._2).map { case (c, n) => s"$c x$n" }.mkString(", ")
-    f"${l.name}%-28s lane=${l.lane} raw=${l.rawBytes}%,d disk=${l.diskBytes}%,d [$hist]"
+    f"${l.name}%-28s lane=${l.lane} raw=${l.rawBytes}%,d disk=${l.diskBytes}%,d " +
+      f"encode_ms=${l.encodeMs}%.2f [$hist]"
   }
 
   /** The bench's at-scale CDC section ([[BenchMaintenance.cdcAtScale]]):

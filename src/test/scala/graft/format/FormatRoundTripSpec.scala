@@ -247,6 +247,75 @@ class FormatRoundTripSpec extends AnyFunSuite {
     }
   }
 
+  /** Writes `vec` (100 rows) as one non-nullable single-page leaf with
+    * `codec` forced and nested frames stored plain, lets `patch` change the
+    * file bytes (the page's codec byte is at offset 8, its payload at 17)
+    * and decodes the leaf.
+    */
+  private def decodePatched(lane: Int, vec: Vec, codec: Byte)(patch: Array[Byte] => Unit): Vec = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val w = new GraftFileWriter(bos, "{}", WriteOptions(forcedCodec = Some(codec), defaultCodec = Codec.None))
+    w.start()
+    w.writeChunk(Seq(LeafCol(lane, nullable = false, vec)), vec.n)
+    w.finish()
+    val bytes = bos.toByteArray
+    assert(bytes(8) == codec)
+    patch(bytes)
+    val in = new SeekableInput {
+      def length: Long = bytes.length
+      def readFully(pos: Long, dst: Array[Byte], off: Int, len: Int): Unit =
+        System.arraycopy(bytes, pos.toInt, dst, off, len)
+      def close(): Unit = ()
+    }
+    new LeafReader(in, GraftFileReader.readFooter(in).leaves(0), lane, nullable = false).readAll()
+  }
+
+  private def intAt(b: Array[Byte], p: Int): Int = PageDeserializer.getInt(b, p)
+  private def putInt(b: Array[Byte], p: Int, v: Int): Unit = PageSerializer.putInt(b, p, v)
+
+  test("corrupted dict and rle page fields fail with IOException") {
+    val n = 100
+    val ints = IntVec(n, null, Array.tabulate(n)(i => i % 4 * 1000))
+    val runs = IntVec(n, null, Array.tabulate(n)(i => i / 10))
+    val strs = {
+      val b = new BinaryVecBuilder()
+      (0 until n).foreach(i => b.append(s"v${i % 4}".getBytes("UTF-8")))
+      b.result()
+    }
+    // int Dict: u32 dictN @17 | 4 x i32 | frame header @37 | u32 indices @46
+    // Rle:      u32 runs @17 | (u32 count, i32 value) x 10 from 21
+    // bin Dict: u32 dictN @17 | 5 x u32 offsets @21 | 8 bytes | frame | indices @58
+    val layouts: Seq[(Int, Vec, Byte, Array[Byte] => Unit)] = Seq(
+      (Lane.I32, ints, Codec.Dict, b => assert(intAt(b, 17) == 4 && intAt(b, 46) == 0 && intAt(b, 50) == 1)),
+      (Lane.I32, runs, Codec.Rle, b => assert(intAt(b, 17) == 10 && intAt(b, 21) == 10)),
+      (Lane.Bin, strs, Codec.Dict, b => assert(intAt(b, 17) == 4 && intAt(b, 37) == 8 && intAt(b, 62) == 1)))
+    for ((lane, vec, codec, check) <- layouts) {
+      val got = decodePatched(lane, vec, codec)(check)
+      assertVecEq(vec, got)
+    }
+    val cases: Seq[(String, Int, Vec, Byte, Array[Byte] => Unit)] = Seq(
+      ("int dict size 0x7fffffff", Lane.I32, ints, Codec.Dict, b => putInt(b, 17, 0x7fffffff)),
+      ("negative int dict size", Lane.I32, ints, Codec.Dict, b => putInt(b, 17, -2)),
+      ("int dict index past the dictionary", Lane.I32, ints, Codec.Dict, b => putInt(b, 46, 4)),
+      ("negative int dict index", Lane.I32, ints, Codec.Dict, b => putInt(b, 50, -1)),
+      ("rle run count 0x7fffffff", Lane.I32, runs, Codec.Rle, b => putInt(b, 17, 0x7fffffff)),
+      ("negative rle run count", Lane.I32, runs, Codec.Rle, b => putInt(b, 17, -1)),
+      ("negative rle run length", Lane.I32, runs, Codec.Rle, b => putInt(b, 21, -1)),
+      ("rle runs past the page", Lane.I32, runs, Codec.Rle, b => putInt(b, 21, 11)),
+      ("rle runs short of the page", Lane.I32, runs, Codec.Rle, b => putInt(b, 17, 9)),
+      ("binary dict size 0x7fffffff", Lane.Bin, strs, Codec.Dict, b => putInt(b, 17, 0x7fffffff)),
+      ("negative binary dict size", Lane.Bin, strs, Codec.Dict, b => putInt(b, 17, -1)),
+      ("negative binary dict offset", Lane.Bin, strs, Codec.Dict, b => putInt(b, 21, -3)),
+      ("binary dict offsets not monotone", Lane.Bin, strs, Codec.Dict, b => putInt(b, 25, 5)),
+      ("binary dict offset past the page", Lane.Bin, strs, Codec.Dict, b => putInt(b, 37, 100000)),
+      ("binary dict index past the dictionary", Lane.Bin, strs, Codec.Dict, b => putInt(b, 58, 4)))
+    for ((label, lane, vec, codec, patch) <- cases) {
+      // intercept fails on any other exception (AIOOBE, NegativeArraySize, OOM)
+      val e = intercept[java.io.IOException](decodePatched(lane, vec, codec)(patch))
+      assert(e.getMessage.startsWith("graft: corrupt page: "), s"$label: ${e.getMessage}")
+    }
+  }
+
   test("page stats are persisted (zone maps)") {
     val n = 5000
     val v = IntVec(n, null, Array.tabulate(n)(i => i))

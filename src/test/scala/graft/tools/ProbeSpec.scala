@@ -32,6 +32,10 @@ class ProbeSpec extends AnyFunSuite {
     assert(byName("id").rawBytes == 20000L * 8)
     assert(byName("k").diskBytes < byName("k").rawBytes)
     assert(Probe.formatLeaf(byName("k")).contains("onevalue x3"))
+    // every leaf is re-encoded through the page writer and timed
+    assert(leaves.forall(l => l.encodeMs > 0 && l.encodeMs < 60000), leaves)
+    assert(Probe.formatLeaf(byName("s")).matches(".* encode_ms=[0-9]+\\.[0-9]{2} \\[dict x3\\]"),
+      Probe.formatLeaf(byName("s")))
     assert(!spark.sparkContext.isStopped)
   }
 
