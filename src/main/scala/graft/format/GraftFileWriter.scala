@@ -22,7 +22,8 @@ import scala.collection.mutable.ArrayBuffer
   *   u32 schemaSize | u32 metaSize | magic (8B)
   * }}}
   * Like the reference (writer.rs:108-112), exactly one chunk per file —
-  * callers roll files.
+  * callers roll files. Within the chunk, pages are encoded in parallel on
+  * the shared [[GraftFileWriter.pool]] and written in the order above.
   */
 final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     opts: WriteOptions = WriteOptions()) {
@@ -36,6 +37,7 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     else if (opts.bloomLeaves.nonEmpty) FormatConstants.MagicV3
     else FormatConstants.Magic
   private val metasBuf = ArrayBuffer[ColumnMeta]()
+  // the calling thread's encode buffers (each helper allocates its own)
   private val pageBuf = new ByteBuf(1 << 16)
   private val scratch = new ByteBuf(1 << 16)
 
@@ -51,10 +53,23 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     state = 1
   }
 
+  /** Encode and write the file's one chunk. Pages are encoded concurrently
+    * (see [[ChunkEncoder]]) and written in depth-first leaf order, each
+    * leaf's pages in row order, so the bytes do not depend on which thread
+    * encoded what. An exception from any page or synopsis propagates
+    * unchanged.
+    */
   def writeChunk(cols: Seq[ColumnTree], numRows: Int): Unit = {
     require(state == 1, "writeChunk: writer not in started state (one chunk per file)")
+    val leaves = ArrayBuffer[LeafPlan]()
     val bounds = pageBounds(numRows, opts.pageSize)
-    cols.foreach(writeTree(_, bounds))
+    cols.foreach(planTree(_, bounds, leaves))
+    new ChunkEncoder(leaves.toArray).run(pageBuf, scratch)
+    leaves.foreach { lp =>
+      val offset = pos
+      lp.bytes.foreach { b => out.write(b); pos += b.length }
+      metasBuf += ColumnMeta(offset, lp.pages, lp.kmv)
+    }
     state = 2
   }
 
@@ -66,21 +81,44 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     b
   }
 
-  private def writeTree(t: ColumnTree, bounds: Array[Int]): Unit = t match {
-    case LeafCol(lane, nullable, vec) =>
-      writeLeaf(lane, nullable, vec, bounds)
-    case ListCol(nullable, lengths, child) =>
-      writeLeaf(Lane.I32, nullable, lengths, bounds)
-      writeTree(child, childBounds(lengths, bounds))
-    case StructCol(nullable, n, nulls, children) =>
-      if (nullable) writeLeaf(Lane.Bool, nullable = true,
-        BoolVec(n, nulls, new Array[Boolean](n)), bounds)
-      children.foreach(writeTree(_, bounds))
-    case MapCol(nullable, lengths, key, value) =>
-      writeLeaf(Lane.I32, nullable, lengths, bounds)
-      val cb = childBounds(lengths, bounds)
-      writeTree(key, cb)
-      writeTree(value, cb)
+  /** One leaf of the chunk: its values, page bounds and footer options,
+    * and the slots its encoded pages and synopsis are stored in.
+    */
+  private final class LeafPlan(val lane: Int, val nullable: Boolean, val vec: Vec,
+      val bounds: Array[Int], val withBloom: Boolean, val withKmv: Boolean) {
+    val pages = new Array[PageMeta](math.max(bounds.length - 1, 0))
+    val bytes = new Array[Array[Byte]](pages.length)
+    var kmv: Array[Long] = null
+  }
+
+  /** Flatten a column tree into `leaves` in depth-first order: the
+    * list/map length leaves and nullable-struct validity leaves in front
+    * of their children, child leaves paged on the parent's row bounds.
+    */
+  private def planTree(t: ColumnTree, bounds: Array[Int], leaves: ArrayBuffer[LeafPlan]): Unit = {
+    def leaf(lane: Int, nullable: Boolean, vec: Vec, bounds: Array[Int]): Unit = {
+      // leaves.length IS this leaf's depth-first index — the same order
+      // GraftSchema's leaf layout (and the bloomfilter option resolver) uses
+      val i = leaves.length
+      leaves += new LeafPlan(lane, nullable, vec, bounds,
+        opts.bloomLeaves.contains(i), opts.ndvLeaves.contains(i))
+    }
+    t match {
+      case LeafCol(lane, nullable, vec) =>
+        leaf(lane, nullable, vec, bounds)
+      case ListCol(nullable, lengths, child) =>
+        leaf(Lane.I32, nullable, lengths, bounds)
+        planTree(child, childBounds(lengths, bounds), leaves)
+      case StructCol(nullable, n, nulls, children) =>
+        if (nullable) leaf(Lane.Bool, nullable = true,
+          BoolVec(n, nulls, new Array[Boolean](n)), bounds)
+        children.foreach(planTree(_, bounds, leaves))
+      case MapCol(nullable, lengths, key, value) =>
+        leaf(Lane.I32, nullable, lengths, bounds)
+        val cb = childBounds(lengths, bounds)
+        planTree(key, cb, leaves)
+        planTree(value, cb, leaves)
+    }
   }
 
   /** Translate parent-level page bounds into child value bounds via the
@@ -102,67 +140,65 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     cb
   }
 
-  private def writeLeaf(lane: Int, nullable: Boolean, vec: Vec, bounds: Array[Int]): Unit = {
-    val offset = pos
-    val nPages = math.max(bounds.length - 1, 0)
-    val pages = new Array[PageMeta](nPages)
-    // metasBuf.length IS this leaf's depth-first index — the same order
-    // GraftSchema's leaf layout (and the bloomfilter option resolver) uses
-    val withBloom = opts.bloomLeaves.contains(metasBuf.length)
-    var p = 0
-    while (p < nPages) {
-      pageBuf.reset()
-      pages(p) = PageSerializer.writePage(lane, vec, bounds(p), bounds(p + 1),
-        nullable, opts, pageBuf, scratch, withBloom)
-      emit(pageBuf)
-      p += 1
-    }
-    val kmv =
-      if (opts.ndvLeaves.contains(metasBuf.length))
-        buildKmv(lane, vec, if (bounds.isEmpty) 0 else bounds.last)
-      else null
-    metasBuf += ColumnMeta(offset, pages, kmv)
-  }
-
-  /** Per-leaf KMV ndv synopsis: the k smallest distinct portable hashes of
-    * the non-null values (KmvUtil hashing — reproducible outside the JVM).
-    * Only integer and binary lanes carry one; the Spark layer validates the
-    * option, this is the format-level backstop.
+  /** The chunk's encode jobs: one per (leaf, page) and one per synopsis
+    * leaf, claimed in that order (synopses first: each is one serial pass
+    * over its leaf) by the calling thread and by helpers from
+    * [[GraftFileWriter.pool]]. Helpers are submitted, never waited for:
+    * one that starts after the jobs ran out returns at once, so when the
+    * pool is busy the caller encodes every page itself, at serial speed.
+    * Only jobs already claimed by a running thread are waited for.
     */
-  private def buildKmv(lane: Int, vec: Vec, n: Int): Array[Long] = {
-    val k = opts.ndvK
-    val set = new java.util.TreeSet[java.lang.Long]()
-    val nulls = vec.nulls
-    @inline def live(i: Int) = nulls == null || !nulls(i)
-    @inline def add(h: Long): Unit = {
-      set.add(h)
-      if (set.size > k) set.remove(set.last)
+  private final class ChunkEncoder(leaves: Array[LeafPlan]) {
+    private val (jobLeaf, jobPage) = {
+      val kmvJobs = leaves.indices.filter(leaves(_).withKmv).map(i => (i, -1))
+      val pageJobs = leaves.indices.flatMap(i => leaves(i).pages.indices.map(p => (i, p)))
+      (kmvJobs ++ pageJobs).toArray.unzip
     }
-    vec match {
-      case v: BinaryVec =>
-        var i = 0
-        while (i < n) {
-          if (live(i)) {
-            val o = v.offsets(i)
-            add(KmvUtil.hashBytes(v.bytes, o, v.offsets(i + 1) - o))
-          }
-          i += 1
+    private val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val unfinished = new java.util.concurrent.atomic.AtomicInteger(jobLeaf.length)
+    private val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+
+    def run(out: ByteBuf, scratch: ByteBuf): Unit = {
+      val helpers = math.min(GraftFileWriter.Threads - 1, jobLeaf.length - 1)
+      var h = 0
+      while (h < helpers) {
+        GraftFileWriter.pool.execute(() => drain(null, null))
+        h += 1
+      }
+      drain(out, scratch)
+      try unfinished.synchronized { while (unfinished.get > 0) unfinished.wait() }
+      catch { case e: InterruptedException => failure.compareAndSet(null, e); throw e }
+      val f = failure.get
+      if (f != null) throw f
+    }
+
+    /** Claim and run jobs until none are left; after a failure the rest
+      * are claimed and skipped. A helper passes null buffers and allocates
+      * its own once it has claimed a job.
+      */
+    private def drain(out0: ByteBuf, scratch0: ByteBuf): Unit = {
+      var out = out0
+      var scratch = scratch0
+      var j = next.getAndIncrement()
+      while (j < jobLeaf.length) {
+        if (out == null) { out = new ByteBuf(1 << 16); scratch = new ByteBuf(1 << 16) }
+        if (failure.get == null) {
+          try encode(leaves(jobLeaf(j)), jobPage(j), out, scratch)
+          catch { case t: Throwable => failure.compareAndSet(null, t) }
         }
-      case v: IntVec if lane == Lane.I8 || lane == Lane.I16 || lane == Lane.I32 =>
-        var i = 0
-        while (i < n) { if (live(i)) add(KmvUtil.hashLong(v.values(i).toLong)); i += 1 }
-      case v: LongVec if lane == Lane.I64 =>
-        var i = 0
-        while (i < n) { if (live(i)) add(KmvUtil.hashLong(v.values(i))); i += 1 }
-      case _ =>
-        throw new IllegalArgumentException(
-          s"graft: ndv synopsis unsupported for lane $lane — only integer and " +
-            "binary leaves have a portable value rendering")
+        if (unfinished.decrementAndGet() == 0) unfinished.synchronized(unfinished.notifyAll())
+        j = next.getAndIncrement()
+      }
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator(); var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    out
+
+    private def encode(lp: LeafPlan, page: Int, out: ByteBuf, scratch: ByteBuf): Unit =
+      if (page < 0) lp.kmv = GraftFileWriter.buildKmv(lp.lane, lp.vec, lp.bounds.last, opts.ndvK)
+      else {
+        out.reset()
+        lp.pages(page) = PageSerializer.writePage(lp.lane, lp.vec, lp.bounds(page),
+          lp.bounds(page + 1), lp.nullable, opts, out, scratch, lp.withBloom)
+        lp.bytes(page) = out.toArray
+      }
   }
 
   def finish(): Unit = {
@@ -220,5 +256,65 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     emit(buf)
     out.flush()
     state = 3
+  }
+}
+
+object GraftFileWriter {
+  private[format] val Threads: Int = Runtime.getRuntime.availableProcessors()
+
+  /** The JVM's one page-encode pool, shared by every writer: daemon
+    * threads, at most one per core, started on first use.
+    */
+  private[format] lazy val pool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(Threads, (r: Runnable) => {
+      val t = new Thread(r, "graft-encode")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Per-leaf KMV ndv synopsis: the k smallest distinct portable hashes of
+    * the non-null values (KmvUtil hashing — reproducible outside the JVM).
+    * Only integer and binary lanes carry one; the Spark layer validates the
+    * option, this is the format-level backstop.
+    */
+  private[format] def buildKmv(lane: Int, vec: Vec, n: Int, k: Int): Array[Long] = {
+    val set = new java.util.TreeSet[java.lang.Long]()
+    val nulls = vec.nulls
+    @inline def live(i: Int) = nulls == null || !nulls(i)
+    // once the set holds k hashes, a hash >= its largest is either already
+    // in it or would be evicted at once: skip it before boxing
+    var full = false
+    var last = 0L
+    @inline def add(h: Long): Unit =
+      if (!full || h < last) {
+        set.add(h)
+        if (set.size > k) set.pollLast()
+        if (k > 0 && set.size == k) { full = true; last = set.last }
+      }
+    vec match {
+      case v: BinaryVec =>
+        var i = 0
+        while (i < n) {
+          if (live(i)) {
+            val o = v.offsets(i)
+            add(KmvUtil.hashBytes(v.bytes, o, v.offsets(i + 1) - o))
+          }
+          i += 1
+        }
+      case v: IntVec if lane == Lane.I8 || lane == Lane.I16 || lane == Lane.I32 =>
+        var i = 0
+        while (i < n) { if (live(i)) add(KmvUtil.hashLong(v.values(i).toLong)); i += 1 }
+      case v: LongVec if lane == Lane.I64 =>
+        var i = 0
+        while (i < n) { if (live(i)) add(KmvUtil.hashLong(v.values(i))); i += 1 }
+      case _ =>
+        throw new IllegalArgumentException(
+          s"graft: ndv synopsis unsupported for lane $lane — only integer and " +
+            "binary leaves have a portable value rendering")
+    }
+    val out = new Array[Long](set.size)
+    val it = set.iterator(); var i = 0
+    while (it.hasNext) { out(i) = it.next(); i += 1 }
+    out
   }
 }

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
 /** Table maintenance for graft directories — the OPTIMIZE-style passes a
@@ -7,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * library; file-set lifecycle is the caller's concern there, so this layer
   * is ours.)
   */
-object GraftMaintenance {
+object GraftMaintenance extends Logging {
   /** Test seam: a dv-mode merge throws after its tagged append lands and
     * BEFORE the masks publish — exactly the crash window where old and
     * new versions are both visible and the resume must converge. */
@@ -1157,15 +1158,16 @@ object GraftMaintenance {
     case _ => "_graft_tmp_merge"
   }
 
-  /** Opt-in phase timing for the DML passes (`-Dgraft.debug.dmlphases=1`):
-    * stderr lines only, zero cost when unset — the profiling hook that
-    * keeps "where do the seconds go" answerable without a profiler. */
+  /** Phase timing for the DML passes, logged at DEBUG on this object's
+    * logger (`graft.spark.GraftMaintenance`); no timing at all unless that
+    * level is enabled — the profiling hook that keeps "where do the
+    * seconds go" answerable without a profiler. */
   private[spark] def phase[T](name: String)(f: => T): T =
-    if (!sys.props.contains("graft.debug.dmlphases")) f
+    if (!log.isDebugEnabled) f
     else {
       val t0 = System.nanoTime()
       val r = f
-      System.err.println(f"[graft-dml] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      logDebug(f"[graft-dml] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
       r
     }
 
@@ -2099,10 +2101,9 @@ object GraftMaintenance {
             // changes nothing about which source rows are NOT matched
             src.join(envScoped(table), antiCond, "left_anti").filter(keep)
           }
-        if (sys.props.contains("graft.debug.dmlphases"))
-          System.err.println("[graft-dml] stage-inserts plan:\n" +
-            missing.queryExecution.executedPlan.treeString.linesIterator.take(30)
-              .mkString("\n"))
+        logDebug("[graft-dml] stage-inserts plan:\n" +
+          missing.queryExecution.executedPlan.treeString.linesIterator.take(30)
+            .mkString("\n"))
         missing.write.format("graft").mode("overwrite").save(insStage.toString)
       }
       // ---- per-file rewrites ----

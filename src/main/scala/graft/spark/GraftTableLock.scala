@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.internal.Logging
 
 /** Advisory table-level mutex for the MUTATING maintenance ops
   * (deleteWhere / updateWhere / merge / compact / zorder / vacuum /
@@ -52,7 +53,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * so a broken lease's half-done op is healed by re-running it — the
   * lock only serializes LIVE mutators.
   */
-private[spark] object GraftTableLock {
+private[spark] object GraftTableLock extends Logging {
   val LockName = "_graft_maint_lock"
 
   private val held = new ThreadLocal[scala.collection.mutable.Set[String]] {
@@ -225,7 +226,7 @@ private[spark] object GraftTableLock {
         } catch { case _: Exception => false }
       if (mtimeOk || contentOk) heartbeatFailing.set(false)
       else if (heartbeatFailing.compareAndSet(false, true))
-        System.err.println(s"[graft] WARN: maintenance-lock heartbeat " +
+        logWarning(s"maintenance-lock heartbeat " +
           s"failed on $lockPath (both mtime touch and content rewrite); " +
           "if heartbeats keep failing and this operation outlives " +
           "graft.maint.lock.lease.ms, another process may expropriate a " +

@@ -1,10 +1,14 @@
 package graft.tools
 
 import graft.{Bench, BenchMaintenance, SparkEntry, Tables}
-import graft.format.{ByteBuf, LeafReader, PageSerializer, WriteOptions}
+import graft.format.{ByteBuf, ColumnTree, GraftFileWriter, GraftStat, IntVec, LeafCol,
+  LeafReader, ListCol, MapCol, PageSerializer, StructCol, Vec, WriteOptions}
 import graft.spark.{GraftIntrospect, HadoopSeekableInput}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one diagnostics entry point. Every Spark subcommand runs in one
   * session built with the bench's settings ([[Bench.session]]) and times
@@ -28,14 +32,18 @@ object Probe {
       |        per-query shuffle bytes, spill bytes and peak execution memory
       |  stat  <graftDir>
       |        per-leaf lane, codec histogram, raw and disk bytes, and the
-      |        time to re-encode the leaf with default options (no Spark)
+      |        time to re-encode the leaf with default options; per file, the
+      |        time to write the whole file in memory (no Spark)
       |  cdc-scale <sfDir> [targetRows=5000000]
       |        the bench's at-scale merge/cdc/delete section, one JSON line""".stripMargin
 
   def main(args: Array[String]): Unit = {
     def intArg(i: Int, default: Int): Int = args.lift(i).fold(default)(_.toInt)
     args.toSeq match {
-      case Seq("stat", dir) => stat(dir).foreach(l => println(formatLeaf(l)))
+      case Seq("stat", dir) =>
+        val st = stat(dir)
+        st.leaves.foreach(l => println(formatLeaf(l)))
+        st.files.foreach(f => println(formatFile(f)))
       case Seq("time" | "plan" | "rows" | "spill", _, _, _*) | Seq("cdc-scale", _, _*) =>
         val spark = Bench.session()
         try args(0) match {
@@ -176,55 +184,106 @@ object Probe {
   final case class LeafStat(name: String, lane: Int, codecs: Map[String, Int],
       rawBytes: Long, diskBytes: Long, encodeMs: Double)
 
-  /** Per-leaf lane, page-codec histogram, raw (decoded) and on-disk bytes
-    * and re-encode time of the graft table at `dir`, in leaf order. Needs
-    * no Spark session.
+  /** One live file: `writeMs` is the wall time to write the whole file again
+    * through [[GraftFileWriter]] into memory (pages encoded in parallel,
+    * default WriteOptions at the file's page size), min of 3 runs.
     */
-  def stat(dir: String): Seq[LeafStat] = {
+  final case class FileStat(name: String, rows: Long, writeMs: Double)
+
+  final case class TableStat(leaves: Seq[LeafStat], files: Seq[FileStat])
+
+  /** Per-leaf lane, page-codec histogram, raw (decoded) and on-disk bytes
+    * and re-encode time of the graft table at `dir`, in leaf order, and the
+    * whole-file write time of each file. Needs no Spark session.
+    */
+  def stat(dir: String): TableStat = {
     val conf = new org.apache.hadoop.conf.Configuration()
-    val perFile = GraftIntrospect.describeFiles(dir, conf).flatMap { fl =>
-      val encodeMs = encodeLeaves(fl, conf)
-      fl.leaves.indices.map { i =>
+    val perFile = GraftIntrospect.describeFiles(dir, conf).map { fl =>
+      val vecs = readLeaves(fl, conf)
+      val leaves = fl.leaves.indices.map { i =>
         val pages = fl.leaves(i).pages
         LeafStat(fl.leafNames(i), fl.leaves(i).lane,
           pages.groupBy(p => GraftIntrospect.codecName(p.codec)).map { case (c, ps) => c -> ps.length },
-          pages.map(_.rawLen.toLong).sum, fl.footer.leaves(i).totalBytes, encodeMs(i))
+          pages.map(_.rawLen.toLong).sum, fl.footer.leaves(i).totalBytes, encodeLeaf(fl.leaves(i), vecs(i)))
       }
+      (leaves, writeFile(fl, vecs))
     }
-    perFile.map(_.name).distinct.map { name =>
-      perFile.filter(_.name == name).reduce { (a, b) =>
+    val leaves = perFile.flatMap(_._1)
+    TableStat(leaves.map(_.name).distinct.map { name =>
+      leaves.filter(_.name == name).reduce { (a, b) =>
         a.copy(codecs = (a.codecs.keySet ++ b.codecs.keySet)
             .map(c => c -> (a.codecs.getOrElse(c, 0) + b.codecs.getOrElse(c, 0))).toMap,
           rawBytes = a.rawBytes + b.rawBytes, diskBytes = a.diskBytes + b.diskBytes,
           encodeMs = a.encodeMs + b.encodeMs)
       }
-    }
+    }, perFile.map(_._2))
   }
 
-  /** Milliseconds to re-encode each leaf of one file on its own page
-    * splits through [[PageSerializer.writePage]], min of 3 runs.
-    */
-  private def encodeLeaves(fl: GraftIntrospect.FileLayout,
-      conf: org.apache.hadoop.conf.Configuration): Array[Double] = {
+  private def readLeaves(fl: GraftIntrospect.FileLayout,
+      conf: org.apache.hadoop.conf.Configuration): Array[Vec] = {
     val path = fl.status.getPath
     val in = new HadoopSeekableInput(path.getFileSystem(conf), path, fl.status.getLen)
     try fl.leaves.indices.map { i =>
-      val info = fl.leaves(i)
-      val vec = new LeafReader(in, fl.footer.leaves(i), info.lane, info.nullable).readAll()
-      val (out, scratch, opts) = (new ByteBuf(), new ByteBuf(), WriteOptions())
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        var from = 0
-        info.pages.foreach { pg =>
-          out.reset()
-          PageSerializer.writePage(info.lane, vec, from, from + pg.numValues, info.nullable,
-            opts, out, scratch)
-          from += pg.numValues
-        }
-        System.nanoTime() - t0
-      }.min / 1e6
+      new LeafReader(in, fl.footer.leaves(i), fl.leaves(i).lane, fl.leaves(i).nullable).readAll()
     }.toArray
     finally in.close()
+  }
+
+  private def minMs(runs: Int)(f: => Unit): Double =
+    (1 to runs).map { _ => val t0 = System.nanoTime(); f; System.nanoTime() - t0 }.min / 1e6
+
+  /** Milliseconds to re-encode one leaf on its own page splits through
+    * [[PageSerializer.writePage]] on this thread, min of 3 runs.
+    */
+  private def encodeLeaf(info: GraftStat.LeafInfo, vec: Vec): Double = {
+    val (out, scratch, opts) = (new ByteBuf(), new ByteBuf(), WriteOptions())
+    minMs(3) {
+      var from = 0
+      info.pages.foreach { pg =>
+        out.reset()
+        PageSerializer.writePage(info.lane, vec, from, from + pg.numValues, info.nullable,
+          opts, out, scratch)
+        from += pg.numValues
+      }
+    }
+  }
+
+  /** Write the whole file again from its decoded leaves: the column trees
+    * are rebuilt from the schema in the footer, in the depth-first leaf
+    * layout of [[graft.spark.GraftSchema.leafSpecs]].
+    */
+  private def writeFile(fl: GraftIntrospect.FileLayout, vecs: Array[Vec]): FileStat = {
+    val rows = if (fl.footer.leaves.isEmpty) 0L else fl.footer.leaves(0).totalValues
+    var next = 0
+    def take(): Vec = { next += 1; vecs(next - 1) }
+    def liveSum(lengths: IntVec): Int =
+      (0 until lengths.n).map(r => if (lengths.nulls != null && lengths.nulls(r)) 0 else lengths.values(r)).sum
+    def tree(dt: DataType, nullable: Boolean, n: Int): ColumnTree = dt match {
+      case ArrayType(et, cn) =>
+        val lengths = take().asInstanceOf[IntVec]
+        ListCol(nullable, lengths, tree(et, cn, liveSum(lengths)))
+      case MapType(kt, vt, vcn) =>
+        val lengths = take().asInstanceOf[IntVec]
+        val m = liveSum(lengths)
+        MapCol(nullable, lengths, tree(kt, nullable = false, m), tree(vt, vcn, m))
+      case st: StructType =>
+        val nulls = if (nullable) take().nulls else null
+        StructCol(nullable, n, nulls, st.fields.toSeq.map(f => tree(f.dataType, f.nullable, n)))
+      case _ =>
+        val i = next
+        LeafCol(fl.leaves(i).lane, fl.leaves(i).nullable, take())
+    }
+    val schema = DataType.fromJson(fl.footer.schemaJson).asInstanceOf[StructType]
+    val cols = schema.fields.toSeq.map(f => tree(f.dataType, f.nullable, rows.toInt))
+    val pageSize = fl.leaves.headOption.flatMap(_.pages.headOption).fold(1)(p => math.max(1, p.numValues))
+    val opts = WriteOptions(pageSize = pageSize)
+    FileStat(fl.file, rows, minMs(3) {
+      val w = new GraftFileWriter(new java.io.ByteArrayOutputStream(fl.status.getLen.toInt),
+        fl.footer.schemaJson, opts)
+      w.start()
+      w.writeChunk(cols, rows.toInt)
+      w.finish()
+    })
   }
 
   def formatLeaf(l: LeafStat): String = {
@@ -233,13 +292,19 @@ object Probe {
       f"encode_ms=${l.encodeMs}%.2f [$hist]"
   }
 
+  def formatFile(f: FileStat): String =
+    f"file ${f.name} rows=${f.rows}%,d write_ms=${f.writeMs}%.2f"
+
   /** The bench's at-scale CDC section ([[BenchMaintenance.cdcAtScale]]):
     * merge, cdc apply and dv delete at `rows` rows, as one JSON string.
-    * DML phase timings go to stderr while it runs.
+    * The DML phase timings are logged while it runs: the
+    * `graft.spark.GraftMaintenance` logger is raised to DEBUG for the call.
     */
   def cdcScale(spark: SparkSession, sfDir: String, rows: Long): String = {
-    sys.props("graft.debug.dmlphases") = "1"
+    val logger = "graft.spark.GraftMaintenance"
+    val level = LogManager.getLogger(logger).getLevel
+    Configurator.setLevel(logger, Level.DEBUG)
     try BenchMaintenance.cdcAtScale(spark, sfDir, rows)
-    finally sys.props.remove("graft.debug.dmlphases")
+    finally Configurator.setLevel(logger, level)
   }
 }

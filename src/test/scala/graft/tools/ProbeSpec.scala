@@ -21,7 +21,8 @@ class ProbeSpec extends AnyFunSuite {
     spark.range(20000)
       .selectExpr("id", "7L AS k", "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS s")
       .coalesce(1).write.format("graft").mode("overwrite").save(dir)
-    val leaves = Probe.stat(dir)
+    val st = Probe.stat(dir)
+    val leaves = st.leaves
     assert(leaves.map(_.name) == Seq("id", "k", "s"))
     val byName = leaves.map(l => l.name -> l).toMap
     assert(byName("id").lane == graft.format.Lane.I64)
@@ -36,7 +37,26 @@ class ProbeSpec extends AnyFunSuite {
     assert(leaves.forall(l => l.encodeMs > 0 && l.encodeMs < 60000), leaves)
     assert(Probe.formatLeaf(byName("s")).matches(".* encode_ms=[0-9]+\\.[0-9]{2} \\[dict x3\\]"),
       Probe.formatLeaf(byName("s")))
+    // one line per file: the whole file written again through GraftFileWriter
+    assert(st.files.length == 1 && st.files.head.rows == 20000L, st.files)
+    assert(st.files.head.writeMs > 0 && st.files.head.writeMs < 60000, st.files)
+    assert(Probe.formatFile(st.files.head).matches("file part-.*\\.graft rows=20,000 write_ms=[0-9]+\\.[0-9]{2}"),
+      Probe.formatFile(st.files.head))
     assert(!spark.sparkContext.isStopped)
+  }
+
+  test("stat rewrites nested files from their decoded leaves") {
+    val dir = "/tmp/graft-test/probe-stat-nested"
+    spark.range(3000)
+      .selectExpr("id",
+        "IF(id % 7 = 0, NULL, sequence(0, id % 5)) AS arr",
+        "IF(id % 5 = 0, NULL, map(CAST(id % 3 AS STRING), id)) AS m",
+        "IF(id % 4 = 0, NULL, named_struct('x', id, 'y', CAST(id AS STRING))) AS s")
+      .coalesce(1).write.format("graft").mode("overwrite").save(dir)
+    val st = Probe.stat(dir)
+    assert(st.leaves.map(_.name).length == 9, st.leaves.map(_.name))
+    assert(st.files.length == 1 && st.files.head.rows == 3000L, st.files)
+    assert(st.files.head.writeMs > 0, st.files)
   }
 
   test("rows counts query results and leaves the session running") {
