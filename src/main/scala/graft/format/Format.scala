@@ -261,15 +261,41 @@ object BloomUtil {
 object KmvUtil {
   val HashSpace: Double = 1152921504606846976.0 // 2^60
 
-  def hashBytes(a: Array[Byte], off: Int, len: Int): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    d.update(a, off, len)
-    fold(d.digest())
+  /** One thread's reusable md5 state: the digest, its 16-byte output and
+    * a buffer for a long's decimal digits (20 holds Long.MinValue). */
+  private final class Scratch {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+    val digits = new Array[Byte](20)
   }
 
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  def hashBytes(a: Array[Byte], off: Int, len: Int): Long =
+    md5Fold(scratch.get, a, off, len)
+
+  /** The md5 fold of `Long.toString(v)`, rendered into a reused buffer. */
   def hashLong(v: Long): Long = {
-    val s = java.lang.Long.toString(v).getBytes("UTF-8")
-    hashBytes(s, 0, s.length)
+    val s = scratch.get
+    val buf = s.digits
+    // digits written from the END, on the negative magnitude so that
+    // Long.MinValue needs no special case
+    var pos = buf.length
+    var x = if (v < 0) v else -v
+    while (x <= -10) {
+      val q = x / 10
+      pos -= 1; buf(pos) = ('0' - (x - q * 10)).toByte
+      x = q
+    }
+    pos -= 1; buf(pos) = ('0' - x).toByte
+    if (v < 0) { pos -= 1; buf(pos) = '-'.toByte }
+    md5Fold(s, buf, pos, buf.length - pos)
+  }
+
+  private def md5Fold(s: Scratch, a: Array[Byte], off: Int, len: Int): Long = {
+    s.md.update(a, off, len)
+    s.md.digest(s.digest, 0, 16)
+    fold(s.digest)
   }
 
   private def fold(digest: Array[Byte]): Long = {

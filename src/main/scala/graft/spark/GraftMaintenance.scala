@@ -156,8 +156,10 @@ object GraftMaintenance extends Logging {
     val tableDir = new org.apache.hadoop.fs.Path(dir)
     val fs = tableDir.getFileSystem(conf)
     val outer = !GraftTableLock.isHeld(fs, tableDir)
+    val t0 = System.nanoTime()
     GraftTableLock.withLock(fs, tableDir, conf, op) {
-      if (outer) rollForwardCrashedSwaps(dir, conf, fs, tableDir)
+      phaseSince(s"lock $op", t0)
+      if (outer) phase("roll-forward")(rollForwardCrashedSwaps(dir, conf, fs, tableDir))
       f
     }
   }
@@ -287,8 +289,14 @@ object GraftMaintenance extends Logging {
     // that multiplies the file count. Hash-clustering keeps each value in
     // one task -> one file per value; a z-order sort then applies WITHIN
     // each value (range-partitioning on z only when there is no layout).
+    // With neither and ONE output file, rows need no placement: every
+    // scan partition coalesces into the one write task without an
+    // exchange. For more output files the round-robin repartition stays,
+    // because coalesce groups scan partitions by count, not bytes, and
+    // would give uneven files.
     import org.apache.spark.sql.functions.col
     val arranged = (effLayout, zSort) match {
+      case (Seq(), None) if targetFiles == 1 => df.coalesce(1)
       case (Seq(), None) => df.repartition(targetFiles)
       case (Seq(), Some(z)) =>
         df.withColumn("__graft_z", z)
@@ -319,7 +327,7 @@ object GraftMaintenance extends Logging {
     }
     GraftRewriteGuard.publishP1(fs, tableDir, opTag)
     GraftRewriteGuard.publishP2(fs, tableDir, beforeRel)
-    try {
+    try phase("rewrite") {
       val writer = arranged.write.format("graft").mode("append")
       opts.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
         .option("manifesttag", opTag)
@@ -344,16 +352,18 @@ object GraftMaintenance extends Logging {
     // window never leaves a manifest referencing a deleted file): files
     // appended by another writer since the snapshot are not ours to delete.
     // Version ordinals register first — compaction expiry leaves holes.
-    GraftVersionLog.sync(fs, tableDir)
-    GraftRewriteGuard.flip(fs, tableDir)
-    beforeManifests.foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(GraftManifest.dir(tableDir), n), false))
-    GraftUtil.deleteAll(fs, before.map(_.getPath))
-    // the rewrite read THROUGH the scan (deletion vectors applied), so
-    // the output is clean — retiring the files retires their DV sidecars
-    // (one sidecar-dir listing for the whole snapshot, not one per file)
-    GraftDv.dropForAll(fs, tableDir, before.map(_.getPath))
-    GraftRewriteGuard.clear(fs, tableDir)
+    phase("version-sync")(GraftVersionLog.sync(fs, tableDir))
+    phase("flip+retire") {
+      GraftRewriteGuard.flip(fs, tableDir)
+      beforeManifests.foreach(n =>
+        fs.delete(new org.apache.hadoop.fs.Path(GraftManifest.dir(tableDir), n), false))
+      GraftUtil.deleteAll(fs, before.map(_.getPath))
+      // the rewrite read THROUGH the scan (deletion vectors applied), so
+      // the output is clean — retiring the files retires their DV sidecars
+      // (one sidecar-dir listing for the whole snapshot, not one per file)
+      GraftDv.dropForAll(fs, tableDir, before.map(_.getPath))
+      GraftRewriteGuard.clear(fs, tableDir)
+    }
     val after = GraftUtil.listDataFiles(dir, conf)
     // a compaction that imposed a sorted layout leaves the table
     // whole-file sorted — republish the sort marker (the rewrite's own
@@ -472,24 +482,21 @@ object GraftMaintenance extends Logging {
     * rows no longer match (the probe reads through the mask), so bitmaps
     * only ever grow by exactly the still-live matches.
     */
-  /** OR serialized per-file ordinal bitmaps into each file's current mask
+  /** OR per-file ordinal bitmaps into each file's current mask
     * and publish the merged generation — the shared back half of every
     * merge-on-read op (DV delete / MOR update / DV merge). Per-file
     * publishes are independent tiny fs ops, overlapped on a small pool so
     * a wide op isn't serialized driver-side. */
   private def publishDvMasks(fs: org.apache.hadoop.fs.FileSystem,
       tableDir: org.apache.hadoop.fs.Path,
-      perFile: Array[(String, Array[Byte])], takedown: Boolean): Unit = {
+      perFile: Map[String, org.roaringbitmap.RoaringBitmap], takedown: Boolean): Unit = {
     val current = GraftDv.list(fs, tableDir)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, perFile.length)))
+      math.max(1, math.min(8, perFile.size)))
     try {
-      perFile.toSeq.map { case (f, bytes) =>
+      perFile.toSeq.map { case (f, add) =>
         pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = {
           val p = new org.apache.hadoop.fs.Path(f)
-          val add = new org.roaringbitmap.RoaringBitmap()
-          add.deserialize(new java.io.DataInputStream(
-            new java.io.ByteArrayInputStream(bytes)))
           val ident = GraftDv.identOf(tableDir, p)
           val (gen, merged) = current.get(ident) match {
             case Some((g, path)) =>
@@ -564,32 +571,120 @@ object GraftMaintenance extends Logging {
     }
   }
 
-  /** Fold a (file, ordinal) frame into per-file serialized roaring
-    * bitmaps EXECUTOR-side — the driver collects O(matched files) small
-    * blobs, never rows. */
-  private def foldOrdinalBitmaps(
-      df: org.apache.spark.sql.DataFrame,
-      /** cap on blobs COLLECTED to the driver (bitmaps still fold
-        * executor-side; the limit bounds driver staging, the broad-delete
-        * guard's concern) — callers treat a full result as overflow */
-      maxCollect: Option[Int] = None): Array[(String, Array[Byte])] = {
-    import org.apache.spark.sql.Encoders
-    val folded = df.as[(String, Long)](
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (f, it) =>
-        val rb = new org.roaringbitmap.RoaringBitmap()
-        it.foreach { case (_, o) =>
-          require(o <= Int.MaxValue, s"graft: row ordinal $o exceeds DV range")
-          rb.add(o.toInt)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        rb.runOptimize()
-        rb.serialize(new java.io.DataOutputStream(bos))
-        (f, bos.toByteArray)
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-    maxCollect.map(n => folded.limit(n + 1)).getOrElse(folded).collect()
+  /** Action name of the Spark SQL execution every per-file probe runs
+    * under — what a `QueryExecutionListener` sees. */
+  private[spark] val ProbeExecution = "graft-probe"
+
+  /** How a per-file probe folds its rows. Executor side: `add` folds one
+    * row into its file's accumulator, `ship` makes the task result. Driver
+    * side: `merge` folds a shipped value into what is held for the file. */
+  private trait FileFold[A <: AnyRef, S, V] extends Serializable {
+    def zero(): A
+    def add(acc: A, row: org.apache.spark.sql.catalyst.InternalRow): Unit
+    def ship(acc: A): S
+    def merge(held: Option[V], s: S): V
   }
+
+  /** Matched rows per file, over a frame whose only column is the file. */
+  private object CountFold extends FileFold[Array[Long], Long, Long] {
+    def zero(): Array[Long] = new Array[Long](1)
+    def add(acc: Array[Long], row: org.apache.spark.sql.catalyst.InternalRow): Unit =
+      acc(0) += 1
+    def ship(acc: Array[Long]): Long = acc(0)
+    def merge(held: Option[Long], s: Long): Long = held.getOrElse(0L) + s
+  }
+
+  /** Ordinal bitmap per file, over a (file, file-physical ordinal) frame;
+    * bitmaps travel serialized (the task result serializer need not know
+    * roaring). */
+  private object BitmapFold
+      extends FileFold[org.roaringbitmap.RoaringBitmap, Array[Byte], org.roaringbitmap.RoaringBitmap] {
+    def zero(): org.roaringbitmap.RoaringBitmap = new org.roaringbitmap.RoaringBitmap()
+    def add(acc: org.roaringbitmap.RoaringBitmap,
+        row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+      val o = row.getLong(1)
+      require(o <= Int.MaxValue, s"graft: row ordinal $o exceeds DV range")
+      acc.add(o.toInt)
+    }
+    def ship(acc: org.roaringbitmap.RoaringBitmap): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      acc.runOptimize()
+      acc.serialize(new java.io.DataOutputStream(bos))
+      bos.toByteArray
+    }
+    def merge(held: Option[org.roaringbitmap.RoaringBitmap],
+        s: Array[Byte]): org.roaringbitmap.RoaringBitmap = {
+      val rb = new org.roaringbitmap.RoaringBitmap()
+      rb.deserialize(new java.io.DataInputStream(new java.io.ByteArrayInputStream(s)))
+      held.foreach(rb.or)
+      rb
+    }
+  }
+
+  /** The per-file probe behind every DML op: `df`'s first column names
+    * each row's file. Every partition folds its rows into one value per
+    * file EXECUTOR-side, and the driver merges those as each partition's
+    * result arrives — ONE Spark job and no exchange. A file's rows may
+    * span several partitions (page-group splits, a join upstream); the
+    * driver merge is what makes the union exact. The driver holds at most
+    * `cap` files: the first file past it marks the probe as overflowed and
+    * CANCELS the job, so the tasks still to run send nothing more to the
+    * driver (the broad-delete guard's bound; task results also count
+    * against `spark.driver.maxResultSize`). Returns the merged values and
+    * whether the probe overflowed; an overflowed probe's values are
+    * partial. */
+  private def probeByFile[A <: AnyRef, S, V](df: org.apache.spark.sql.DataFrame,
+      fold: FileFold[A, S, V], cap: Int = Int.MaxValue): (Map[String, V], Boolean) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val perPartition = (rows: Iterator[InternalRow]) => {
+      val accs = new java.util.HashMap[UTF8String, A]()
+      var lastFile: UTF8String = null
+      var last: A = null.asInstanceOf[A]
+      while (rows.hasNext) {
+        val row = rows.next()
+        val f = if (row.isNullAt(0)) UTF8String.EMPTY_UTF8 else row.getUTF8String(0)
+        // a scan emits each file's rows in one run: look the map up per run
+        if (lastFile == null || !lastFile.equals(f)) {
+          lastFile = f.clone()
+          last = accs.get(lastFile)
+          if (last == null) { last = fold.zero(); accs.put(lastFile, last) }
+        }
+        fold.add(last, row)
+      }
+      val out = new Array[(String, S)](accs.size)
+      var i = 0
+      accs.forEach((f, a) => { out(i) = (f.toString, fold.ship(a)); i += 1 })
+      out
+    }
+    // the handler runs on the scheduler's event thread; the caller reads
+    // `held` only after the job has ended
+    val held = new java.util.HashMap[String, V]()
+    val overflowed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val job = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.FutureAction[Unit]]()
+    val onResult = (_: Int, part: Array[(String, S)]) =>
+      if (!overflowed.get) part.foreach { case (f, s) =>
+        val prev = held.get(f)
+        if (prev != null || held.size < cap) held.put(f, fold.merge(Option(prev), s))
+        else if (overflowed.compareAndSet(false, true)) Option(job.get).foreach(_.cancel())
+      }
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(ProbeExecution)) {
+      val rdd = qe.toRdd
+      val running = qe.sparkSession.sparkContext.submitJob(
+        rdd, perPartition, rdd.partitions.indices, onResult, ())
+      job.set(running)
+      if (overflowed.get) running.cancel()
+      // a job cancelled on overflow fails; its result is not needed
+      try running.get() catch { case _: Exception if overflowed.get => () }
+    }
+    import scala.jdk.CollectionConverters._
+    (held.asScala.toMap, overflowed.get)
+  }
+
+  /** Matched-row count per file of a frame whose only column is the file. */
+  private def fileCounts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    probeByFile(df, CountFold)._1
 
   def deleteWhereDv(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
@@ -622,15 +717,15 @@ object GraftMaintenance extends Logging {
       import org.apache.spark.sql.functions.{col, input_file_name}
       // ONE distributed probe maps still-live matching rows to (file,
       // file-physical ordinal) via the synthesized metadata column; each
-      // file's ordinals fold into a roaring bitmap EXECUTOR-side, so the
-      // driver collects O(matched files) small byte arrays, never rows.
+      // partition's ordinals fold into roaring bitmaps EXECUTOR-side, so
+      // the driver merges O(matched files) small bitmaps, never rows.
       //
-      // BROAD-DELETE guard: the blob-per-matched-file driver staging is
+      // BROAD-DELETE guard: the bitmap-per-matched-file driver staging is
       // right for the scattered-takedown shape dvs target, unbounded for
       // a broad predicate over a huge table (millions of matched files ⇒
-      // millions of driver-side blobs). The collect is capped at
-      // `graft.dv.maxMatchedFiles` + 1 — same single probe scan — and an
-      // overflowing result routes to the copy-on-write rewrite instead,
+      // millions of driver-side bitmaps). The merge holds at most
+      // `graft.dv.maxMatchedFiles` files; one more cancels the probe job
+      // and routes to the copy-on-write rewrite instead,
       // whose driver state is one file LIST and which the follow-up
       // compaction would have had to pay anyway (the lock is
       // thread-re-entrant, so delegating under it is safe).
@@ -638,13 +733,12 @@ object GraftMaintenance extends Logging {
         .map(_.toInt).getOrElse(65536)
       val matched = table.filter(predicate)
         .select(input_file_name().as("f"), col(GraftDv.OrdinalCol).as("o"))
-      val perFile = foldOrdinalBitmaps(matched,
-        maxCollect = Some(math.min(maxMatched, files.size)))
-      if (perFile.length > maxMatched)
+      val (perFile, overflow) = phase("probe")(probeByFile(matched, BitmapFold, maxMatched))
+      if (overflow)
         return deleteWhereImpl(spark, dir, predicate, changelog, schemaOverride)
       if (perFile.nonEmpty) {
         val known = files.map(_.getPath.toString).toSet
-        require(perFile.forall(p => p._1.nonEmpty && known.contains(p._1)),
+        require(perFile.keys.forall(f => f.nonEmpty && known.contains(f)),
           "graft: deleteWhereDv probe returned file names outside the table " +
             "listing (input_file_name plumbing broken?)")
         // change feed FIRST (the crash order changelog -> mask): ONE feed
@@ -654,21 +748,21 @@ object GraftMaintenance extends Logging {
         // single task. Idempotent per file on resume: data files are
         // immutable and the masks land strictly after, so a re-derived
         // per-file pre-image set is identical and exists-checked away.
-        if (changelog) {
+        if (changelog) phase("changelog") {
           publishDvChangelog(spark, conf, fs, tableDir,
-            perFile.map(_._1).toSeq, s"-del$predHash", "_graft_tmp_delete",
+            perFile.keys.toSeq, s"-del$predHash", "_graft_tmp_delete",
             f => spark.read.format("graft").schema(table.schema).load(f)
               .filter(predicate))
           publishChangeFeed(conf, fs, tableDir)
         }
-        publishDvMasks(fs, tableDir, perFile, takedown)
+        phase("mask-publish")(publishDvMasks(fs, tableDir, perFile, takedown))
       }
       val rowsAfter = {
         val c = GraftScan.rowCount(GraftUtil.listDataFiles(dir, conf), conf)
         if (c.isPresent) c.getAsLong
         else spark.read.format("graft").load(dir).count()
       }
-      DeleteStats(perFile.length, files.size - perFile.length, rowsBefore, rowsAfter)
+      DeleteStats(perFile.size, files.size - perFile.size, rowsBefore, rowsAfter)
     }
 
   /** MERGE-ON-READ update: mask the matched rows' ordinals (deletion
@@ -774,6 +868,11 @@ object GraftMaintenance extends Logging {
       } else {
       val matched = spark.read.format("graft").load(srcScratch.toString)
       try {
+        // ONE probe of the materialized snapshot: per-file ordinal bitmaps
+        // folded executor-side. Its keys are the matched files the change
+        // feed shards by; the bitmaps are the masks published last. The
+        // probe publishes nothing, so the crash order is unchanged.
+        val perFile = probeByFile(matched.select(col("_g_f"), col("_g_o")), BitmapFold)._1
         // changelog FIRST: pre-images under the op's -upd marker (typed
         // change_preimage by the feed reader), ONE feed file PER matched
         // data file at deterministic <ident>-upd<hash8> names — parallel
@@ -782,9 +881,7 @@ object GraftMaintenance extends Logging {
         // was invisible to them). Sharded from the materialized snapshot,
         // so a resume re-derives identical per-file sets.
         if (changelog) {
-          val matchedFiles = matched.select(col("_g_f")).distinct()
-            .collect().map(_.getString(0)).toSeq
-          publishDvChangelog(spark, conf, fs, tableDir, matchedFiles,
+          publishDvChangelog(spark, conf, fs, tableDir, perFile.keys.toSeq,
             s"-upd${opHash.take(8)}", "_graft_tmp_update",
             f => matched.filter(col("_g_f") === f).drop("_g_f", "_g_o"))
           publishChangeFeed(conf, fs, tableDir)
@@ -804,18 +901,17 @@ object GraftMaintenance extends Logging {
          else w0).save(dir)
         val nUpdated = obs.get("n").asInstanceOf[Long]
         afterAppend()
-        // masks LAST: per-file ordinal bitmaps folded executor-side,
-        // published VERSIONED — an update is not a takedown, so a pinned
-        // read older than this statement must keep seeing the pre-update
-        // rows (the asof file window already hides the appended versions)
-        val perFile = foldOrdinalBitmaps(matched.select(col("_g_f"), col("_g_o")))
+        // masks LAST, published VERSIONED — an update is not a takedown,
+        // so a pinned read older than this statement must keep seeing the
+        // pre-update rows (the asof file window already hides the
+        // appended versions)
         publishDvMasks(fs, tableDir, perFile, takedown = false)
         val rowsTotal = {
           val c = GraftScan.rowCount(GraftUtil.listDataFiles(dir, conf), conf)
           if (c.isPresent) c.getAsLong
           else spark.read.format("graft").load(dir).count()
         }
-        UpdateStats(perFile.length, files.size - perFile.length,
+        UpdateStats(perFile.size, files.size - perFile.size,
           nUpdated, rowsTotal)
       } finally fs.delete(srcScratch, true)
       }
@@ -851,9 +947,8 @@ object GraftMaintenance extends Logging {
     // input_file_name() maps matching rows back to their files. The
     // previous per-file probe ran 2-3 driver-sequenced Spark jobs per
     // file — pure scheduler overhead at any real file count.
-    val matched = table.filter(predicate)
-      .select(org.apache.spark.sql.functions.input_file_name().as("f"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val matched = fileCounts(table.filter(predicate)
+      .select(org.apache.spark.sql.functions.input_file_name())).keySet
     // the probe's file mapping depends on the InputFileHolder plumbing
     // (reflective, degrades to "" on an incompatible Spark); a purge that
     // matches rows but cannot NAME their files must fail loudly, never
@@ -1167,9 +1262,14 @@ object GraftMaintenance extends Logging {
     else {
       val t0 = System.nanoTime()
       val r = f
-      logDebug(f"[graft-dml] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      phaseSince(name, t0)
       r
     }
+
+  /** [[phase]]'s line for a step that began at `t0` (`System.nanoTime`)
+    * and ends now — for steps that are not one expression. */
+  private def phaseSince(name: String, t0: Long): Unit =
+    logDebug(f"[graft-dml] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
 
   /** What [[rewriteMatchedFiles]] did: how many files this run rewrote (or
     * finished retiring), and which matched file paths it SKIPPED as
@@ -1467,9 +1567,8 @@ object GraftMaintenance extends Logging {
       if (c.isPresent) c.getAsLong else table.count()
     }
     // ONE probe job: matched files AND the matched-row count per file
-    val matchedCounts: Map[String, Long] = table.filter(predicate)
-      .groupBy(org.apache.spark.sql.functions.input_file_name().as("f"))
-      .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val matchedCounts: Map[String, Long] = phase("probe")(fileCounts(
+      table.filter(predicate).select(org.apache.spark.sql.functions.input_file_name())))
     if (matchedCounts.nonEmpty) {
       val known = files.map(_.getPath.toString).toSet
       require(matchedCounts.keys.forall(f => f.nonEmpty && known.contains(f)),
@@ -1495,7 +1594,7 @@ object GraftMaintenance extends Logging {
       clearMarkerLocked(fs, tableDir, conf)
     val matchedFiles = files.filter(f => matchedCounts.contains(f.getPath.toString))
     val assignOf = norm.toMap
-    val rw = rewriteMatchedFiles(spark, conf, fs, tableDir,
+    val rw = phase("rewrite")(rewriteMatchedFiles(spark, conf, fs, tableDir,
       matchedFiles, schema, RewriteSpec(
         tag = "upd", hash = updHash,
         changelogOf = if (changelog) Some(df => df.filter(predicate)) else None,
@@ -1510,9 +1609,10 @@ object GraftMaintenance extends Logging {
             }
           }.toIndexedSeq: _*)
         },
-        allowEmpty = false, sameCount = true))
-    if (changelog) publishChangeFeed(conf, fs, tableDir)
-    healManifestsAfterRewrite(dir, conf, fs, tableDir, manifestSnapshot)
+        allowEmpty = false, sameCount = true)))
+    if (changelog) phase("changelog")(publishChangeFeed(conf, fs, tableDir))
+    phase("heal+version-sync")(
+      healManifestsAfterRewrite(dir, conf, fs, tableDir, manifestSnapshot))
     // matched rows in converged-skipped files were updated by a PREVIOUS
     // completed run of this statement, not this one — counting them would
     // make a no-op resume indistinguishable from a real update
@@ -2029,9 +2129,8 @@ object GraftMaintenance extends Logging {
         if (dvMode || matchedN.isEmpty || files.isEmpty) Map.empty
         else phase("probe-matched") {
           val condOr = matchedN.map(_.condition.getOrElse(lit(true))).reduce(_ || _)
-          envScoped(tableF).join(hinted(srcRenamed), joinCondR).filter(condOr)
-            .groupBy(col(fileCol).as("f")).agg(scount(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          fileCounts(envScoped(tableF).join(hinted(srcRenamed), joinCondR)
+            .filter(condOr).select(col(fileCol)))
         }
       // not-matched-by-source clauses can touch rows in ANY file; the
       // anti-join probe (narrowed likewise — target-only conditions)
@@ -2040,9 +2139,8 @@ object GraftMaintenance extends Logging {
         if (nmbsN.isEmpty || files.isEmpty) Set.empty
         else {
           val condOr = nmbsN.map(_.condition.getOrElse(lit(true))).reduce(_ || _)
-          tableF.join(hinted(src), joinCond, "left_anti").filter(condOr)
-            .select(col(fileCol).as("f")).distinct()
-            .collect().map(_.getString(0)).toSet
+          fileCounts(tableF.join(hinted(src), joinCond, "left_anti").filter(condOr)
+            .select(col(fileCol))).keySet
         }
       // a RESUME of this same merge (crash after the insert append, or a
       // converging library re-run) must not re-apply the matched clauses
@@ -2170,14 +2268,17 @@ object GraftMaintenance extends Logging {
               val c = GraftScan.rowCount(snapFiles, conf)
               if (c.isPresent) c.getAsLong else matchedSnap.count()
             }
+            // ONE probe of the snapshot: per-file ordinal bitmaps folded
+            // executor-side — the change feed's file set and, last, the
+            // masks (the probe publishes nothing)
+            val perFile = probeByFile(
+              matchedSnap.select(col(fileCol), col(ordCol)), BitmapFold)._1
             // changelog FIRST: pre-images of every applied row under the
             // -mrg marker (typed change_preimage), ONE feed file PER
             // matched data file at deterministic names — parallel, resume-
             // idempotent (sharded from the materialized snapshot)
             if (changelog) {
-              val matchedFiles = matchedSnap.select(col(fileCol)).distinct()
-                .collect().map(_.getString(0)).toSeq
-              publishDvChangelog(spark, conf, fs, tableDir, matchedFiles,
+              publishDvChangelog(spark, conf, fs, tableDir, perFile.keys.toSeq,
                 s"-mrg$mrgHash", "_graft_tmp_merge",
                 f => matchedSnap.filter(col(fileCol) === f)
                   .select(schema.fields.map(fld => col(fld.name)).toIndexedSeq: _*))
@@ -2203,9 +2304,7 @@ object GraftMaintenance extends Logging {
             // visible) — the resume must converge to exactly-once
             if (dvMergeCrashAfterAppend)
               throw new RuntimeException("graft-test: dv-merge crash after append")
-            // masks LAST, versioned, folded executor-side
-            val perFile = foldOrdinalBitmaps(
-              matchedSnap.select(col(fileCol).as("f"), col(ordCol).as("o")))
+            // masks LAST, versioned
             publishDvMasks(fs, tableDir, perFile, takedown = false)
             applied
           }
