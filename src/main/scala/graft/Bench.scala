@@ -1,5 +1,6 @@
 package graft
 
+import graft.spark.GraftFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,7 +150,7 @@ object Bench {
     // regenerated base dataset invalidates the staged amplification
     val fp = {
       val root = new org.apache.hadoop.fs.Path(baseDir)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = GraftFs.get(root, spark.sessionState.newHadoopConf())
       var h = 1125899906842597L
       def mix(x: Long): Unit = h = h * 1000003 + x
       def walk(p: org.apache.hadoop.fs.Path): Unit = {

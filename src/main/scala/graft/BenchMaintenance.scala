@@ -1,5 +1,6 @@
 package graft
 
+import graft.spark.GraftFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,7 @@ object BenchMaintenance {
       (System.nanoTime() - t0) / 1e9
     } else {
       src.write.mode("overwrite").parquet(stage)
-      val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = GraftFs.get(new Path(stage), spark.sessionState.newHadoopConf())
       val t0 = System.nanoTime()
       val tmp = s"$stage.compacting"
       spark.read.parquet(stage).repartition(4).write.mode("overwrite").parquet(tmp)
@@ -133,7 +134,7 @@ object BenchMaintenance {
       } else {
         rm(stage)
         src.write.partitionBy("day").mode("overwrite").parquet(stage)
-        val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new Path(stage), spark.sessionState.newHadoopConf())
         val t0 = System.nanoTime()
         val sub = s"$stage/day=3"
         val tmp = s"$stage/.day=3.compacting"
@@ -247,7 +248,7 @@ object BenchMaintenance {
     val stage = s"/tmp/graft_bench_maint/vac_${format}_${key(dir)}"
     rm(stage)
     val root = new Path(stage)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = GraftFs.get(root, spark.sessionState.newHadoopConf())
     def plant(p: Path): Unit = {
       val out = fs.create(p, true); out.write(7); out.close()
       fs.setTimes(p, 1000L, 1000L)
@@ -324,8 +325,7 @@ object BenchMaintenance {
         .write.format("graft").mode("append").save(src)
       derive(spark.read.format("graft").load(src))
         .write.format("graft").mode("append").save(dst)
-      val fs = new org.apache.hadoop.fs.Path(src)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = GraftFs.get(new org.apache.hadoop.fs.Path(src), spark.sessionState.newHadoopConf())
       val t1 = graft.spark.GraftManifest
         .list(fs, new org.apache.hadoop.fs.Path(src))
         .map(graft.spark.GraftManifest.nameT).max
@@ -611,8 +611,8 @@ object BenchMaintenance {
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 2 === 0)
           .write.format("graft").mode("append").save(stage)
-        val fs = new org.apache.hadoop.fs.Path(stage)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(stage),
+          spark.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(stage))
           .map(graft.spark.GraftManifest.nameT).max
@@ -662,8 +662,8 @@ object BenchMaintenance {
         (0 until 4).foreach { c =>
           d.filter(col("doc_id") % 4 === c)
             .write.format("graft").mode("append").save(stage)
-          val fs = new org.apache.hadoop.fs.Path(stage)
-            .getFileSystem(spark.sessionState.newHadoopConf())
+          val fs = GraftFs.get(new org.apache.hadoop.fs.Path(stage),
+            spark.sessionState.newHadoopConf())
           val t = graft.spark.GraftManifest
             .list(fs, new org.apache.hadoop.fs.Path(stage))
             .map(graft.spark.GraftManifest.nameT).max
@@ -755,7 +755,7 @@ object BenchMaintenance {
     val pdir = s"$ampDir/documents.parquet"
     val pStats = {
       val p = new org.apache.hadoop.fs.Path(pdir)
-      val fs = p.getFileSystem(conf)
+      val fs = GraftFs.get(p, conf)
       fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     }
     val pFiles = pStats.length
@@ -1033,8 +1033,8 @@ object BenchMaintenance {
         derive(spark.read.format("graft").load(gSrc))
           .write.format("graft").mode("append").save(gDstP)
         new java.io.File(s"$gDstP/_MAINT_STAGED").createNewFile()
-        val fs = new org.apache.hadoop.fs.Path(gSrc)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(gSrc),
+          spark.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(gSrc))
           .map(graft.spark.GraftManifest.nameT).max

@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.spark.GraftFs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -95,8 +96,7 @@ object DmlDemo {
     graft.spark.GraftMaintenance.compact(spark, dir, targetFiles = 2)
     val n1 = sql("SELECT count(*) FROM demo.events").head.getLong(0)
     assert(n0 == n1, s"compaction changed the row count: $n0 -> $n1")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = GraftFs.get(new org.apache.hadoop.fs.Path(dir), spark.sessionState.newHadoopConf())
     println(s"   rows=$n1, sidecars remaining=" +
       graft.spark.GraftDv.hasAny(fs, new org.apache.hadoop.fs.Path(dir)))
 

@@ -44,8 +44,6 @@ final class ByteBuf(initialCapacity: Int = 1 << 16) {
     len += 8
   }
 
-  def putFloatLE(v: Float): Unit = putIntLE(java.lang.Float.floatToRawIntBits(v))
-  def putDoubleLE(v: Double): Unit = putLongLE(java.lang.Double.doubleToRawLongBits(v))
 
   def putBytes(src: Array[Byte], off: Int, n: Int): Unit = {
     ensure(n)
@@ -86,8 +84,6 @@ final class ByteCursor(val arr: Array[Byte], var pos: Int) {
     while (i < 8) { v |= (arr(pos + i) & 0xffL) << (8 * i); i += 1 }
     pos += 8; v
   }
-  def getFloatLE(): Float = java.lang.Float.intBitsToFloat(getIntLE())
-  def getDoubleLE(): Double = java.lang.Double.longBitsToDouble(getLongLE())
   def skip(n: Int): Unit = pos += n
   def getBytes(n: Int): Array[Byte] = {
     val b = java.util.Arrays.copyOfRange(arr, pos, pos + n)

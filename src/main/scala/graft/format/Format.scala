@@ -375,5 +375,4 @@ object FormatConstants {
   // files that MAY carry synopses declare 004; synopsis-less files keep
   // writing the oldest magic their features allow.
   val MagicV4: Array[Byte] = "GRAFT004".getBytes("UTF-8")
-  val FooterTailLen: Int = 16 // schemaSize u32 | metaSize u32 | magic 8B
 }

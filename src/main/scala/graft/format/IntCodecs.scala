@@ -555,12 +555,21 @@ object IntCodecs {
           i += 1
         }
       case Codec.Freq =>
+        need(cur, end, width + 8, "freq header")
         val top = getValue()
         val ex = cur.getIntLE()
         val rbLen = cur.getIntLE()
+        if (ex < 0 || ex > n) throw corrupt(s"freq exception count $ex of $n values")
+        if (rbLen < 0 || rbLen > end - cur.pos)
+          throw corrupt(s"freq bitmap of $rbLen bytes, ${end - cur.pos} left in the frame")
         val rb = new RoaringBitmap()
-        rb.deserialize(new java.io.DataInputStream(
+        try rb.deserialize(new java.io.DataInputStream(
           new java.io.ByteArrayInputStream(cur.arr, cur.pos, rbLen)))
+        catch { case e: Exception => throw corrupt(s"freq bitmap: $e") }
+        if (rb.getLongCardinality != ex)
+          throw corrupt(s"freq bitmap holds ${rb.getLongCardinality} positions for $ex exceptions")
+        if (ex > 0 && Integer.toUnsignedLong(rb.last()) >= n)
+          throw corrupt(s"freq position ${Integer.toUnsignedLong(rb.last())} of $n values")
         cur.skip(rbLen)
         val exceptions = readFrame(cur, ex, width)
         java.util.Arrays.fill(out, 0, n, top)
@@ -568,12 +577,14 @@ object IntCodecs {
         var k = 0
         while (it.hasNext) { out(it.next()) = exceptions(k); k += 1 }
       case Codec.Bitpack =>
+        need(cur, end, 9, "bitpack header")
         val base = cur.getLongLE()
-        val bits = cur.getByte()
+        val bits = packedBits(cur, end, n)
         unpack(cur, n, bits, base, out)
       case Codec.DeltaBitpack =>
+        need(cur, end, 9, "deltabitpack header")
         val first = cur.getLongLE()
-        val bits = cur.getByte()
+        val bits = packedBits(cur, end, n)
         unpack(cur, n, bits, 0L, out)
         if (n > 0) {
           out(0) = first
@@ -584,6 +595,20 @@ object IntCodecs {
     }
     cur.pos = end
     out
+  }
+
+  private def need(cur: ByteCursor, end: Int, bytes: Int, what: String): Unit =
+    if (end - cur.pos < bytes)
+      throw corrupt(s"$what of $bytes bytes exceeds the ${end - cur.pos} left in the frame")
+
+  /** A bit-packed payload's width byte, checked against the frame. */
+  private def packedBits(cur: ByteCursor, end: Int, n: Int): Int = {
+    val bits = cur.getByte()
+    if (bits > 64) throw corrupt(s"bit width $bits")
+    val bytes = (n.toLong * bits + 7) / 8
+    if (bytes > end - cur.pos)
+      throw corrupt(s"$n values of $bits bits in ${end - cur.pos} bytes")
+    bits
   }
 
   private def unpack(cur: ByteCursor, n: Int, bits: Int, base: Long, out: Array[Long]): Unit = {

@@ -37,11 +37,6 @@ sealed trait VecBuilder {
   def clear(): Unit
 }
 
-private object BuilderUtil {
-  def grow[T <: AnyRef](arr: T, needed: Int, copy: (T, Int) => T, len: Int): T =
-    if (needed <= len) arr else copy(arr, math.max(needed, len * 2))
-}
-
 final class BoolVecBuilder(initial: Int = 1024) extends VecBuilder {
   private var vals = new Array[Boolean](initial)
   private var nullsArr: Array[Boolean] = null

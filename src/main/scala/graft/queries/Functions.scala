@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.spark.GraftFs
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -67,8 +68,7 @@ object Functions {
       d.filter(col("doc_id") % 5 =!= 0)
         .write.format("graft").option("partitionby", "victim")
         .mode("append").save(t)
-      val fs = new org.apache.hadoop.fs.Path(t)
-        .getFileSystem(s.sessionState.newHadoopConf())
+      val fs = GraftFs.get(new org.apache.hadoop.fs.Path(t), s.sessionState.newHadoopConf())
       val t1 = graft.spark.GraftManifest
         .list(fs, new org.apache.hadoop.fs.Path(t))
         .map(graft.spark.GraftManifest.nameT).max
@@ -1122,7 +1122,7 @@ object Functions {
       val stage = stagedOnce(
           s"/tmp/graft_vac_stage2/${stageKey(s, dir, "orders")}/orders") { t =>
         val tRoot = new org.apache.hadoop.fs.Path(t)
-        val tfs = tRoot.getFileSystem(s.sessionState.newHadoopConf())
+        val tfs = GraftFs.get(tRoot, s.sessionState.newHadoopConf())
         Tables.parquet(s, dir, "orders")
           .write.format("graft").option("maxrowsperfile", "5000")
           .mode("overwrite").save(t)
@@ -1140,7 +1140,7 @@ object Functions {
           s"q_vacuum staging: expected 2 tmps + 1 scratch collected, got $st")
       }
       val root = new org.apache.hadoop.fs.Path(stage)
-      val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+      val fs = GraftFs.get(root, s.sessionState.newHadoopConf())
       // junk recount AFTER vacuum: aged tmps / scratch remaining (0)
       var junkLeft = 0
       def walk(d: org.apache.hadoop.fs.Path): Unit =
@@ -1218,8 +1218,7 @@ object Functions {
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 2 === 0)
           .write.format("graft").mode("append").save(t)
-        val fs = new org.apache.hadoop.fs.Path(t)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(t), s.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(t))
           .map(graft.spark.GraftManifest.nameT).max
@@ -1254,8 +1253,7 @@ object Functions {
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 2 === 0)
           .write.format("graft").mode("append").save(t)
-        val fs = new org.apache.hadoop.fs.Path(t)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(t), s.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(t))
           .map(graft.spark.GraftManifest.nameT).max
@@ -1615,8 +1613,7 @@ object Functions {
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 2 === 0)
           .write.format("graft").mode("append").save(t)
-        val fs = new org.apache.hadoop.fs.Path(t)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(t), s.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(t))
           .map(graft.spark.GraftManifest.nameT).max
@@ -1703,8 +1700,7 @@ object Functions {
           .select(col("doc_id"), col("lang"), col("n_chars"))
         d.filter(col("doc_id") % 5 =!= 0)
           .write.format("graft").mode("append").save(t)
-        val fs = new org.apache.hadoop.fs.Path(t)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val fs = GraftFs.get(new org.apache.hadoop.fs.Path(t), s.sessionState.newHadoopConf())
         val t1 = graft.spark.GraftManifest
           .list(fs, new org.apache.hadoop.fs.Path(t))
           .map(graft.spark.GraftManifest.nameT).max

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.spark.GraftFs
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -586,7 +587,7 @@ object TrainingData {
 
   private def deleteScratchDir(s: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    try p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    try GraftFs.get(p, s.sparkContext.hadoopConfiguration).delete(p, true)
     catch { case _: java.io.IOException => () }
   }
 
@@ -602,7 +603,7 @@ object TrainingData {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           val p = new org.apache.hadoop.fs.Path(appDir)
-          try p.getFileSystem(conf).delete(p, true)
+          try GraftFs.get(p, conf).delete(p, true)
           catch { case _: java.io.IOException => () }
         }
       })

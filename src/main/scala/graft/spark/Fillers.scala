@@ -41,8 +41,6 @@ object FieldFiller {
     case _ => new AtomicFiller(dt)
   }
 
-  def forField(f: StructField): FieldFiller = apply(f.dataType, f.nullable)
-
   /** Filler for a projected field whose type may be a struct-pruned subset
     * of the file's type — including struct elements nested under arrays and
     * map values: leaf offsets follow the FULL file layout (so the on-disk

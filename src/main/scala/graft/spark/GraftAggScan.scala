@@ -204,7 +204,7 @@ final class GraftAggScan(private val path: String, conf: org.apache.hadoop.conf.
     // resolve it the same way createReaderFactory does, or a subdir count
     // would find no sidecars and silently overcount deleted rows.
     val scanPath = new org.apache.hadoop.fs.Path(path)
-    val fs = scanPath.getFileSystem(conf)
+    val fs = GraftFs.get(scanPath, conf)
     val dvRoot = GraftDv.rootOfScanPath(fs, scanPath)
     val dvs = GraftDv.list(fs, dvRoot)
     def maskedOf(filePath: String): Long =
@@ -216,7 +216,7 @@ final class GraftAggScan(private val path: String, conf: org.apache.hadoop.conf.
       groupedFiles.map(f =>
         GraftAggInputPartition(f._1, f._2, f._3.toArray,
           maskedOf(f._1)): InputPartition).toArray
-    else GraftRewriteGuard.adjust(path, conf, GraftUtil.listDataFiles(path, conf))
+    else GraftRewriteGuard.listVisible(path, conf)
       .map(f => GraftAggInputPartition(f.getPath.toString, f.getLen, Array.empty,
         maskedOf(f.getPath.toString)): InputPartition)
       .toArray
@@ -253,7 +253,7 @@ final class GraftAggReaderFactory(conf: org.apache.spark.broadcast.Broadcast[Ser
       override def next(): Boolean = {
         if (done) return false
         val hPath = new org.apache.hadoop.fs.Path(p.filePath)
-        val in = new HadoopSeekableInput(hPath.getFileSystem(conf.value.value), hPath, p.fileLen)
+        val in = new HadoopSeekableInput(GraftFs.get(hPath, conf.value.value), hPath, p.fileLen)
         try {
           val footer = GraftFileReader.readFooter(in)
           val fileSchema = GraftColumnMap.renameSchema(

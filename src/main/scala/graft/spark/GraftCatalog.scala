@@ -59,7 +59,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private var warehouse: Path = _
 
   private def conf = SparkSession.active.sessionState.newHadoopConf()
-  private def fs = warehouse.getFileSystem(conf)
+  private def fs = GraftFs.get(warehouse, conf)
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -173,28 +173,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     else Seq.empty
 
   private def sidecarSchema(dir: Path): StructType = sidecarContent(dir)._1
-
-  /** Partition columns the table DECLARES (CREATE TABLE PARTITIONED BY),
-    * else the layout the data files actually carry — either way the
-    * transforms [[GraftTable.partitioning]] reports, which is what makes
-    * `INSERT OVERWRITE` under dynamic mode plan a partition overwrite
-    * instead of a truncate. */
-  private def partitionColsOf(dir: Path): Seq[String] = {
-    val declared =
-      if (sidecarExists(dir)) sidecarContent(dir)._2 else Seq.empty
-    if (declared.nonEmpty) declared
-    else {
-      // infer from EVERY file, not the first listed: a mixed-layout dir
-      // (e.g. one path-written unpartitioned file beside k=v subdirs)
-      // would otherwise make the reported partitioning — and hence
-      // dynamic INSERT OVERWRITE routing — depend on listing order,
-      // silently downgrading a partition overwrite to truncate-like
-      // behavior. Mixed layouts fail loudly instead (ONE shared rule:
-      // GraftUtil.layoutOf, also behind compactPartition).
-      GraftUtil.layoutOf(dir,
-        GraftUtil.listDataFiles(dir.toString, conf), strict = true)
-    }
-  }
 
   /** The table's current schema: the footer schema of the data files,
     * extended by sidecar columns no file carries yet (ALTER TABLE ADD
@@ -726,7 +704,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       val files = GraftUtil.listDataFiles(dir.toString, conf)
       if (files.size > 256) return true
       files.exists { f =>
-        val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+        val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
         try GraftFooterCache.schemaOf(
             GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen).schemaJson)
           .fieldNames.exists(n => namesLower.contains(n.toLowerCase))

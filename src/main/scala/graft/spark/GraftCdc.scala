@@ -132,7 +132,7 @@ object GraftCdc {
       sinceMillis: Long, asofMillis: Long): (Option[Long], Boolean) = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     if (!fs.exists(tableDir)) return (Some(0L), false)
     val committedAt = GraftManifest.committedTimes(fs, tableDir)
     val inWindow = GraftUtil.listDataFiles(dir, conf).filter { f =>
@@ -247,7 +247,7 @@ object GraftCdc {
     require(GraftUtil.listDataFiles(srcDir, conf0).nonEmpty,
       s"graft: no table under $srcDir")
     val tgtPath = new org.apache.hadoop.fs.Path(targetDir)
-    val tgtFs = tgtPath.getFileSystem(conf0)
+    val tgtFs = GraftFs.get(tgtPath, conf0)
     GraftTableLock.withLock(tgtFs, tgtPath, conf0, "applyChanges") {
       // direct maintenance-lock acquisition: the nested deleteWhere reads
       // as inner and skips its roll-forward — complete any crashed swap on
@@ -268,8 +268,7 @@ object GraftCdc {
     // (a retry spelling the same path differently must land on the same
     // tag); 10 digest bytes keep cross-window collisions negligible
     val windowTag = {
-      val srcQ = new org.apache.hadoop.fs.Path(srcDir)
-        .getFileSystem(conf0).makeQualified(
+      val srcQ = GraftFs.get(new org.apache.hadoop.fs.Path(srcDir), conf0).makeQualified(
           new org.apache.hadoop.fs.Path(srcDir)).toString
       val tgtQ = tgtFs.makeQualified(tgtPath).toString
       "cdcw" + GraftManifest.md5Hex(

@@ -161,7 +161,7 @@ object GraftUtil {
 
   def listDataFilesRaw(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
+    val fs = GraftFs.get(p, conf)
     if (!fs.exists(p)) return Seq.empty
     val st = fs.getFileStatus(p)
     if (!st.isDirectory)
@@ -286,7 +286,7 @@ object GraftUtil {
     require(files.nonEmpty, s"graft: no $Extension files under $dir to infer schema from")
     val head = files.head
     val in = new HadoopSeekableInput(
-      head.getPath.getFileSystem(conf), head.getPath, head.getLen)
+      GraftFs.get(head.getPath, conf), head.getPath, head.getLen)
     val footerSchema = try {
       val footer = GraftFileReader.readFooter(in)
       DataType.fromJson(footer.schemaJson).asInstanceOf[StructType]
@@ -295,7 +295,7 @@ object GraftUtil {
     // physical names surface under their logical name, dropped columns
     // disappear — files stay immutable, path and catalog readers agree
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
+    val fs = GraftFs.get(dirPath, conf)
     val mapping = GraftColumnMap.forRead(fs, dirPath)
     val mapped =
       if (mapping.isEmpty) footerSchema
@@ -466,7 +466,7 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
   private def partitionCombos(): Seq[Seq[String]] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = GraftFs.get(root, conf)
     if (partitionCols.isEmpty || !fs.exists(root)) return Seq.empty
     def walk(d: Path, depth: Int): Seq[Seq[String]] =
       if (depth == partDirNames.length) Seq(Seq.empty)
@@ -518,7 +518,7 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
       properties: java.util.Map[String, String]): Unit = {
     val spark = SparkSession.active
     val d = partitionDirOf(ident)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = GraftFs.get(d, spark.sessionState.newHadoopConf())
     if (fs.exists(d))
       throw new org.apache.spark.sql.catalyst.analysis.PartitionsAlreadyExistException(
         name(), ident, partitionSchema())
@@ -539,7 +539,7 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val d = partitionDirOf(ident)
-    val fs = d.getFileSystem(conf)
+    val fs = GraftFs.get(d, conf)
     if (!fs.exists(d)) return false
     retirePartitionFiles(spark, conf, d)
     val leftover = fs.listStatus(d)
@@ -559,7 +559,7 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val d = partitionDirOf(ident)
-    val fs = d.getFileSystem(conf)
+    val fs = GraftFs.get(d, conf)
     if (!fs.exists(d))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchPartitionException(
         name(), ident, partitionSchema())
@@ -569,7 +569,7 @@ final class GraftTable(private val tableSchema: StructType, private val path: St
 
   private def retirePartitionFiles(spark: SparkSession,
       conf: org.apache.hadoop.conf.Configuration, d: Path): Unit = {
-    val fs = d.getFileSystem(conf)
+    val fs = GraftFs.get(d, conf)
     val prefix = fs.makeQualified(d).toString + "/"
     val victims = GraftUtil.listDataFiles(path, conf)
       .map(f => f.getPath.toString).filter(_.startsWith(prefix)).toSet
@@ -752,8 +752,8 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
   // exists() probe per plan.
   private lazy val hasDvs: Boolean = {
     val p = new Path(path)
-    val root = GraftDv.rootOfScanPath(p.getFileSystem(conf), p)
-    GraftDv.hasAny(root.getFileSystem(conf), root)
+    val root = GraftDv.rootOfScanPath(GraftFs.get(p, conf), p)
+    GraftDv.hasAny(GraftFs.get(root, conf), root)
   }
   private var aggPlan: Option[(Seq[GraftAggPushdown.AggSpec], StructType)] = None
   private var pushedLimit: Option[Int] = None
@@ -763,7 +763,7 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
   // schema before name resolution (one tiny driver-side read per plan)
   private val colAliases: Map[String, String] = {
     val p = new Path(path)
-    GraftColumnMap.forRead(p.getFileSystem(conf), p).physToLogical
+    GraftColumnMap.forRead(GraftFs.get(p, conf), p).physToLogical
   }
 
   /** Partial limit pushdown: the scan plans only enough leading page groups
@@ -808,7 +808,7 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
     import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
     if (limit < 0 || orders.isEmpty) return false
     val p = new Path(path)
-    val marker = GraftSortMarker.read(p.getFileSystem(conf), p).getOrElse(return false)
+    val marker = GraftSortMarker.read(GraftFs.get(p, conf), p).getOrElse(return false)
     val asc = orders.head.direction == SortDirection.ASCENDING
     val names = orders.toSeq.map { o =>
       if ((o.direction == SortDirection.ASCENDING) != asc) return false
@@ -981,8 +981,7 @@ final class GraftScanBuilder(tableSchema: StructType, path: String,
         if (groupFields.exists(f =>
           f.isEmpty || !GraftAggPushdown.pathParseable(f.get.dataType))) return false
         val tableDir = new Path(path)
-        val files = GraftRewriteGuard.adjust(path, conf,
-          GraftUtil.listDataFiles(path, conf))
+        val files = GraftRewriteGuard.listVisible(path, conf)
         if (files.isEmpty) return false
         val grouped = files.map { f =>
           val m = GraftUtil.partitionSegments(tableDir, f.getPath).toMap
@@ -1075,7 +1074,6 @@ final class GraftScan(private val tableSchema: StructType, private val projected
   }
 
   private def computeFiles(): Seq[FileStatus] = {
-    val listedAll = GraftUtil.listDataFiles(path, conf)
     // snapshot-exact scan: plan EXACTLY the caller's pinned file set. A
     // pinned file missing from the listing is a hard error — the callers
     // (maintenance rewrites) retire this same set afterwards, and a scan
@@ -1085,9 +1083,9 @@ final class GraftScan(private val tableSchema: StructType, private val projected
       // an in-flight whole-table rewrite's visibility markers apply to
       // READERS only (a pinned maintenance scan reads its exact snapshot
       // regardless): old view before the flip, new view after, never both
-      case None => GraftRewriteGuard.adjust(path, conf, listedAll)
+      case None => GraftRewriteGuard.listVisible(path, conf)
       case Some(pin) =>
-        val kept = listedAll.filter(f => pin.contains(f.getPath.toString))
+        val kept = GraftUtil.listDataFiles(path, conf).filter(f => pin.contains(f.getPath.toString))
         require(kept.size == pin.size,
           s"graft: snapshotfiles scan pinned ${pin.size} files but only " +
             s"${kept.size} are present under $path — a pinned file was " +
@@ -1110,7 +1108,7 @@ final class GraftScan(private val tableSchema: StructType, private val projected
       if (asofOpt.isEmpty && sinceOpt.isEmpty) listed
       else {
         val tableDir = new Path(path)
-        val fs = tableDir.getFileSystem(conf)
+        val fs = GraftFs.get(tableDir, conf)
         // catch-up manifests (survivor re-lists of pre-manifest history)
         // are NOT commits: their files stay pre-manifest history here, or
         // a delete would push its survivors into every later `since`
@@ -1290,7 +1288,7 @@ final class GraftScan(private val tableSchema: StructType, private val projected
   // one tiny sidecar read per plan
   private lazy val spjDeclaredTx: Seq[PartTransform] = {
     val p = new Path(path)
-    GraftCatalog.declaredPartSpecsOf(p.getFileSystem(conf), p)
+    GraftCatalog.declaredPartSpecsOf(GraftFs.get(p, conf), p)
       .map(GraftPartTransform.parse)
   }
 
@@ -1318,7 +1316,7 @@ final class GraftScan(private val tableSchema: StructType, private val projected
         return Array.empty[SortOrder]
       case _ => ()
     }
-    val fs = new Path(path).getFileSystem(conf)
+    val fs = GraftFs.get(new Path(path), conf)
     GraftSortMarker.read(fs, new Path(path)) match {
       case Some(cols) =>
         val avail = projected.fieldNames.toSet
@@ -1358,8 +1356,8 @@ final class GraftScan(private val tableSchema: StructType, private val projected
       if (topn.isEmpty && limit.isEmpty) Map.empty
       else {
         val p0 = new Path(path)
-        val root = GraftDv.rootOfScanPath(p0.getFileSystem(conf), p0)
-        val fsys = root.getFileSystem(conf)
+        val root = GraftDv.rootOfScanPath(GraftFs.get(p0, conf), p0)
+        val fsys = GraftFs.get(root, conf)
         val dvs = GraftDv.list(fsys, root)
         if (dvs.isEmpty) Map.empty
         else files.flatMap { f =>
@@ -1474,8 +1472,8 @@ final class GraftScan(private val tableSchema: StructType, private val projected
       // before the pin, takedowns floored in) so time-travel reads
       // reproduce the dataset a training run actually saw
       val p0 = new Path(path)
-      val dvRoot = GraftDv.rootOfScanPath(p0.getFileSystem(conf), p0)
-      val dvs = GraftDv.listAt(dvRoot.getFileSystem(conf), dvRoot, asofOpt)
+      val dvRoot = GraftDv.rootOfScanPath(GraftFs.get(p0, conf), p0)
+      val dvs = GraftDv.listAt(GraftFs.get(dvRoot, conf), dvRoot, asofOpt)
         .map { case (ident, (_, p)) => ident -> p }
       factory = new GraftReaderFactory(HadoopConfBroadcast(conf), projected.json, pagePreds,
         colAliases, dvs)
@@ -1605,7 +1603,7 @@ object GraftScan {
       val key = f.getPath.toString + "#" + f.getLen
       var m = fieldBytesCache.get(key)
       if (m == null) {
-        val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+        val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
         try {
           val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
           val schema = GraftFooterCache.schemaOf(footer.schemaJson)
@@ -1645,7 +1643,7 @@ object GraftScan {
       val key = f.getPath.toString + "#" + f.getLen + "@" + f.getModificationTime
       var m = kmvCache.get(key)
       if (m == null) {
-        val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+        val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
         try {
           val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
           val schema = GraftFooterCache.schemaOf(footer.schemaJson)
@@ -1738,7 +1736,7 @@ object GraftScan {
         val key = f.getPath.toString + "#" + f.getLen + "@" + f.getModificationTime
         var cached = boundsCache.get(key)
         if (cached == null) {
-          val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+          val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
           try {
             val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
             val schema = GraftFooterCache.schemaOf(footer.schemaJson)
@@ -1785,7 +1783,7 @@ object GraftScan {
     val key = f.getPath.toString + "#" + f.getLen
     val cached = pageRowsCache.get(key)
     if (cached != null) return cached
-    val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+    val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
     try {
       val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
       val arr =
@@ -1802,7 +1800,7 @@ object GraftScan {
     val key = f.getPath.toString + "#" + f.getLen
     val cached = pageCountCache.get(key)
     if (cached != null) return cached.intValue()
-    val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+    val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
     try {
       val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
       val n = if (footer.leaves.isEmpty) 1 else footer.leaves(0).pages.length
@@ -1824,7 +1822,7 @@ object GraftScan {
       val cached = rowCountCache.get(key)
       if (cached != null) total += cached
       else {
-        val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+        val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
         try {
           val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
           val n = if (footer.leaves.isEmpty) 0L else footer.leaves(0).totalValues
@@ -1910,7 +1908,7 @@ final class GraftReaderFactory(conf: org.apache.spark.broadcast.Broadcast[Serial
     if (dvByIdent.isEmpty) return None
     val p = new Path(filePath)
     dvByIdent.get(GraftDv.identOf(dvRoot, p))
-      .map(s => GraftDv.read(p.getFileSystem(conf.value.value), s))
+      .map(s => GraftDv.read(GraftFs.get(p, conf.value.value), s))
   }
 
   private def fileColumnarReader(f: String, len: Long,
@@ -2295,7 +2293,7 @@ final class GraftColumnarReader(filePath: String, fileLen: Long,
     extends PartitionReader[ColumnarBatch] {
 
   private val hPath = new Path(filePath)
-  private val input = new HadoopSeekableInput(hPath.getFileSystem(conf), hPath, fileLen)
+  private val input = new HadoopSeekableInput(GraftFs.get(hPath, conf), hPath, fileLen)
   private val footer = GraftFooterCache.footerOf(input, filePath, fileLen)
   // column-mapping RENAMEs re-label the footer schema to logical names
   // (name strings only — leaf order and indices untouched), so every

@@ -292,9 +292,9 @@ object GraftDv {
     // marker probes memoized by parent dir: sibling files share the walk
     val rootOfParent = scala.collection.mutable.HashMap[Path, Path]()
     def rootOf(p: Path): Path = rootOfParent.getOrElseUpdate(p.getParent,
-      tableRootOf(p.getFileSystem(conf), p))
+      tableRootOf(GraftFs.get(p, conf), p))
     files.groupBy(f => rootOf(f.getPath)).map { case (root, fsOfRoot) =>
-      val fsys = root.getFileSystem(conf)
+      val fsys = GraftFs.get(root, conf)
       if (!fsys.exists(dir(root))) 0L
       else {
         val dvs = list(fsys, root)

@@ -39,14 +39,13 @@ object GraftExport {
     val spark = df.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(conf)
+    val fs = GraftFs.get(dest, conf)
     fs.delete(dest, true)
     fs.mkdirs(dest)
     val bconf = HadoopConfBroadcast(conf)
     val destStr = dest.toString
     val counts = df.rdd.mapPartitionsWithIndex { (pi, it) =>
-      val fs = new org.apache.hadoop.fs.Path(destStr)
-        .getFileSystem(bconf.value.value)
+      val fs = GraftFs.get(new org.apache.hadoop.fs.Path(destStr), bconf.value.value)
       var fileIdx = 0
       var total = 0L
       it.grouped(rowsPerFile).foreach { batch =>

@@ -25,7 +25,7 @@ object GraftImport {
   def listStrawboatFiles(spark: SparkSession, path: String): Seq[(String, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = GraftFs.get(p, conf)
     require(fs.exists(p), s"strawboat import: no such path $path")
     val st = fs.getFileStatus(p)
     val candidates =
@@ -56,7 +56,7 @@ object GraftImport {
     // driver: one footer read pins the schema; every file must agree
     val schema = {
       val p = new org.apache.hadoop.fs.Path(files.head._1)
-      val fs = p.getFileSystem(conf)
+      val fs = GraftFs.get(p, conf)
       val in = new HadoopSeekableInput(fs, p, files.head._2)
       try StrawboatImport.sparkSchema(StrawboatImport.readFooter(in))
       finally in.close()
@@ -67,7 +67,7 @@ object GraftImport {
       .parallelize(files, math.min(files.size, 1024))
       .flatMap { case (file, len) =>
         val p = new org.apache.hadoop.fs.Path(file)
-        val fs = p.getFileSystem(bconf.value.value)
+        val fs = GraftFs.get(p, bconf.value.value)
         val in = new HadoopSeekableInput(fs, p, len)
         try {
           val (fileSchema, rows) = StrawboatImport.decodeFile(in)

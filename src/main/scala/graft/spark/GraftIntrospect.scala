@@ -58,11 +58,10 @@ object GraftIntrospect {
       status: org.apache.hadoop.fs.FileStatus)
 
   def describeFiles(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileLayout] = {
-    val files = GraftRewriteGuard.adjust(dir, conf,
-      GraftUtil.listDataFiles(dir, conf))
+    val files = GraftRewriteGuard.listVisible(dir, conf)
     require(files.nonEmpty, s"graft: no data files under $dir")
     files.map { f =>
-      val in = new HadoopSeekableInput(f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+      val in = new HadoopSeekableInput(GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
       try {
         val footer = GraftFileReader.readFooter(in)
         val schema = DataType.fromJson(footer.schemaJson).asInstanceOf[StructType]
@@ -112,7 +111,7 @@ object GraftIntrospect {
   def history(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val log = GraftVersionLog.sync(fs, tableDir)
     val manifests = GraftManifest.list(fs, tableDir)
     val manifestSet = manifests.toSet
@@ -180,7 +179,7 @@ object GraftIntrospect {
   def dv(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val all = GraftDv.listAll(fs, tableDir)
     val currentPath = GraftDv.list(fs, tableDir)
       .map { case (ident, (_, p)) => ident -> p }
@@ -219,8 +218,7 @@ object GraftIntrospect {
   def partitions(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val files = GraftRewriteGuard.adjust(dir, conf,
-      GraftUtil.listDataFiles(dir, conf))
+    val files = GraftRewriteGuard.listVisible(dir, conf)
     val groups = files.groupBy(f =>
       GraftUtil.partitionSegments(tableDir, f.getPath)
         .map { case (k, v) => s"$k=${if (v == null) "null" else v}" }

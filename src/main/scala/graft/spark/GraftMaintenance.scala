@@ -67,7 +67,7 @@ object GraftMaintenance extends Logging {
     locked(spark, dir, "analyze") {
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val files = GraftUtil.listDataFiles(dir, conf)
       require(files.nonEmpty, s"graft: nothing to analyze under $dir")
       val sidecarJson = GraftCatalog.sidecarJsonAt(fs, tableDir)
@@ -154,7 +154,7 @@ object GraftMaintenance extends Logging {
   private def locked[T](spark: SparkSession, dir: String, op: String)(f: => T): T = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val outer = !GraftTableLock.isHeld(fs, tableDir)
     val t0 = System.nanoTime()
     GraftTableLock.withLock(fs, tableDir, conf, op) {
@@ -242,7 +242,7 @@ object GraftMaintenance extends Logging {
     require(targetFiles >= 1, s"graft: targetFiles must be >= 1, got $targetFiles")
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val before = GraftUtil.listDataFiles(dir, conf)
     val beforeManifests = GraftManifest.list(fs, tableDir)
     require(before.nonEmpty, s"graft: nothing to compact under $dir")
@@ -699,7 +699,7 @@ object GraftMaintenance extends Logging {
     locked(spark, dir, "deleteWhereDv") {
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val files = GraftUtil.listDataFiles(dir, conf)
       require(files.nonEmpty, s"graft: nothing to delete under $dir")
       val rowsBefore = {
@@ -811,7 +811,7 @@ object GraftMaintenance extends Logging {
       import org.apache.spark.sql.functions.{col, input_file_name, lit, count => cnt}
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val files = GraftUtil.listDataFiles(dir, conf)
       require(files.nonEmpty, s"graft: nothing to update under $dir")
       require(assignments.nonEmpty, "graft: updateWhereDv needs assignments")
@@ -924,7 +924,7 @@ object GraftMaintenance extends Logging {
       scope: Option[Set[String]] = None): DeleteStats = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val files = GraftUtil.listDataFiles(dir, conf)
     require(files.nonEmpty, s"graft: nothing to delete under $dir")
     val manifestSnapshot = GraftManifest.list(fs, tableDir)
@@ -1033,7 +1033,7 @@ object GraftMaintenance extends Logging {
     locked(spark, dir, "overwrite") {
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val files = GraftUtil.listDataFiles(dir, conf)
       val manifestSnapshot = GraftManifest.list(fs, tableDir)
       val victims = files.filter(f => victimPaths.contains(f.getPath.toString))
@@ -1532,7 +1532,7 @@ object GraftMaintenance extends Logging {
     require(assignments.nonEmpty, "graft: updateWhere needs at least one assignment")
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val files = GraftUtil.listDataFiles(dir, conf)
     require(files.nonEmpty, s"graft: nothing to update under $dir")
     val manifestSnapshot = GraftManifest.list(fs, tableDir)
@@ -1784,7 +1784,7 @@ object GraftMaintenance extends Logging {
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     files.foreach { f =>
       val in = new HadoopSeekableInput(
-        f.getPath.getFileSystem(conf), f.getPath, f.getLen)
+        GraftFs.get(f.getPath, conf), f.getPath, f.getLen)
       try {
         val footer = GraftFooterCache.footerOf(in, f.getPath.toString, f.getLen)
         val schema = GraftFooterCache.schemaOf(footer.schemaJson)
@@ -1854,7 +1854,7 @@ object GraftMaintenance extends Logging {
       "graft: a NOT MATCHED insert clause needs values (assigns = None is DELETE, which has no meaning for an insert)"))
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val files = GraftUtil.listDataFiles(dir, conf)
     // an EMPTY target is legal when the merge inserts (every source row is
     // unmatched) — a fresh table populated by its first CDC batch
@@ -2469,7 +2469,7 @@ object GraftMaintenance extends Logging {
       olderThanMs: Long): Int = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     GraftVersionLog.sync(fs, tableDir) // ordinals registered before expiry
     val expired = GraftManifest.list(fs, tableDir)
       .filter(n => GraftManifest.nameT(n) < olderThanMs)
@@ -2531,7 +2531,7 @@ object GraftMaintenance extends Logging {
     import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     require(fs.exists(tableDir), s"graft: no table at $dir")
     val capped = 1000
     var tmps, scratch, changelog = 0
@@ -2729,7 +2729,7 @@ object GraftMaintenance extends Logging {
       require(partition.nonEmpty, "graft: compactPartition needs a partition spec")
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val files = GraftUtil.listDataFiles(dir, conf)
       require(files.nonEmpty, s"graft: nothing to compact under $dir")
       // strict all-files inference (the catalog rule) — a mixed layout
@@ -2828,7 +2828,7 @@ object GraftMaintenance extends Logging {
       olderThanMs: Long, dryRun: Boolean = false): (Int, Long) = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(warehouseDir)
-    val fs = root.getFileSystem(conf)
+    val fs = GraftFs.get(root, conf)
     if (!fs.exists(root)) return (0, 0L)
     val StagedPat = raw"\..+\.(?:staged|replaced)-[0-9a-f]+".r
     var removed = 0; var bytes = 0L
@@ -2944,7 +2944,7 @@ object GraftMaintenance extends Logging {
       asofMillis: Long): RestoreStats = {
     val conf = spark.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     val commits = GraftVersionLog.commits(GraftVersionLog.sync(fs, tableDir))
     val idx = commits.lastIndexWhere(n => GraftManifest.nameT(n) <= asofMillis)
     require(idx >= 0,
@@ -2956,7 +2956,7 @@ object GraftMaintenance extends Logging {
     locked(spark, dir, "restore") {
       val conf = spark.sessionState.newHadoopConf()
       val tableDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val log = GraftVersionLog.sync(fs, tableDir)
       val commits = GraftVersionLog.commits(log)
       require(version >= 1 && version <= commits.size,

@@ -30,11 +30,10 @@ object GraftNdv {
     */
   def estimate(spark: SparkSession, dir: String, cols: Seq[String]): Seq[NdvStat] = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = GraftRewriteGuard.adjust(dir, conf,
-      GraftUtil.listDataFiles(dir, conf))
+    val files = GraftRewriteGuard.listVisible(dir, conf)
     require(files.nonEmpty, s"graft: no data files under $dir")
     val perFile = files.map { f =>
-      val fs = f.getPath.getFileSystem(conf)
+      val fs = GraftFs.get(f.getPath, conf)
       val in = new HadoopSeekableInput(fs, f.getPath, f.getLen)
       try {
         val footer = GraftFileReader.readFooter(in)

@@ -24,12 +24,13 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *     so the NEW snapshot serves even though the old files still exist;
   *  5. retire the old files (invisible already), delete p2.
   *
-  * Readers pay two `exists` probes at plan time, and a manifest read only
-  * while a rewrite is actually in flight. Concurrent appends are in
-  * neither the tagged manifest nor the retire list — drip ingest stays
-  * visible through every phase, exactly as compact's concurrency model
-  * promises. Maintenance code never applies the adjustment (its scans pin
-  * exact file sets via `snapshotfiles`); a crashed rewrite's markers heal
+  * Readers pay four `exists` probes at plan time (both markers, before
+  * and after the listing), and a manifest read only while a rewrite is
+  * actually in flight. Concurrent appends are in neither the tagged
+  * manifest nor the retire list — drip ingest stays visible through every
+  * phase, exactly as compact's concurrency model promises. Maintenance
+  * code never applies the adjustment (its scans pin exact file sets via
+  * `snapshotfiles`); a crashed rewrite's markers heal
   * at the next maintenance-lock acquisition ([[heal]]): roll BACK when
   * the tagged manifest never committed (drop both markers — the old view
   * readers held all along is the state), roll FORWARD when it did
@@ -55,7 +56,8 @@ private[spark] object GraftRewriteGuard {
   private def readLines(fs: FileSystem, p: Path): Option[Seq[String]] =
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
+      // a marker can vanish between the probe and the open
+      val in = try fs.open(p) catch { case _: java.io.FileNotFoundException => return None }
       try Some(scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().filter(_.nonEmpty).toList)
       finally in.close()
@@ -82,39 +84,63 @@ private[spark] object GraftRewriteGuard {
     if (q.startsWith(base + "/")) q.substring(base.length + 1) else p.getName
   }
 
-  /** Reader-side view adjustment. p1 wins while present (old snapshot:
-    * hide the in-flight rewrite's tagged manifest files); otherwise p2
-    * hides the retire list (new snapshot). No markers — the listing as
-    * is, zero extra IO beyond the two probes. */
-  def adjust(fs: FileSystem, tableDir: Path,
-      listed: Seq[FileStatus]): Seq[FileStatus] = {
-    val p1 = readLines(fs, new Path(tableDir, P1))
-    p1 match {
-      case Some(Seq(tag)) =>
+  /** The data files a reader sees under `dir`: the listing, adjusted by
+    * the visibility markers. p1 wins while present (old snapshot: hide the
+    * in-flight rewrite's tagged manifest files); otherwise p2 hides the
+    * retire list (new snapshot). No markers: the listing as is.
+    *
+    * The markers must describe the instant of the listing. Read only after
+    * it, they can belong to a later phase: a rewrite that flips, retires
+    * and drops p2 while the directory is walked leaves a listing with old
+    * and new files and no marker to filter it. So the markers are read
+    * before and after the listing, and the listing is taken again while
+    * the two reads differ. */
+  def listVisible(dir: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
+    val tableDir = new Path(dir)
+    visible(GraftFs.get(tableDir, conf), tableDir)(GraftUtil.listDataFiles(dir, conf))
+  }
+
+  /** [[listVisible]] over any `list` of the table's data files. */
+  private[spark] def visible(fs: FileSystem, tableDir: Path)(
+      list: => Seq[FileStatus]): Seq[FileStatus] = {
+    @annotation.tailrec
+    def attempt(before: Markers, listings: Int): Seq[FileStatus] = {
+      val listed = list
+      val after = markers(fs, tableDir)
+      if (after == before) adjust(fs, tableDir, listed, after)
+      else if (listings == MaxListings)
+        throw new java.io.IOException(s"graft: the rewrite markers of $tableDir " +
+          s"changed during each of $MaxListings listings")
+      else attempt(after, listings + 1)
+    }
+    attempt(markers(fs, tableDir), 1)
+  }
+
+  // a rewrite moves its markers through four states, two of them back to
+  // back, so a listing that overlaps one rewrite settles by the third try
+  private val MaxListings = 8
+
+  /** p1's and p2's lines, None where absent. */
+  private type Markers = (Option[Seq[String]], Option[Seq[String]])
+
+  private def markers(fs: FileSystem, tableDir: Path): Markers =
+    (readLines(fs, new Path(tableDir, P1)), readLines(fs, new Path(tableDir, P2)))
+
+  private def adjust(fs: FileSystem, tableDir: Path, listed: Seq[FileStatus],
+      marks: Markers): Seq[FileStatus] =
+    marks match {
+      case (Some(Seq(tag)), _) =>
         val hidden = GraftManifest.list(fs, tableDir)
           .filter(_.endsWith("-" + tag))
           .flatMap(m => GraftManifest.read(fs, tableDir, m).map(_._1)).toSet
         if (hidden.isEmpty) listed
         else listed.filterNot(f => hidden.contains(relOf(fs, tableDir, f.getPath)))
-      case Some(_) => listed // malformed p1: fail open to the raw view
-      case None =>
-        readLines(fs, new Path(tableDir, P2)) match {
-          case Some(retire) if retire.nonEmpty =>
-            val r = retire.toSet
-            listed.filterNot(f => r.contains(relOf(fs, tableDir, f.getPath)))
-          case _ => listed
-        }
+      case (Some(_), _) => listed // malformed p1: fail open to the raw view
+      case (None, Some(retire)) if retire.nonEmpty =>
+        val r = retire.toSet
+        listed.filterNot(f => r.contains(relOf(fs, tableDir, f.getPath)))
+      case _ => listed
     }
-  }
-
-  /** Convenience for the read paths: probe-and-adjust from a table dir
-    * string. */
-  def adjust(dir: String, conf: org.apache.hadoop.conf.Configuration,
-      listed: Seq[FileStatus]): Seq[FileStatus] = {
-    if (listed.isEmpty) return listed
-    val tableDir = new Path(dir)
-    adjust(tableDir.getFileSystem(conf), tableDir, listed)
-  }
 
   /** Crash heal, under the maintenance lock (the running rewrite also
     * holds it, so observed markers are always a dead op's): roll back an

@@ -124,7 +124,7 @@ final class GraftMicroBatchStream(path: String, conf: SerializableHadoopConf,
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
 
   private val tableDir = new org.apache.hadoop.fs.Path(path)
-  private def fs = tableDir.getFileSystem(conf.value)
+  private def fs = GraftFs.get(tableDir, conf.value)
 
   /** Checkpoints written in one mode keep that mode across restarts by
     * default: the restored offset's marker (seen via deserializeOffset /

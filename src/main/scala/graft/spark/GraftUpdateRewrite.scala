@@ -397,7 +397,7 @@ final case class GraftMergeCommand(
     // would silently skip the already-stamped files while reporting stats
     val conf = sparkSession.sessionState.newHadoopConf()
     val tableDir = new org.apache.hadoop.fs.Path(path)
-    val fs = tableDir.getFileSystem(conf)
+    val fs = GraftFs.get(tableDir, conf)
     def render(cs: Seq[GraftMaintenance.MergeClause]): String = cs.map(c =>
       c.condition.map(_.toString).getOrElse("-") + "?" +
         c.assigns.map(_.toSeq.map { case (k, e) => s"$k:=$e" }.sorted.mkString(";"))
@@ -469,7 +469,7 @@ final case class GraftUpdateCommand(
       // under it) — re-running `SET v = v + 1` applies it again, unlike the
       // library API's converge-on-re-run contract (see GraftOpMarker)
       val tableDir = new org.apache.hadoop.fs.Path(path)
-      val fs = tableDir.getFileSystem(conf)
+      val fs = GraftFs.get(tableDir, conf)
       val stmt = GraftOpMarker.stmtHash(
         cond.map(_.toString).getOrElse("-") + "|" +
           assigns.map { case (c, e) => s"$c:=$e" }.sorted.mkString(";"))

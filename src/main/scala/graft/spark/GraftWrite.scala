@@ -92,7 +92,7 @@ final class GraftWriteBuilder(info: LogicalWriteInfo, path: String,
     val hadoop = SparkSession.active.sessionState.newHadoopConf()
     lazy val sidecarSpecs: Seq[PartTransform] = {
       val dir = new org.apache.hadoop.fs.Path(path)
-      GraftCatalog.declaredPartSpecsOf(dir.getFileSystem(hadoop), dir)
+      GraftCatalog.declaredPartSpecsOf(GraftFs.get(dir, hadoop), dir)
         .map(GraftPartTransform.parse)
     }
     // PATH writes inherit the declared per-page stats intent from the
@@ -100,7 +100,7 @@ final class GraftWriteBuilder(info: LogicalWriteInfo, path: String,
     // into its own dir must not strip the blooms the table declared)
     lazy val sidecarWriteProps: (Seq[String], Seq[String]) = {
       val dir = new org.apache.hadoop.fs.Path(path)
-      GraftCatalog.declaredWritePropsOf(dir.getFileSystem(hadoop), dir)
+      GraftCatalog.declaredWritePropsOf(GraftFs.get(dir, hadoop), dir)
     }
     def canon(entries: Seq[String]): Seq[String] =
       if (entries.isEmpty) entries
@@ -204,7 +204,7 @@ final class GraftWriteBuilder(info: LogicalWriteInfo, path: String,
     if (tablePartitionBy.isEmpty && opts.partitionBy.exists(s =>
         !GraftPartTransform.parse(s).isIdentity)) {
       val dir = new org.apache.hadoop.fs.Path(path)
-      GraftWriteBuilder.publishPathSidecar(dir.getFileSystem(hadoop), dir,
+      GraftWriteBuilder.publishPathSidecar(GraftFs.get(dir, hadoop), dir,
         info.schema(), opts.partitionBy)
     }
     new GraftWriteImpl(info.schema(), path, opts, mode,
@@ -519,13 +519,13 @@ final class GraftStreamingWrite(schema: StructType, path: String, opts: GraftWri
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val dir = new Path(path)
-    dir.getFileSystem(conf.value).mkdirs(dir)
+    GraftFs.get(dir, conf.value).mkdirs(dir)
     new GraftStreamingWriterFactory(schema.json, path, opts, HadoopConfBroadcast(conf.value), qid)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val tableDir = new Path(path)
-    val fs = tableDir.getFileSystem(conf.value)
+    val fs = GraftFs.get(tableDir, conf.value)
     // same commit arbitration as the batch path: the epoch publish
     // (marker clear, renames, manifest) linearizes against concurrent
     // batch-append commits on this table (maintenance runs concurrently
@@ -595,7 +595,7 @@ final class GraftStreamingWrite(schema: StructType, path: String, opts: GraftWri
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = GraftFs.get(new Path(path), conf.value)
     messages.foreach {
       case GraftCommitMessage(files, _) =>
         files.foreach { case (tmp, _, _) => fs.delete(new Path(tmp), false) }
@@ -611,7 +611,7 @@ final class GraftBatchWrite(schema: StructType, path: String, opts: GraftWriteOp
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = GraftFs.get(dir, conf.value)
     fs.mkdirs(dir)
     // sweep staging leftovers of previously crashed jobs (their task aborts
     // never ran), including inside partition subdirs. AGE-GATED: another
@@ -659,7 +659,7 @@ final class GraftBatchWrite(schema: StructType, path: String, opts: GraftWriteOp
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val tableDir = new Path(path)
-    val fs = tableDir.getFileSystem(conf.value)
+    val fs = GraftFs.get(tableDir, conf.value)
     // COMMIT ARBITRATION: the whole publish sequence (marker decision,
     // renames, manifest, retire phase) runs under the COMMIT mutex —
     // separate from the maintenance lock, so an hour-long compaction
@@ -831,7 +831,7 @@ final class GraftBatchWrite(schema: StructType, path: String, opts: GraftWriteOp
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = GraftFs.get(new Path(path), conf.value)
     messages.foreach {
       case GraftCommitMessage(files, _) =>
         files.foreach { case (tmp, _, _) => fs.delete(new Path(tmp), false) }
@@ -916,7 +916,7 @@ final class GraftDataWriter(schemaJson: String, path: String, opts: GraftWriteOp
     }.toSet)
   }
   private val dir = new Path(path)
-  private val fs: FileSystem = dir.getFileSystem(conf.value.value)
+  private val fs: FileSystem = GraftFs.get(dir, conf.value.value)
   // batch writes use a random token (concurrent jobs never collide);
   // streaming passes a deterministic (queryId, epoch) token so epoch
   // replays re-stage the SAME final names (idempotent epoch commit)

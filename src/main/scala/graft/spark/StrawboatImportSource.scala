@@ -56,7 +56,7 @@ class StrawboatImportSource extends TableProvider with DataSourceRegister {
     require(files.nonEmpty, s"strawboat import: no ARROW2-magic files under $path")
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(files.head._1)
-    val in = new HadoopSeekableInput(p.getFileSystem(conf), p, files.head._2)
+    val in = new HadoopSeekableInput(GraftFs.get(p, conf), p, files.head._2)
     try StrawboatImport.sparkSchema(StrawboatImport.readFooter(in))
     finally in.close()
   }
@@ -132,7 +132,7 @@ final class StrawboatReaderFactory(
     val projected = GraftFooterCache.schemaOf(projectedJson)
     val path = new org.apache.hadoop.fs.Path(p.filePath)
     val in = new HadoopSeekableInput(
-      path.getFileSystem(conf.value.value), path, p.fileLen)
+      GraftFs.get(path, conf.value.value), path, p.fileLen)
     InputFileHolder.set(p.filePath, 0L, p.fileLen)
     new PartitionReader[InternalRow] {
       private val converter =

@@ -399,13 +399,6 @@ object TextOps extends Serializable {
 
   def qualityStatsCol(text: Column): Column =
     GraftCatalystBridge.column(QualityStats(GraftCatalystBridge.expression(text)))
-
-  private[spark] def checkStringArray(name: String, dt: DataType): TypeCheckResult =
-    dt match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$name requires ARRAY<STRING> input, got ${other.sql}")
-    }
 }
 
 /** See [[TextOps.bloomPos3]]. */

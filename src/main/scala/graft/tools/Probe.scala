@@ -3,7 +3,7 @@ package graft.tools
 import graft.{Bench, BenchMaintenance, SparkEntry, Tables}
 import graft.format.{ByteBuf, ColumnTree, GraftFileWriter, GraftStat, IntVec, LeafCol,
   LeafReader, ListCol, MapCol, PageSerializer, StructCol, Vec, WriteOptions}
-import graft.spark.{GraftIntrospect, HadoopSeekableInput}
+import graft.spark.{GraftFs, GraftIntrospect, HadoopSeekableInput}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
@@ -222,7 +222,7 @@ object Probe {
   private def readLeaves(fl: GraftIntrospect.FileLayout,
       conf: org.apache.hadoop.conf.Configuration): Array[Vec] = {
     val path = fl.status.getPath
-    val in = new HadoopSeekableInput(path.getFileSystem(conf), path, fl.status.getLen)
+    val in = new HadoopSeekableInput(GraftFs.get(path, conf), path, fl.status.getLen)
     try fl.leaves.indices.map { i =>
       new LeafReader(in, fl.footer.leaves(i), fl.leaves(i).lane, fl.leaves(i).nullable).readAll()
     }.toArray

@@ -316,6 +316,43 @@ class FormatRoundTripSpec extends AnyFunSuite {
     }
   }
 
+  test("corrupted freq and bitpack page fields fail with IOException") {
+    val n = 100
+    val freq = IntVec(n, null, Array.tabulate(n)(i => if (i == 3) 1000 else if (i == 50) 2000 else 7))
+    val packed = IntVec(n, null, Array.tabulate(n)(i => i * 3 % 50))
+    val sorted = IntVec(n, null, Array.tabulate(n)(i => i * 3))
+    def u16At(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | (b(p + 1) & 0xff) << 8
+    // Freq:         i32 top @17 | u32 exCount @21 | u32 rbLen @25 | roaring @29
+    //               (cookie, size, key, card - 1, offset, then the u16
+    //               positions @45 and @47) | exceptions frame @49
+    // Bitpack:      i64 base @17 | u8 bits @25 | 75 packed bytes @26
+    // DeltaBitpack: i64 first @17 | u8 bits @25 | 25 packed bytes @26
+    val layouts: Seq[(Vec, Byte, Array[Byte] => Unit)] = Seq(
+      (freq, Codec.Freq, b => assert(intAt(b, 17) == 7 && intAt(b, 21) == 2 && intAt(b, 25) == 20 &&
+        u16At(b, 45) == 3 && u16At(b, 47) == 50)),
+      (packed, Codec.Bitpack, b => assert(b(25) == 6)),
+      (sorted, Codec.DeltaBitpack, b => assert(b(25) == 2)))
+    for ((vec, codec, check) <- layouts) assertVecEq(vec, decodePatched(Lane.I32, vec, codec)(check))
+    val cases: Seq[(String, Vec, Byte, Array[Byte] => Unit)] = Seq(
+      ("freq position past the page", freq, Codec.Freq, b => b(47) = n.toByte),
+      ("freq exception count past the page", freq, Codec.Freq, b => putInt(b, 21, n + 1)),
+      ("negative freq exception count", freq, Codec.Freq, b => putInt(b, 21, -1)),
+      ("freq exception count below the bitmap's", freq, Codec.Freq, b => putInt(b, 21, 1)),
+      ("freq bitmap length 0x7fffffff", freq, Codec.Freq, b => putInt(b, 25, 0x7fffffff)),
+      ("negative freq bitmap length", freq, Codec.Freq, b => putInt(b, 25, -1)),
+      ("bitpack width 65", packed, Codec.Bitpack, b => b(25) = 65),
+      ("bitpack width 255", packed, Codec.Bitpack, b => b(25) = -1),
+      ("bitpack payload past the frame", packed, Codec.Bitpack, b => b(25) = 64),
+      ("deltabitpack width 65", sorted, Codec.DeltaBitpack, b => b(25) = 65),
+      ("deltabitpack payload past the frame", sorted, Codec.DeltaBitpack, b => b(25) = 40))
+    for ((label, vec, codec, patch) <- cases) {
+      // intercept fails on any other exception (AIOOBE, NegativeArraySize, OOM)
+      // and on a decode that returns garbage without one
+      val e = intercept[java.io.IOException](decodePatched(Lane.I32, vec, codec)(patch))
+      assert(e.getMessage.startsWith("graft: corrupt page: "), s"$label: ${e.getMessage}")
+    }
+  }
+
   test("page stats are persisted (zone maps)") {
     val n = 5000
     val v = IntVec(n, null, Array.tabulate(n)(i => i))

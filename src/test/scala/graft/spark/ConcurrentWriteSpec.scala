@@ -482,6 +482,39 @@ class ConcurrentWriteSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(dir).count() == 1000)
   }
 
+  test("a listing that races a compaction's flip is taken again") {
+    val dir = s"$base/listrace"
+    spark.range(0, 1000).selectExpr("id AS k").repartition(4)
+      .write.format("graft").mode("append").save(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val tableDir = new org.apache.hadoop.fs.Path(dir)
+    val old = GraftUtil.listDataFiles(dir, conf).map(_.getPath)
+    // output committed under p1 + p2, the old files still on disk
+    intercept[RuntimeException] {
+      GraftMaintenance.compactImpl(spark, dir, 1, Map.empty,
+        () => throw new RuntimeException("stop before the flip"))
+    }
+    // the first listing sees old + new; before the reader gets to the
+    // markers, the rewrite flips, retires the old files and drops p2
+    var listings = 0
+    val visible = GraftRewriteGuard.visible(fs, tableDir) {
+      val listed = GraftUtil.listDataFiles(dir, conf)
+      listings += 1
+      if (listings == 1) {
+        assert(listed.size == 5)
+        GraftRewriteGuard.flip(fs, tableDir)
+        GraftUtil.deleteAll(fs, old)
+        GraftRewriteGuard.clear(fs, tableDir)
+      }
+      listed
+    }
+    assert(listings == 2)
+    assert(visible.map(_.getPath.getName) ==
+      GraftUtil.listDataFiles(dir, conf).map(_.getPath.getName))
+    assert(visible.size == 1 && !old.contains(visible.head.getPath),
+      s"the reader must see the compacted file alone: $visible")
+  }
+
   test("an uncommitted rewrite's markers roll back; a crashed retire completes from p2") {
     import org.apache.spark.sql.functions.col
     val dir = s"$base/compactroll"
