@@ -224,15 +224,28 @@ final class LeafReader(in: SeekableInput, meta: ColumnMeta, lane: Int, nullable:
   }
 
   /** Decode all pages and concatenate into one Vec (batch-read path,
-    * reference analogue `/root/reference/src/read/batch_read.rs`).
+    * reference analogue `/root/reference/src/read/batch_read.rs`). The
+    * leaf's bytes are fetched on the calling thread; a leaf of several
+    * pages is then decoded one job per page on [[PageJobs]] and assembled
+    * in parallel by [[VecConcat.concatParallel]]. The result equals
+    * `VecConcat.concat` over `readPage` of every page, and the first page
+    * failure is rethrown as the same exception.
     */
   def readAll(): Vec = {
-    val pages = (0 until numPages).map(readPage)
-    VecConcat.concat(lane, pages)
+    if (needed != null)
+      throw new IllegalStateException("graft: readAll on a page-masked leaf reader; read its pages with readPage")
+    if (numPages == 1) return readPage(0)
+    prefetch()
+    val pages = new Array[Vec](numPages)
+    PageJobs.run(numPages)(p => pages(p) = readPage(p))
+    VecConcat.concatParallel(lane, pages)
   }
 }
 
 object VecConcat {
+  /** The pages' rows in order, as one Vec: a null mask only when some page
+    * has one, binary offsets rebased onto the concatenated bytes.
+    */
   def concat(lane: Int, pages: Seq[Vec]): Vec = {
     val total = pages.map(_.n).sum
     val anyNulls = pages.exists(_.nulls != null)
@@ -297,5 +310,50 @@ object VecConcat {
         }
         DecimalVec(total, nulls, hi, lo)
     }
+  }
+
+  /** [[concat]] with one copy job per page on [[PageJobs]]: each page's
+    * values, null flags and, for binary pages, rebased offsets and bytes go
+    * to its row offset in one preallocated output; binary byte offsets come
+    * from one prefix sum over the pages' byte lengths.
+    */
+  private[format] def concatParallel(lane: Int, pages: Array[Vec]): Vec = {
+    val np = pages.length
+    val rowAt = pages.scanLeft(0)(_ + _.n)
+    val total = rowAt(np)
+    val nulls = if (pages.exists(_.nulls != null)) new Array[Boolean](total) else null
+    val byteAt =
+      if (lane != Lane.Bin) null
+      else pages.scanLeft(0) { (b, pg) => val bv = pg.asInstanceOf[BinaryVec]; b + bv.offsets(bv.n) }
+    val out: Vec = lane match {
+      case Lane.Bool => BoolVec(total, nulls, new Array[Boolean](total))
+      case Lane.I8 | Lane.I16 | Lane.I32 => IntVec(total, nulls, new Array[Int](total))
+      case Lane.I64 => LongVec(total, nulls, new Array[Long](total))
+      case Lane.F32 => FloatVec(total, nulls, new Array[Float](total))
+      case Lane.F64 => DoubleVec(total, nulls, new Array[Double](total))
+      case Lane.Bin => BinaryVec(total, nulls, new Array[Int](total + 1), new Array[Byte](byteAt(np)))
+      case Lane.I128 => DecimalVec(total, nulls, new Array[Long](total), new Array[Long](total))
+    }
+    PageJobs.run(np) { p =>
+      val pg = pages(p)
+      val at = rowAt(p)
+      if (pg.nulls != null) System.arraycopy(pg.nulls, 0, nulls, at, pg.n)
+      (pg, out) match {
+        case (a: BoolVec, b: BoolVec) => System.arraycopy(a.values, 0, b.values, at, a.n)
+        case (a: IntVec, b: IntVec) => System.arraycopy(a.values, 0, b.values, at, a.n)
+        case (a: LongVec, b: LongVec) => System.arraycopy(a.values, 0, b.values, at, a.n)
+        case (a: FloatVec, b: FloatVec) => System.arraycopy(a.values, 0, b.values, at, a.n)
+        case (a: DoubleVec, b: DoubleVec) => System.arraycopy(a.values, 0, b.values, at, a.n)
+        case (a: BinaryVec, b: BinaryVec) =>
+          val base = byteAt(p)
+          var i = 0
+          while (i < a.n) { b.offsets(at + i + 1) = base + a.offsets(i + 1); i += 1 }
+          System.arraycopy(a.bytes, 0, b.bytes, base, a.offsets(a.n))
+        case (a: DecimalVec, b: DecimalVec) =>
+          System.arraycopy(a.hi, 0, b.hi, at, a.n)
+          System.arraycopy(a.lo, 0, b.lo, at, a.n)
+      }
+    }
+    out
   }
 }

@@ -23,7 +23,7 @@ import scala.collection.mutable.ArrayBuffer
   * }}}
   * Like the reference (writer.rs:108-112), exactly one chunk per file —
   * callers roll files. Within the chunk, pages are encoded in parallel on
-  * the shared [[GraftFileWriter.pool]] and written in the order above.
+  * the shared [[PageJobs.pool]] and written in the order above.
   */
 final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     opts: WriteOptions = WriteOptions()) {
@@ -54,7 +54,7 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
   }
 
   /** Encode and write the file's one chunk. Pages are encoded concurrently
-    * (see [[ChunkEncoder]]) and written in depth-first leaf order, each
+    * (see [[encodeAll]]) and written in depth-first leaf order, each
     * leaf's pages in row order, so the bytes do not depend on which thread
     * encoded what. An exception from any page or synopsis propagates
     * unchanged.
@@ -64,7 +64,7 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     val leaves = ArrayBuffer[LeafPlan]()
     val bounds = pageBounds(numRows, opts.pageSize)
     cols.foreach(planTree(_, bounds, leaves))
-    new ChunkEncoder(leaves.toArray).run(pageBuf, scratch)
+    encodeAll(leaves.toArray)
     leaves.foreach { lp =>
       val offset = pos
       lp.bytes.foreach { b => out.write(b); pos += b.length }
@@ -140,65 +140,27 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
     cb
   }
 
-  /** The chunk's encode jobs: one per (leaf, page) and one per synopsis
-    * leaf, claimed in that order (synopses first: each is one serial pass
-    * over its leaf) by the calling thread and by helpers from
-    * [[GraftFileWriter.pool]]. Helpers are submitted, never waited for:
-    * one that starts after the jobs ran out returns at once, so when the
-    * pool is busy the caller encodes every page itself, at serial speed.
-    * Only jobs already claimed by a running thread are waited for.
+  /** The chunk's encode jobs, one per synopsis leaf and then one per
+    * (leaf, page), run on [[PageJobs]] in that claim order (synopses first:
+    * each is one serial pass over its leaf). Each thread encodes into its
+    * own pair of buffers.
     */
-  private final class ChunkEncoder(leaves: Array[LeafPlan]) {
-    private val (jobLeaf, jobPage) = {
-      val kmvJobs = leaves.indices.filter(leaves(_).withKmv).map(i => (i, -1))
-      val pageJobs = leaves.indices.flatMap(i => leaves(i).pages.indices.map(p => (i, p)))
-      (kmvJobs ++ pageJobs).toArray.unzip
-    }
-    private val next = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val unfinished = new java.util.concurrent.atomic.AtomicInteger(jobLeaf.length)
-    private val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-
-    def run(out: ByteBuf, scratch: ByteBuf): Unit = {
-      val helpers = math.min(GraftFileWriter.Threads - 1, jobLeaf.length - 1)
-      var h = 0
-      while (h < helpers) {
-        GraftFileWriter.pool.execute(() => drain(null, null))
-        h += 1
-      }
-      drain(out, scratch)
-      try unfinished.synchronized { while (unfinished.get > 0) unfinished.wait() }
-      catch { case e: InterruptedException => failure.compareAndSet(null, e); throw e }
-      val f = failure.get
-      if (f != null) throw f
-    }
-
-    /** Claim and run jobs until none are left; after a failure the rest
-      * are claimed and skipped. A helper passes null buffers and allocates
-      * its own once it has claimed a job.
-      */
-    private def drain(out0: ByteBuf, scratch0: ByteBuf): Unit = {
-      var out = out0
-      var scratch = scratch0
-      var j = next.getAndIncrement()
-      while (j < jobLeaf.length) {
-        if (out == null) { out = new ByteBuf(1 << 16); scratch = new ByteBuf(1 << 16) }
-        if (failure.get == null) {
-          try encode(leaves(jobLeaf(j)), jobPage(j), out, scratch)
-          catch { case t: Throwable => failure.compareAndSet(null, t) }
+  private def encodeAll(leaves: Array[LeafPlan]): Unit = {
+    val kmvJobs = leaves.indices.filter(leaves(_).withKmv).map(i => (i, -1))
+    val pageJobs = leaves.indices.flatMap(i => leaves(i).pages.indices.map(p => (i, p)))
+    val (jobLeaf, jobPage) = (kmvJobs ++ pageJobs).toArray.unzip
+    PageJobs.run(jobLeaf.length, (pageBuf, scratch), () => (new ByteBuf(1 << 16), new ByteBuf(1 << 16))) {
+      case (j, (out, tmp)) =>
+        val lp = leaves(jobLeaf(j))
+        val page = jobPage(j)
+        if (page < 0) lp.kmv = GraftFileWriter.buildKmv(lp.lane, lp.vec, lp.bounds.last, opts.ndvK)
+        else {
+          out.reset()
+          lp.pages(page) = PageSerializer.writePage(lp.lane, lp.vec, lp.bounds(page),
+            lp.bounds(page + 1), lp.nullable, opts, out, tmp, lp.withBloom)
+          lp.bytes(page) = out.toArray
         }
-        if (unfinished.decrementAndGet() == 0) unfinished.synchronized(unfinished.notifyAll())
-        j = next.getAndIncrement()
-      }
     }
-
-    private def encode(lp: LeafPlan, page: Int, out: ByteBuf, scratch: ByteBuf): Unit =
-      if (page < 0) lp.kmv = GraftFileWriter.buildKmv(lp.lane, lp.vec, lp.bounds.last, opts.ndvK)
-      else {
-        out.reset()
-        lp.pages(page) = PageSerializer.writePage(lp.lane, lp.vec, lp.bounds(page),
-          lp.bounds(page + 1), lp.nullable, opts, out, scratch, lp.withBloom)
-        lp.bytes(page) = out.toArray
-      }
   }
 
   def finish(): Unit = {
@@ -260,18 +222,6 @@ final class GraftFileWriter(out: java.io.OutputStream, schemaJson: String,
 }
 
 object GraftFileWriter {
-  private[format] val Threads: Int = Runtime.getRuntime.availableProcessors()
-
-  /** The JVM's one page-encode pool, shared by every writer: daemon
-    * threads, at most one per core, started on first use.
-    */
-  private[format] lazy val pool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(Threads, (r: Runnable) => {
-      val t = new Thread(r, "graft-encode")
-      t.setDaemon(true)
-      t
-    })
-
   /** Per-leaf KMV ndv synopsis: the k smallest distinct portable hashes of
     * the non-null values (KmvUtil hashing — reproducible outside the JVM).
     * Only integer and binary lanes carry one; the Spark layer validates the

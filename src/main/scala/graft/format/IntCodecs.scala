@@ -479,13 +479,17 @@ object IntCodecs {
 
   private[format] def corrupt(msg: String) = new java.io.IOException(s"graft: corrupt page: $msg")
 
+  /** A frame of `clen` bytes must fit the bytes after the cursor. */
+  private[format] def checkFrame(cur: ByteCursor, clen: Int): Unit =
+    if (clen < 0 || clen > cur.arr.length - cur.pos)
+      throw corrupt(s"frame length $clen exceeds the ${cur.arr.length - cur.pos} bytes left")
+
   /** Decode a codec-framed integer body (cursor at frame start). */
   def readFrame(cur: ByteCursor, n: Int, width: Int): Array[Long] = {
     val codec = cur.getByte().toByte
     val clen = cur.getIntLE()
     val rawLen = cur.getIntLE()
-    if (clen < 0 || clen > cur.arr.length - cur.pos)
-      throw corrupt(s"frame length $clen exceeds the ${cur.arr.length - cur.pos} bytes left")
+    checkFrame(cur, clen)
     if (Codec.isCommon(codec)) {
       if (rawLen.toLong != n.toLong * width)
         throw corrupt(s"plain frame of $rawLen bytes for $n values of width $width")
@@ -510,8 +514,7 @@ object IntCodecs {
     */
   def readSpecial(codec: Byte, cur: ByteCursor, n: Int, width: Int, clen: Int,
       out0: Array[Long] = null): Array[Long] = {
-    if (clen < 0 || clen > cur.arr.length - cur.pos)
-      throw corrupt(s"frame length $clen exceeds the ${cur.arr.length - cur.pos} bytes left")
+    checkFrame(cur, clen)
     val end = cur.pos + clen
     val out = if (out0 != null && out0.length >= n) out0 else new Array[Long](n)
     def getValue(): Long = width match {
@@ -597,7 +600,7 @@ object IntCodecs {
     out
   }
 
-  private def need(cur: ByteCursor, end: Int, bytes: Int, what: String): Unit =
+  private[format] def need(cur: ByteCursor, end: Int, bytes: Int, what: String): Unit =
     if (end - cur.pos < bytes)
       throw corrupt(s"$what of $bytes bytes exceeds the ${end - cur.pos} left in the frame")
 

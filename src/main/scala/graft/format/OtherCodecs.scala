@@ -107,12 +107,16 @@ object FloatCodecs {
   }
 
   def read(cur: ByteCursor, n: Int, clen: Int, out0: Array[Long] = null): Array[Long] = {
+    IntCodecs.checkFrame(cur, clen)
     val end = cur.pos + clen
     // ring references only look backward at entries written THIS page, so a
     // reused buffer cannot leak stale values
     val out = if (out0 != null && out0.length >= n) out0 else new Array[Long](n)
     var i = 0
     while (i < n) {
+      // a value is at most MaxValueBytes long: only those near the frame's
+      // end have their size checked before any of their bytes are read
+      if (end - cur.pos < MaxValueBytes) checkValue(cur, end, i)
       val h = cur.getByte()
       val ext = (h & 0x80) != 0
       val tz = (h >>> 4) & 0x7
@@ -128,6 +132,17 @@ object FloatCodecs {
     }
     cur.pos = end
     out
+  }
+
+  /** header byte + back-offset byte + the 15 value bytes a 4-bit size can claim */
+  private val MaxValueBytes = 17
+
+  private def checkValue(cur: ByteCursor, end: Int, i: Int): Unit = {
+    if (cur.pos >= end) throw IntCodecs.corrupt(s"patas value $i starts at the end of its frame")
+    val h = cur.arr(cur.pos) & 0xff
+    val size = 1 + (if ((h & 0x80) != 0) 1 else 0) + (h & 0xf)
+    if (size > end - cur.pos)
+      throw IntCodecs.corrupt(s"patas value $i of $size bytes, ${end - cur.pos} left in the frame")
   }
 }
 
@@ -373,9 +388,7 @@ object BinaryCodecs {
     * and every index must name an entry.
     */
   def readDict(cur: ByteCursor, n: Int, clen: Int): Dict = {
-    val left = cur.arr.length - cur.pos
-    if (clen < 0 || clen > left)
-      throw IntCodecs.corrupt(s"frame length $clen exceeds the $left bytes left")
+    IntCodecs.checkFrame(cur, clen)
     val dictN = cur.getIntLE()
     if (dictN < 0 || (dictN + 1L) * 4 > clen - 4L)
       throw IntCodecs.corrupt(s"binary dict size $dictN does not fit $clen bytes")
@@ -404,10 +417,16 @@ object BinaryCodecs {
   }
 
   def read(codec: Byte, cur: ByteCursor, n: Int, nulls: Array[Boolean], clen: Int): BinaryVec = {
+    IntCodecs.checkFrame(cur, clen)
     val end = cur.pos + clen
     val res = codec match {
       case Codec.OneValue =>
+        IntCodecs.need(cur, end, 4, "binary onevalue length")
         val len = cur.getIntLE()
+        if (len < 0 || len > end - cur.pos)
+          throw IntCodecs.corrupt(s"binary onevalue of $len bytes, ${end - cur.pos} left in the frame")
+        if (len.toLong * n > Int.MaxValue)
+          throw IntCodecs.corrupt(s"binary onevalue of $len bytes x $n values does not fit an array")
         val value = new Array[Byte](len)
         System.arraycopy(cur.arr, cur.pos, value, 0, len)
         cur.skip(len)
@@ -435,19 +454,41 @@ object BinaryCodecs {
         }
         BinaryVec(n, nulls, offs, bytes)
       case Codec.Freq =>
+        IntCodecs.need(cur, end, 4, "binary freq top length")
         val topLen = cur.getIntLE()
+        if (topLen < 0 || topLen > end - cur.pos - 8L)
+          throw IntCodecs.corrupt(s"binary freq top value of $topLen bytes, ${end - cur.pos} left in the frame")
         val top = new Array[Byte](topLen)
         System.arraycopy(cur.arr, cur.pos, top, 0, topLen)
         cur.skip(topLen)
         val ex = cur.getIntLE()
         val rbLen = cur.getIntLE()
+        if (ex < 0 || ex > n) throw IntCodecs.corrupt(s"binary freq exception count $ex of $n values")
+        if (rbLen < 0 || rbLen > end - cur.pos)
+          throw IntCodecs.corrupt(s"binary freq bitmap of $rbLen bytes, ${end - cur.pos} left in the frame")
         val rb = new RoaringBitmap()
-        rb.deserialize(new java.io.DataInputStream(
+        try rb.deserialize(new java.io.DataInputStream(
           new java.io.ByteArrayInputStream(cur.arr, cur.pos, rbLen)))
+        catch { case e: Exception => throw IntCodecs.corrupt(s"binary freq bitmap: $e") }
+        if (rb.getLongCardinality != ex)
+          throw IntCodecs.corrupt(s"binary freq bitmap holds ${rb.getLongCardinality} positions for $ex exceptions")
+        if (ex > 0 && Integer.toUnsignedLong(rb.last()) >= n)
+          throw IntCodecs.corrupt(s"binary freq position ${Integer.toUnsignedLong(rb.last())} of $n values")
         cur.skip(rbLen)
+        if ((ex + 1L) * 4 > end - cur.pos)
+          throw IntCodecs.corrupt(s"binary freq offsets of $ex exceptions, ${end - cur.pos} bytes left in the frame")
+        val room = end - cur.pos - 4 * (ex + 1)
         val exOffs = new Array[Int](ex + 1)
         var i = 0
-        while (i <= ex) { exOffs(i) = cur.getIntLE(); i += 1 }
+        while (i <= ex) {
+          val o = cur.getIntLE()
+          if (o < (if (i == 0) 0 else exOffs(i - 1)) || o > room)
+            throw IntCodecs.corrupt(s"binary freq exception offset $o at entry $i (room $room)")
+          exOffs(i) = o
+          i += 1
+        }
+        if (topLen.toLong * (n - ex) + exOffs(ex) - exOffs(0) > Int.MaxValue)
+          throw IntCodecs.corrupt(s"binary freq values of $n rows do not fit an array")
         val exBytesStart = cur.pos
         val isEx = new Array[Boolean](n)
         val it = rb.getIntIterator
@@ -543,23 +584,30 @@ object BoolCodecs {
   }
 
   def read(codec: Byte, cur: ByteCursor, n: Int, nulls: Array[Boolean], clen: Int): BoolVec = {
+    IntCodecs.checkFrame(cur, clen)
     val end = cur.pos + clen
     val values = new Array[Boolean](n)
     codec match {
       case Codec.OneValue =>
+        IntCodecs.need(cur, end, 1, "boolean onevalue")
         val v = cur.getByte() != 0
         java.util.Arrays.fill(values, v)
       case Codec.Rle =>
+        IntCodecs.need(cur, end, 4, "boolean rle run count")
         val runs = cur.getIntLE()
+        if (runs < 0 || runs.toLong * 5 > end - cur.pos)
+          throw IntCodecs.corrupt(s"boolean rle run count $runs does not fit $clen bytes")
         var pos = 0
         var r = 0
         while (r < runs) {
           val cnt = cur.getIntLE()
+          if (cnt < 0 || cnt > n - pos) throw IntCodecs.corrupt(s"boolean rle run of $cnt at value $pos of $n")
           val v = cur.getByte() != 0
           java.util.Arrays.fill(values, pos, pos + cnt, v)
           pos += cnt
           r += 1
         }
+        if (pos != n) throw IntCodecs.corrupt(s"boolean rle runs cover $pos of $n values")
       case other => throw new java.io.IOException(s"unknown boolean codec $other")
     }
     cur.pos = end

@@ -1,8 +1,8 @@
 package graft.tools
 
 import graft.{Bench, BenchMaintenance, SparkEntry, Tables}
-import graft.format.{ByteBuf, ColumnTree, GraftFileWriter, GraftStat, IntVec, LeafCol,
-  LeafReader, ListCol, MapCol, PageSerializer, StructCol, Vec, WriteOptions}
+import graft.format.{ByteBuf, ColumnTree, GraftFileReader, GraftFileWriter, GraftStat, IntVec, LeafCol,
+  LeafReader, ListCol, MapCol, PageSerializer, SeekableInput, StructCol, Vec, WriteOptions}
 import graft.spark.{GraftFs, GraftIntrospect, HadoopSeekableInput}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.config.Configurator
@@ -186,9 +186,12 @@ object Probe {
 
   /** One live file: `writeMs` is the wall time to write the whole file again
     * through [[GraftFileWriter]] into memory (pages encoded in parallel,
-    * default WriteOptions at the file's page size), min of 3 runs.
+    * default WriteOptions at the file's page size), `readMs` the wall time
+    * to read it back from its bytes in memory (footer, then
+    * [[LeafReader.readAll]] of every leaf, pages decoded in parallel), each
+    * min of 3 runs.
     */
-  final case class FileStat(name: String, rows: Long, writeMs: Double)
+  final case class FileStat(name: String, rows: Long, writeMs: Double, readMs: Double)
 
   final case class TableStat(leaves: Seq[LeafStat], files: Seq[FileStat])
 
@@ -206,7 +209,7 @@ object Probe {
           pages.groupBy(p => GraftIntrospect.codecName(p.codec)).map { case (c, ps) => c -> ps.length },
           pages.map(_.rawLen.toLong).sum, fl.footer.leaves(i).totalBytes, encodeLeaf(fl.leaves(i), vecs(i)))
       }
-      (leaves, writeFile(fl, vecs))
+      (leaves, fileStat(fl, vecs, conf))
     }
     val leaves = perFile.flatMap(_._1)
     TableStat(leaves.map(_.name).distinct.map { name =>
@@ -248,11 +251,13 @@ object Probe {
     }
   }
 
-  /** Write the whole file again from its decoded leaves: the column trees
-    * are rebuilt from the schema in the footer, in the depth-first leaf
-    * layout of [[graft.spark.GraftSchema.leafSpecs]].
+  /** Write the whole file again from its decoded leaves, then read it back
+    * ([[readFile]]). For the write, the column trees are rebuilt from the
+    * schema in the footer, in the depth-first leaf layout of
+    * [[graft.spark.GraftSchema.leafSpecs]].
     */
-  private def writeFile(fl: GraftIntrospect.FileLayout, vecs: Array[Vec]): FileStat = {
+  private def fileStat(fl: GraftIntrospect.FileLayout, vecs: Array[Vec],
+      conf: org.apache.hadoop.conf.Configuration): FileStat = {
     val rows = if (fl.footer.leaves.isEmpty) 0L else fl.footer.leaves(0).totalValues
     var next = 0
     def take(): Vec = { next += 1; vecs(next - 1) }
@@ -283,7 +288,28 @@ object Probe {
       w.start()
       w.writeChunk(cols, rows.toInt)
       w.finish()
-    })
+    }, readFile(fl, conf))
+  }
+
+  /** Milliseconds to read the whole file back from its bytes in memory:
+    * the footer, then [[LeafReader.readAll]] of every leaf, min of 3 runs.
+    */
+  private def readFile(fl: GraftIntrospect.FileLayout, conf: org.apache.hadoop.conf.Configuration): Double = {
+    val path = fl.status.getPath
+    val in = new HadoopSeekableInput(GraftFs.get(path, conf), path, fl.status.getLen)
+    val bytes = try in.readRange(0, fl.status.getLen.toInt) finally in.close()
+    val mem = new SeekableInput {
+      def length: Long = bytes.length
+      def readFully(pos: Long, dst: Array[Byte], off: Int, len: Int): Unit =
+        System.arraycopy(bytes, pos.toInt, dst, off, len)
+      def close(): Unit = ()
+    }
+    minMs(3) {
+      val footer = GraftFileReader.readFooter(mem)
+      footer.leaves.indices.foreach { i =>
+        new LeafReader(mem, footer.leaves(i), fl.leaves(i).lane, fl.leaves(i).nullable).readAll()
+      }
+    }
   }
 
   def formatLeaf(l: LeafStat): String = {
@@ -293,7 +319,7 @@ object Probe {
   }
 
   def formatFile(f: FileStat): String =
-    f"file ${f.name} rows=${f.rows}%,d write_ms=${f.writeMs}%.2f"
+    f"file ${f.name} rows=${f.rows}%,d write_ms=${f.writeMs}%.2f read_ms=${f.readMs}%.2f"
 
   /** The bench's at-scale CDC section ([[BenchMaintenance.cdcAtScale]]):
     * merge, cdc apply and dv delete at `rows` rows, as one JSON string.

@@ -252,13 +252,17 @@ class FormatRoundTripSpec extends AnyFunSuite {
     * file bytes (the page's codec byte is at offset 8, its payload at 17)
     * and decodes the leaf.
     */
-  private def decodePatched(lane: Int, vec: Vec, codec: Byte)(patch: Array[Byte] => Unit): Vec = {
+  private def fileOf(lane: Int, vec: Vec, codec: Byte): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val w = new GraftFileWriter(bos, "{}", WriteOptions(forcedCodec = Some(codec), defaultCodec = Codec.None))
     w.start()
     w.writeChunk(Seq(LeafCol(lane, nullable = false, vec)), vec.n)
     w.finish()
-    val bytes = bos.toByteArray
+    bos.toByteArray
+  }
+
+  private def decodePatched(lane: Int, vec: Vec, codec: Byte)(patch: Array[Byte] => Unit): Vec = {
+    val bytes = fileOf(lane, vec, codec)
     assert(bytes(8) == codec)
     patch(bytes)
     val in = new SeekableInput {
@@ -349,6 +353,67 @@ class FormatRoundTripSpec extends AnyFunSuite {
       // intercept fails on any other exception (AIOOBE, NegativeArraySize, OOM)
       // and on a decode that returns garbage without one
       val e = intercept[java.io.IOException](decodePatched(Lane.I32, vec, codec)(patch))
+      assert(e.getMessage.startsWith("graft: corrupt page: "), s"$label: ${e.getMessage}")
+    }
+  }
+
+  test("corrupted patas, binary onevalue/freq and boolean rle fields fail with IOException") {
+    val n = 100
+    val doubles = DoubleVec(n, null, Array.tabulate(n)(i => i * 0.37))
+    val same = {
+      val b = new BinaryVecBuilder()
+      (0 until n).foreach(_ => b.append("same".getBytes("UTF-8")))
+      b.result()
+    }
+    val freq = {
+      val b = new BinaryVecBuilder()
+      (0 until n).foreach(i => b.append((if (i == 3) "x1" else if (i == 50) "yy2" else "top").getBytes("UTF-8")))
+      b.result()
+    }
+    val bools = BoolVec(n, null, Array.tabulate(n)(i => i / 10 % 2 == 0))
+    def u16At(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | (b(p + 1) & 0xff) << 8
+    // every page: u8 codec @8 | u32 frame length @9 | u32 raw length @13 | payload @17
+    // Patas:        one header byte per value from 17
+    // bin OneValue: u32 len @17 | value @21
+    // bin Freq:     u32 topLen @17 | "top" @21 | u32 exCount @24 | u32 rbLen @28 |
+    //               roaring @32 (u16 positions @48 and @50) | 3 x u32 offsets @52 | bytes @64
+    // bool Rle:     u32 runs @17 | (u32 count, u8 value) x 10 from 21
+    val layouts: Seq[(Int, Vec, Byte, Array[Byte] => Unit)] = Seq(
+      (Lane.F64, doubles, Codec.Patas, b => assert(b(17) == 0)),
+      (Lane.Bin, same, Codec.OneValue, b => assert(intAt(b, 9) == 8 && intAt(b, 17) == 4)),
+      (Lane.Bin, freq, Codec.Freq, b => assert(intAt(b, 17) == 3 && intAt(b, 24) == 2 && intAt(b, 28) == 20 &&
+        u16At(b, 48) == 3 && u16At(b, 50) == 50 && intAt(b, 56) == 2 && intAt(b, 60) == 5)),
+      (Lane.Bool, bools, Codec.Rle, b => assert(intAt(b, 17) == 10 && intAt(b, 21) == 10 && intAt(b, 26) == 10)))
+    for ((lane, vec, codec, check) <- layouts) assertVecEq(vec, decodePatched(lane, vec, codec)(check))
+    val patasLen = { val b = fileOf(Lane.F64, doubles, Codec.Patas); intAt(b, 9) }
+    val cases: Seq[(String, Int, Vec, Byte, Array[Byte] => Unit)] = Seq(
+      ("patas frame length past the file", Lane.F64, doubles, Codec.Patas, b => putInt(b, 9, 0x7fffffff)),
+      ("negative patas frame length", Lane.F64, doubles, Codec.Patas, b => putInt(b, 9, -1)),
+      ("patas values past the frame", Lane.F64, doubles, Codec.Patas, b => putInt(b, 9, patasLen / 2)),
+      ("patas value bytes past the frame", Lane.F64, doubles, Codec.Patas, b => putInt(b, 9, 1)),
+      ("binary onevalue length past the frame", Lane.Bin, same, Codec.OneValue, b => putInt(b, 17, 1000)),
+      ("negative binary onevalue length", Lane.Bin, same, Codec.OneValue, b => putInt(b, 17, -1)),
+      ("binary onevalue frame past the file", Lane.Bin, same, Codec.OneValue, b => putInt(b, 9, 0x7fffffff)),
+      ("binary freq top length past the frame", Lane.Bin, freq, Codec.Freq, b => putInt(b, 17, 1000)),
+      ("negative binary freq top length", Lane.Bin, freq, Codec.Freq, b => putInt(b, 17, -1)),
+      ("binary freq exception count past the page", Lane.Bin, freq, Codec.Freq, b => putInt(b, 24, n + 1)),
+      ("negative binary freq exception count", Lane.Bin, freq, Codec.Freq, b => putInt(b, 24, -1)),
+      ("binary freq exception count below the bitmap's", Lane.Bin, freq, Codec.Freq, b => putInt(b, 24, 1)),
+      ("binary freq bitmap length past the frame", Lane.Bin, freq, Codec.Freq, b => putInt(b, 28, 0x7fffffff)),
+      ("negative binary freq bitmap length", Lane.Bin, freq, Codec.Freq, b => putInt(b, 28, -1)),
+      ("binary freq position past the page", Lane.Bin, freq, Codec.Freq, b => b(50) = n.toByte),
+      ("binary freq exception offsets decreasing", Lane.Bin, freq, Codec.Freq, b => putInt(b, 56, 6)),
+      ("negative binary freq exception offset", Lane.Bin, freq, Codec.Freq, b => putInt(b, 52, -4)),
+      ("binary freq exception offset past the frame", Lane.Bin, freq, Codec.Freq, b => putInt(b, 60, 100000)),
+      ("boolean rle run count 0x7fffffff", Lane.Bool, bools, Codec.Rle, b => putInt(b, 17, 0x7fffffff)),
+      ("negative boolean rle run count", Lane.Bool, bools, Codec.Rle, b => putInt(b, 17, -1)),
+      ("negative boolean rle run length", Lane.Bool, bools, Codec.Rle, b => putInt(b, 21, -1)),
+      ("boolean rle runs past the page", Lane.Bool, bools, Codec.Rle, b => putInt(b, 21, 11)),
+      ("boolean rle runs short of the page", Lane.Bool, bools, Codec.Rle, b => putInt(b, 17, 9)))
+    for ((label, lane, vec, codec, patch) <- cases) {
+      // intercept fails on any other exception (AIOOBE, NegativeArraySize,
+      // IllegalArgument, OOM) and on a decode that returns without one
+      val e = intercept[java.io.IOException](decodePatched(lane, vec, codec)(patch))
       assert(e.getMessage.startsWith("graft: corrupt page: "), s"$label: ${e.getMessage}")
     }
   }

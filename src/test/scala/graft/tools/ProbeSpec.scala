@@ -40,7 +40,9 @@ class ProbeSpec extends AnyFunSuite {
     // one line per file: the whole file written again through GraftFileWriter
     assert(st.files.length == 1 && st.files.head.rows == 20000L, st.files)
     assert(st.files.head.writeMs > 0 && st.files.head.writeMs < 60000, st.files)
-    assert(Probe.formatFile(st.files.head).matches("file part-.*\\.graft rows=20,000 write_ms=[0-9]+\\.[0-9]{2}"),
+    assert(st.files.head.readMs > 0 && st.files.head.readMs < 60000, st.files)
+    assert(Probe.formatFile(st.files.head).matches(
+      "file part-.*\\.graft rows=20,000 write_ms=[0-9]+\\.[0-9]{2} read_ms=[0-9]+\\.[0-9]{2}"),
       Probe.formatFile(st.files.head))
     assert(!spark.sparkContext.isStopped)
   }
